@@ -71,7 +71,6 @@ class BuildConfig:
     hot_df_threshold: int = 50_000  # df above which a term is salted (A7)
     num_salts: int = 16            # salt buckets for hot terms (A7)
     store_positions: bool = False  # positional postings (phrase queries)
-    num_lineage_groups: int = 8    # per-partition lineage groups (A11)
 
     def to_json(self) -> str:
         d = asdict(self)

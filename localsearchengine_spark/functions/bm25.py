@@ -20,12 +20,6 @@ def tf_norm_np(tf: np.ndarray, dl: np.ndarray, avgdl: float, cfg: BM25Config) ->
     return tf / (tf + cfg.k1 * (1.0 - cfg.b + cfg.b * dl.astype(np.float64) / avgdl))
 
 
-def score_np(
-    tf: np.ndarray, dl: np.ndarray, df: int, n_docs: int, avgdl: float, cfg: BM25Config
-) -> np.ndarray:
-    return cfg.idf(df, n_docs) * (cfg.k1 + 1.0) * tf_norm_np(tf, dl, avgdl, cfg)
-
-
 def tf_norm_column(tf: Column, dl: Column, avgdl, k1: float, b: float) -> Column:
     """tf/(tf + k1*(1-b+b*dl/avgdl)) as a Catalyst expression — the single
     definition shared by the exhaustive scorer, the distributed batch path,

@@ -181,71 +181,6 @@ def facet_counts(
     )
 
 
-def filter_blocks_tau(
-    rows: DataFrame, spark: SparkSession, tau: dict[str, float], inverse: bool = False
-) -> DataFrame:
-    """JVM-side block-max pruning (round-2 verdict #2): drop whole blocks by
-    their persisted ``tf_norm_max`` BEFORE their bytes ever reach a Python
-    worker — a Catalyst higher-order `filter` over the block array against a
-    broadcast per-term threshold.  ``inverse`` keeps the exact complement
-    (tf_norm_max ≤ τ), so a two-phase caller touches every block once.
-
-    This is the load-bearing design point: skipping inside the Python
-    kernel saves only the (cheap, vectorized) varint decode while still
-    paying Arrow→Python conversion per block; filtering in the JVM means a
-    skipped block is never serialized out of the scan at all."""
-    tau_df = spark.createDataFrame(
-        [(t, float(v)) for t, v in tau.items()], "term string, tau double"
-    )
-    if inverse:
-        pred = lambda b: b["tf_norm_max"] <= F.col("tau")  # noqa: E731
-    else:
-        pred = lambda b: b["tf_norm_max"] > F.col("tau")  # noqa: E731
-    return (
-        rows.join(F.broadcast(tau_df), "term")
-        .withColumn("blocks", F.filter("blocks", pred))
-        .drop("tau")
-        .filter(F.size("blocks") > 0)
-    )
-
-
-def filter_blocks_docs(
-    rows: DataFrame, spark: SparkSession, docs_by_term: dict
-) -> DataFrame:
-    """JVM-side survivor-range pruning: keep block i of a (term, salt) row
-    only if some target docID lands in its (prev_block_max, max_doc_id]
-    range (blocks are ascending and self-contained within a row).  The
-    per-term sorted docID list rides in as a broadcast array column; the
-    whole test stays in whole-stage codegen.  Rows for non-target docs that
-    share a kept block still decode — callers drop them with their
-    downstream (query_id, doc_id) semi-join."""
-    docs_df = spark.createDataFrame(
-        [(t, [int(x) for x in sorted(d)]) for t, d in docs_by_term.items()],
-        "term string, sdocs array<bigint>",
-    )
-    return (
-        rows.join(F.broadcast(docs_df), "term")
-        .withColumn(
-            "blocks",
-            F.filter(
-                "blocks",
-                lambda b, i: F.exists(
-                    F.col("sdocs"),
-                    lambda s: (s <= b["max_doc_id"])
-                    & (
-                        s
-                        > F.when(i == F.lit(0), F.lit(-1)).otherwise(
-                            F.element_at(F.col("blocks"), i)["max_doc_id"]
-                        )
-                    ),
-                ),
-            ),
-        )
-        .drop("sdocs")
-        .filter(F.size("blocks") > 0)
-    )
-
-
 # AND queries whose rarest term has df below the selectivity cutoff are
 # pre-filtered with that term's (small) posting list before the big shuffle —
 # the classic rare∧hot search shape then shuffles df_rare rows per query
@@ -259,108 +194,6 @@ _SELECTIVE_DF_CAP = 1_000_000
 
 def _selective_df(n_docs: int) -> int:
     return min(_SELECTIVE_DF_CAP, max(1, n_docs // 20))
-
-
-_EPS = 1e-10
-# survivor sets larger than this fall back to the unpruned path (the driver
-# collect + per-term broadcast must stay bounded; correctness never depends
-# on pruning)
-_SURVIVOR_CAP = 200_000
-
-
-def plan_or_pruning(index: Index, queries: list[dict], dic: dict):
-    """Driver-side MaxScore plan for a disjunctive (OR) batch — metadata
-    only, from the dictionary (df, max_tf_norm) plus one θ seed per query.
-
-    Per query q (Turtle & Flood 1995 MaxScore over the batch):
-      * θ_q  — exact k-th best score of q's highest-impact term alone
-        (wand._seed_theta: best-block-first with early stop, so only a few
-        blocks of one term are decoded driver-side; a lower bound of the
-        final k-th score since every idf here is positive);
-      * non-essential terms — the ub-ascending prefix with Σub ≤ θ_q − ε: a
-        doc found ONLY in them cannot reach q's top-k;
-      * per-term block threshold τ_t (for terms essential somewhere) — a
-        block of t is skippable when even its best tf_norm plus every other
-        term's upper bound cannot beat θ_q for ANY query t is essential in:
-        τ_t = min_q (θ_q − ε − Σ_{t'∈q,t'≠t} ub_{t'}) / scale_t.
-
-    Returns None when pruning is unsound (non-positive idf flips the bound
-    directions) or pointless (no queries).  Otherwise a dict with
-      decoded_terms — essential for ≥1 query: scanned in phase 1 with τ;
-      probe_terms   — non-essential everywhere: never scanned in phase 1;
-      tau           — per decoded term;
-      qmeta         — per query (qid, k, rem_slack, theta) where rem_slack
-        bounds every contribution phase 1 can miss for that query: Σ ub of
-        its probe terms + Σ scale·min(τ,max_tfn) of its decoded terms with
-        τ>0 (blocks below τ were skipped).
-    """
-    from localsearchengine_spark.operators.wand import _seed_theta
-
-    cfg = index.cfg
-    k1p1 = cfg.k1 + 1.0
-    scale = {t: cfg.idf(r["df"], index.n_docs) * k1p1 for t, r in dic.items()}
-    if not dic or min(scale.values()) <= 0.0:
-        return None
-    ub = {t: scale[t] * float(r["max_tf_norm"]) for t, r in dic.items()}
-
-    qinfos = []
-    for qd in queries:
-        present = sorted(t for t in set(qd["terms"]) if t in dic)
-        if not present:
-            continue
-        k = int(qd.get("k", 10))
-        t0 = max(present, key=lambda t: ub[t])
-        p0 = index.fetch_postings([t0]).get(t0)
-        theta = _seed_theta(p0, scale[t0], k) if p0 is not None else float("-inf")
-        noness: set[str] = set()
-        if theta > float("-inf"):
-            cum = 0.0
-            for t in sorted(present, key=lambda t: ub[t]):
-                if cum + ub[t] <= theta - _EPS:
-                    cum += ub[t]
-                    noness.add(t)
-                else:
-                    break
-        qinfos.append(
-            {
-                "qid": int(qd["query_id"]),
-                "k": k,
-                "present": present,
-                "ess": [t for t in present if t not in noness],
-                "theta": theta,
-            }
-        )
-    if not qinfos:
-        return None
-    decoded_terms = sorted({t for qi in qinfos for t in qi["ess"]})
-    probe_set = {t for qi in qinfos for t in qi["present"]} - set(decoded_terms)
-    tau: dict[str, float] = {}
-    for t in decoded_terms:
-        vals = []
-        for qi in qinfos:
-            if t in qi["ess"]:
-                if qi["theta"] == float("-inf"):
-                    vals = [float("-inf")]
-                    break
-                others = sum(ub[t2] for t2 in qi["present"] if t2 != t)
-                vals.append((qi["theta"] - _EPS - others) / scale[t])
-        tau[t] = min(vals)
-    qmeta = []
-    for qi in qinfos:
-        rem = sum(ub[t] for t in qi["present"] if t in probe_set)
-        slack = sum(
-            scale[t] * min(tau[t], float(dic[t]["max_tf_norm"]))
-            for t in qi["present"]
-            if t in tau and tau[t] > 0.0
-        )
-        qmeta.append((qi["qid"], qi["k"], float(rem + slack), float(qi["theta"])))
-    return {
-        "qinfos": qinfos,
-        "decoded_terms": decoded_terms,
-        "probe_terms": sorted(probe_set),
-        "tau": tau,
-        "qmeta": qmeta,
-    }
 
 
 def _contrib_col(index: Index):
@@ -433,139 +266,24 @@ def _rank_topk(scored: DataFrame) -> DataFrame:
     )
 
 
-def _fold_and_rank(contribs: DataFrame) -> DataFrame:
-    """Fixed-order summation (§2.4 determinism contract) + per-query top-k:
-    per (query, doc), contributions sort by term and fold left-to-right, so
-    the float64 score is bit-identical across parallelism levels and to the
-    driver-local paths."""
-    scored = contribs.groupBy("query_id", "doc_id").agg(
+def _fold(contribs: DataFrame, *extra_aggs) -> DataFrame:
+    """(query_id, doc_id, term, k, contrib) → one (query_id, doc_id, score,
+    *extra_aggs, k) row per (query, doc).
+
+    Fixed-order summation (the §2.4 determinism contract): per (query, doc),
+    contributions are sorted by term and folded left-to-right, so the
+    float64 score is bit-identical across parallelism levels and to the
+    driver-local paths.  The collected list is bounded by the query's term
+    count (small by definition), so per-group state stays tiny."""
+    return contribs.groupBy("query_id", "doc_id").agg(
         F.aggregate(
             F.array_sort(F.collect_list(F.struct("term", "contrib"))),
             F.lit(0.0),
             lambda acc, x: acc + x["contrib"],
         ).alias("score"),
+        *extra_aggs,
         F.first("k").alias("k"),
     )
-    return _rank_topk(scored)
-
-
-def _run_queries_or_pruned(
-    spark: SparkSession, index: Index, queries: list[dict], dic: dict, qdf: DataFrame
-) -> DataFrame | None:
-    """Distributed block-max/MaxScore OR evaluation — exact, two phases:
-
-    Phase 1 decodes only terms essential for ≥1 query, skipping blocks below
-    their τ threshold, and sums per-(query,doc) PARTIAL scores.  Survivors
-    are the docs whose optimistic bound (partial + everything phase 1 could
-    have missed) reaches a pessimistic k-th-score floor (max of the θ seed
-    and the k-th best partial); every true top-k doc provably survives, and
-    the survivor set is near-k-sized per query.  Phase 2 then computes EXACT
-    scores from scratch for survivors only: one decode over every query
-    term, restricted to blocks containing a survivor and filtered to
-    survivor docs — O(survivors) work, and trivially produces each
-    (term, doc) contribution exactly once for the fixed-order fold.
-    (Re-deriving survivor scores is cheaper than persisting phase 1's
-    contribution rows for reuse: the survivor set is tiny, and phase 1's
-    output can stay an un-materialized one-pass aggregation input.)
-
-    Falls back (returns None) on non-positive idf or oversized survivor
-    sets.  At 10^12-doc scale the θ seed's driver-side posting fetch should
-    switch to per-block range reads; noted in SURVEY §8 terms.
-    """
-    plan = plan_or_pruning(index, queries, dic)
-    if plan is None:
-        return None
-    tau = plan["tau"]
-
-    phase1 = _drop_deleted(
-        _decode_arrow(
-            filter_blocks_tau(
-                _postings_scan(spark, index.index_dir, plan["decoded_terms"]), spark, tau
-            )
-        ),
-        spark,
-        index.index_dir,
-    )
-    # (phase 2 needs no explicit tombstone filter: its contributions are
-    # semi-joined to phase-1 survivors, which already exclude deleted docs)
-    part = (
-        phase1.join(F.broadcast(qdf), "term")
-        .select("query_id", "doc_id", _contrib_col(index).alias("contrib"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("partial"))
-    )
-    qmeta = spark.createDataFrame(
-        plan["qmeta"], "query_id long, k long, rem_slack double, theta double"
-    )
-    part = part.join(F.broadcast(qmeta), "query_id")
-    # k-th best partial per query WITHOUT a full window: the naive
-    # row_number() over partitionBy(query_id) funnels every partial of a
-    # query onto one reducer (the exact straggler _local_topk exists for),
-    # so pre-reduce to k rows per (query, partition) first — the k-th best
-    # global partial is invariant under that cut.  Both consumers of `part`
-    # (this and the survivor filter below) read the same groupBy exchange,
-    # which AQE reuses rather than re-decoding phase 1.
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    kth = (
-        _local_topk(part.select("query_id", "doc_id", F.col("partial").alias("score"), "k"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == F.col("k"))
-        .select("query_id", F.col("score").alias("kth_partial"))
-    )
-    surv = (
-        part.join(F.broadcast(kth), "query_id", "left")
-        .withColumn(
-            "floor",
-            F.greatest(
-                F.coalesce(F.col("kth_partial"), F.lit(float("-inf"))), F.col("theta")
-            ),
-        )
-        .filter(F.col("partial") + F.col("rem_slack") >= F.col("floor") - F.lit(_EPS))
-        .select("query_id", "doc_id")
-    )
-    # Gate the cap executor-side BEFORE any driver materialization: a
-    # pathological batch must never ship an unbounded survivor set to the
-    # driver.  limit(cap+1) short-circuits the count; persist so the
-    # subsequent bounded collect reuses the computed partitions.
-    surv = surv.persist()
-    try:
-        if surv.limit(_SURVIVOR_CAP + 1).count() > _SURVIVOR_CAP:
-            return None
-        surv_rows = surv.collect()
-    finally:
-        surv.unpersist()
-
-    surv_by_q: dict[int, list[int]] = {}
-    for r in surv_rows:
-        surv_by_q.setdefault(int(r["query_id"]), []).append(int(r["doc_id"]))
-    docs_by_term: dict[str, set] = {}
-    for qi in plan["qinfos"]:
-        s = surv_by_q.get(qi["qid"])
-        if not s:
-            continue
-        for t in qi["present"]:
-            docs_by_term.setdefault(t, set()).update(s)
-    if not docs_by_term:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
-        )
-    contribs = (
-        _decode_arrow(
-            filter_blocks_docs(
-                _postings_scan(spark, index.index_dir, sorted(docs_by_term)),
-                spark,
-                docs_by_term,
-            )
-        )
-        .join(F.broadcast(qdf), "term")
-        .select("query_id", "doc_id", "term", "k", _contrib_col(index).alias("contrib"))
-    )
-    surv_df = spark.createDataFrame(
-        [(int(r["query_id"]), int(r["doc_id"])) for r in surv_rows],
-        "query_id long, doc_id long",
-    )
-    contribs = contribs.join(F.broadcast(surv_df), ["query_id", "doc_id"], "left_semi")
-    return _fold_and_rank(contribs)
 
 
 def run_queries(
@@ -573,7 +291,6 @@ def run_queries(
     index: Index,
     queries: list[dict],
     mode: str = "and",
-    prune: bool | None = None,
     doc_filter: DataFrame | None = None,
 ) -> DataFrame:
     """queries: [{"query_id": int, "terms": [str], "k": int}] →
@@ -585,27 +302,20 @@ def run_queries(
     leaves the executors and can be arbitrarily large (any Catalyst
     predicate over any table that yields docIDs).  Scoring stats (N, avgdl,
     idf) stay whole-corpus — a result filter is not a corpus deletion (A22
-    is).  Forces the single-job path: the pruned plan's θ seed comes from
-    unfiltered driver-side postings and could over-prune filtered results.
+    is).
 
     A query dict may carry ``"exclude": [terms...]`` — the query language's
     negative path (fts11) distributed: the query's results drop docs
     containing any excluded term, via a per-query (query_id, doc_id)
     anti-join built from the excluded terms' own pushdown decode.  Like the
     driver-local path, exclusion never changes the positive terms' idf or
-    scores.  Also forces the single-job path.
+    scores.
 
-    ``prune`` — block-max/MaxScore pruning for OR batches: True engages the
-    two-phase plan (exactness driver-gated by fts08), anything else takes
-    the single-job path.  Auto-engaging by estimated posting volume was
-    measured OFF twice (BENCH.md round 3): with the JVM block filter and
-    the Arrow-native decode kernel the decode work pruning saves is no
-    longer the bottleneck, and the two-phase plan's second postings scan +
-    second shuffle round lost at BOTH 4M postings (5.5s vs 10.8s) and 40M
-    postings (41.7s vs 87.6s), the gap growing with scale.  The pruned
-    plan's remaining value is as the decode-volume bound for IO-bound
-    stores where a skipped block is an unread byte range — re-measure
-    there before re-enabling any auto dispatch."""
+    AND and OR run as one job: every block of every query term decodes,
+    then one (query, doc) fold ranks.  Skipping blocks by their score bound
+    (a two-phase block-max/MaxScore plan) lost to this at every measured
+    scale: its second scan and second shuffle cost more than the decode it
+    saved (BENCH.md round 3)."""
     cfg = index.cfg
     all_terms = sorted({t for q in queries for t in q["terms"]})
     dic = index.lookup(all_terms)
@@ -645,11 +355,6 @@ def run_queries(
             for t in sorted(set(q.get("exclude", [])))
             if t in excl_dic  # an absent excluded term excludes nothing
         ]
-
-    if mode == "or" and prune is True and doc_filter is None and not excl_rows:
-        pruned = _run_queries_or_pruned(spark, index, queries, dic, qdf)
-        if pruned is not None:
-            return pruned
 
     decoded = decode_postings_df(spark, index.index_dir, all_terms)
     if doc_filter is not None:
@@ -710,25 +415,11 @@ def run_queries(
             .select("query_id", "doc_id")
         )
         joined = joined.join(excl_pairs, ["query_id", "doc_id"], "left_anti")
-    # Fixed-order summation (the §2.4 determinism contract): per (query,
-    # doc), contributions are sorted by term and folded left-to-right, so
-    # the float64 score is bit-identical across parallelism levels and to
-    # the driver-local paths.  The collected list is bounded by the query's
-    # term count (small by definition), so per-group state stays tiny.
-    scored = (
-        joined
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ).alias("score"),
-            F.count(F.lit(1)).alias("nt"),
-            F.first("n_terms").alias("n_terms"),
-            F.first("n_present").alias("n_present"),
-            F.first("k").alias("k"),
-        )
+    scored = _fold(
+        joined,
+        F.count(F.lit(1)).alias("nt"),
+        F.first("n_terms").alias("n_terms"),
+        F.first("n_present").alias("n_present"),
     )
     if mode == "and":
         # conjunctive: doc must contain every query term, and every query
@@ -816,4 +507,4 @@ def run_phrase_queries(
         .join(cand, ["query_id", "doc_id"], "left_semi")
         .select("query_id", "doc_id", "term", "k", _contrib_col(index).alias("contrib"))
     )
-    return _fold_and_rank(contribs)
+    return _rank_topk(_fold(contribs))

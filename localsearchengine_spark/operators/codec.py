@@ -242,9 +242,6 @@ class StreamBlocks:
         self.bufs = bufs      # stream name -> bytes (concatenated blocks)
         self.offs = offs      # stream name -> int64 offsets (len blocks+1)
 
-    def __len__(self) -> int:
-        return len(self.counts)
-
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         total = int(self.counts.sum())
         deltas = decode_varints(self.bufs["doc"], total)

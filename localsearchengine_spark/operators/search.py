@@ -37,33 +37,23 @@ class TermPostings:
     """
 
     __slots__ = (
-        "term", "idf", "df", "blocks", "block_max_doc", "block_bound_tfn",
+        "term", "idf", "df", "block_max_doc", "block_bound_tfn",
         "block_counts", "_streams", "_avgdl", "_cfg", "_block_cache", "_full",
         "_ts", "_live_counts",
     )
 
-    def __init__(self, term, blocks, idf, df, avgdl, cfg,
-                 streams: "codec.StreamBlocks | None" = None,
-                 block_max_doc: np.ndarray | None = None,
-                 block_bound_tfn: np.ndarray | None = None,
+    def __init__(self, term, idf, df, avgdl, cfg,
+                 streams: codec.StreamBlocks,
+                 block_max_doc: np.ndarray,
+                 block_bound_tfn: np.ndarray,
                  tombstones: np.ndarray | None = None):
         self.term = term
-        self.blocks = blocks  # raw dicts (legacy layout; None with streams)
         self.idf = float(idf)
         self.df = int(df)
         self._streams = streams
-        if streams is not None:
-            self.block_max_doc = block_max_doc
-            self.block_bound_tfn = block_bound_tfn
-            self.block_counts = streams.counts
-        else:
-            self.block_max_doc = np.asarray(
-                [b["max_doc_id"] for b in blocks], dtype=np.int64
-            )
-            self.block_bound_tfn = np.asarray(
-                [b["tf_norm_max"] for b in blocks], dtype=np.float64
-            )
-            self.block_counts = np.asarray([b["n"] for b in blocks], dtype=np.int64)
+        self.block_max_doc = block_max_doc
+        self.block_bound_tfn = block_bound_tfn
+        self.block_counts = streams.counts
         self._avgdl = float(avgdl)
         self._cfg = cfg
         self._block_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
@@ -86,10 +76,7 @@ class TermPostings:
         """→ (doc_ids, tf_norm) of block ``i`` (cached)."""
         hit = self._block_cache.get(i)
         if hit is None:
-            if self._streams is not None:
-                ids, tfs, dls = self._streams.decode_block(i)
-            else:
-                ids, tfs, dls = codec.decode_blocks([self.blocks[i]])
+            ids, tfs, dls = self._streams.decode_block(i)
             ids, tfs, dls = self._mask_deleted(ids, tfs, dls)
             hit = (ids, tf_norm_np(tfs, dls, self._avgdl, self._cfg))
             self._block_cache[i] = hit
@@ -107,10 +94,7 @@ class TermPostings:
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
         if self._full is None:
-            if self._streams is not None:
-                ids, tfs, dls = self._streams.decode_all()
-            else:
-                ids, tfs, dls = codec.decode_blocks(self.blocks)
+            ids, tfs, dls = self._streams.decode_all()
             if self._ts is not None and len(ids):
                 pos = np.searchsorted(self._ts, ids)
                 live = self._ts[np.minimum(pos, len(self._ts) - 1)] != ids
@@ -146,12 +130,6 @@ class TermPostings:
     def tf_norm(self) -> np.ndarray:
         return self.decode_all()[1]
 
-    @property
-    def max_score(self) -> float:
-        return float(
-            self.idf * (self.block_bound_tfn.max() if self.n_blocks else 0.0)
-        )
-
     def positions_for(self, ids: np.ndarray) -> dict[int, np.ndarray]:
         """docID → ascending within-doc positions, decoding only the blocks
         the requested docs fall into.  Requires a positional index."""
@@ -162,13 +140,9 @@ class TermPostings:
         inside = bi < self.n_blocks
         for b in np.unique(bi[inside]):
             sel_ids = ids[inside & (bi == b)]
-            if self._streams is not None:
-                bids, btfs, _ = self._streams.decode_block(int(b))
-                o = self._streams.offs["pos"]
-                raw = self._streams.bufs["pos"][o[b]:o[b + 1]]
-            else:
-                bids, btfs, _ = codec.decode_blocks([self.blocks[int(b)]])
-                raw = self.blocks[int(b)].get("pos_bytes", b"")
+            bids, btfs, _ = self._streams.decode_block(int(b))
+            o = self._streams.offs["pos"]
+            raw = self._streams.bufs["pos"][o[b]:o[b + 1]]
             plist = codec.decode_block_positions(raw, btfs)
             pos_idx = np.searchsorted(bids, sel_ids)
             for j, did in zip(pos_idx, sel_ids):
@@ -263,8 +237,6 @@ class Index:
         term min/max statistics instead of reading the vocabulary — at
         10^12-turn vocabularies the dictionary is many files and a full scan
         per wildcard would dominate query latency."""
-        import pyarrow.dataset as ds
-
         return [t for t, _df in self.suggest(prefix, limit=limit)]
 
     # ---- A31: query suggestion / completion --------------------------------
@@ -422,7 +394,6 @@ class Index:
                 df_total = int(df_col[np.asarray(rows)].sum())
                 self._cache[t] = TermPostings(
                     term=t,
-                    blocks=None,
                     idf=self.cfg.idf(df_total, self.n_docs),
                     df=df_total,
                     avgdl=self.avgdl,

@@ -911,16 +911,13 @@ def _batch_oracle_sql(queries: list[dict], mode: str, doc_pred: str | None = Non
     )
 
 
-def _engine_batch(spark, sf_dir, queries: list[dict], mode: str, prune=None,
-                  doc_filter=None):
+def _engine_batch(spark, sf_dir, queries: list[dict], mode: str, doc_filter=None):
     from localsearchengine_spark.operators.batch_query import run_queries
     from localsearchengine_spark.operators.search import Index
     from localsearchengine_spark.plans.entry_helpers import ensure_documents_index
 
     index = Index(spark, ensure_documents_index(spark, sf_dir))
-    res = run_queries(
-        spark, index, queries, mode=mode, prune=prune, doc_filter=doc_filter
-    )
+    res = run_queries(spark, index, queries, mode=mode, doc_filter=doc_filter)
     return res.select(
         "query_id", "rank", "doc_id", F.round("score", 6).alias("score")
     )
@@ -931,12 +928,11 @@ def fts05(spark, sf_dir):
     return _engine_batch(spark, sf_dir, _FTS5_QUERIES, "and")
 
 
-# prune=True: the corpus here is far below the cost-based crossover, but the
-# two-phase MaxScore/block-max path must stay in the driver gate — exactness
-# of the pruned plan is the thing being certified, not its speedup.
+# disjunctive batch: the same single-job run_queries path as fts05, with
+# no conjunctive filter — every doc holding any query term is scored.
 @q("fts08_batch_queries_or", _batch_oracle_sql(_FTS8_QUERIES, "or"))
 def fts08(spark, sf_dir):
-    return _engine_batch(spark, sf_dir, _FTS8_QUERIES, "or", prune=True)
+    return _engine_batch(spark, sf_dir, _FTS8_QUERIES, "or")
 
 
 # metadata-FILTERED batch search: results restricted to docs whose source

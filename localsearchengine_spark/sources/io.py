@@ -46,11 +46,6 @@ def scan_transcripts(spark: SparkSession, source: str) -> DataFrame:
     return spark.read.parquet(source)
 
 
-def scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver-provided test table (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 # ---------------------------------------------------------------------------
 # Driver-local read path (round-2 verdict #3): the interactive query side
 # (Index.lookup / fetch_postings / fetch_docs, SURVEY.md §3.2) reads index

@@ -22,52 +22,41 @@ os.environ["PYTHONPATH"] = REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
-# (row, one-line property the plan must show, substrings that prove it)
+# (row, one-line property the plan must show; tests/test_plans.py asserts it)
 CASES = [
     ("b01_scan_filter_project",
      "filter + projection reach the parquet scan (PushedFilters / pruned "
-     "ReadSchema) — Catalyst pushdown, no full-table read",
-     ["PushedFilters:", "ReadSchema:"]),
+     "ReadSchema) — Catalyst pushdown, no full-table read"),
     ("b02_join_broadcast_agg",
      "small dimension broadcasts (BroadcastHashJoin) — the fact side never "
-     "shuffles for the join",
-     ["BroadcastHashJoin"]),
+     "shuffles for the join"),
     ("b03_join_large_agg",
      "large×large resolves to a shuffle join under AQE (sort-merge or "
-     "shuffled-hash at runtime) — never a broadcast of a big side",
-     ["Exchange hashpartitioning"]),
+     "shuffled-hash at runtime) — never a broadcast of a big side"),
     ("b20_bm25_sql_dataframe",
-     "BM25 scoring is pure JVM Catalyst — zero Python nodes in the plan",
-     []),
+     "BM25 scoring is pure JVM Catalyst — zero Python nodes in the plan"),
     ("b28_bucketed_join_colocated",
      "bucketed co-located join: NO Exchange on either input — the shuffle "
-     "was paid once at write time",
-     ["SortMergeJoin"]),
+     "was paid once at write time"),
     ("b29_salted_skew_join",
      "skew join partitions on (key, salt) — one hot key spreads across "
-     "shuffle partitions",
-     ["salt"]),
+     "shuffle partitions"),
     ("b33_window_time_range",
      "trailing time window is a RANGE frame over int64 epoch-µs with a "
-     "single user_id exchange",
-     ["RANGE BETWEEN"]),
+     "single user_id exchange"),
     ("b34_grouped_agg_udaf",
      "GROUPED_AGG pandas UDAF runs as the Arrow aggregate node — no "
-     "row-at-a-time Python",
-     ["ArrowAggregatePython"]),
+     "row-at-a-time Python"),
     ("tx14_pii_redaction",
      "PII redaction is per-row Catalyst string work: zero Exchange, zero "
-     "Python",
-     []),
+     "Python"),
     ("sim03_ann_ivf",
      "IVF cell assignment is a per-row argmin over centroid literals — "
-     "zero shuffle before the cell semi-join",
-     []),
+     "zero shuffle before the cell semi-join"),
     ("pp01_pretrain_pipeline",
      "the end-to-end pipeline is three shuffles total (dedup hash window, "
      "line aggregate, per-doc count) — gates and normalization stay in "
-     "whole-stage codegen",
-     ["Exchange"]),
+     "whole-stage codegen"),
 ]
 
 
@@ -95,7 +84,7 @@ def main() -> None:
         "fails CI rather than a cluster run.",
         "",
     ]
-    for name, prop, _needles in CASES:
+    for name, prop in CASES:
         df = SPARK_QUERIES[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), "formatted"

@@ -12,17 +12,13 @@ from localsearchengine_spark.sources.fixtures import golden_queries
 from tests.oracle import oracle_search
 
 
-@pytest.mark.parametrize(
-    "mode,prune",
-    [("and", None), ("or", False), ("or", True)],
-    ids=["and", "or-generic", "or-pruned"],
-)
-def test_distributed_matches_oracle(spark, built_index, mode, prune):
+@pytest.mark.parametrize("mode", ["and", "or"], ids=["and", "or-generic"])
+def test_distributed_matches_oracle(spark, built_index, mode):
     idx_dir, _, pdf = built_index
     index = Index(spark, idx_dir)
     docs = list(enumerate(pdf["text"].tolist()))
     queries = golden_queries()[::5]  # every 5th → 10 queries, keeps runtime sane
-    out = run_queries(spark, index, queries, mode=mode, prune=prune).collect()
+    out = run_queries(spark, index, queries, mode=mode).collect()
     by_q: dict[int, list] = {}
     for r in out:
         by_q.setdefault(int(r["query_id"]), []).append(
@@ -40,23 +36,22 @@ def test_distributed_matches_oracle(spark, built_index, mode, prune):
 
 
 def test_distributed_matches_driver_local(spark, built_index):
-    """The three query paths agree with each other too."""
+    """The distributed and driver-local paths agree bit for bit in both
+    modes: both fold each doc's contributions in sorted term order (§2.4)."""
     idx_dir, _, _ = built_index
     index = Index(spark, idx_dir)
     queries = [q for q in golden_queries() if len(q["terms"]) >= 2][:5]
-    out = run_queries(spark, index, queries, mode="and").collect()
-    by_q: dict[int, list] = {}
-    for r in out:
-        by_q.setdefault(int(r["query_id"]), []).append(
-            (int(r["rank"]), int(r["doc_id"]), float(r["score"]))
-        )
-    for q in queries:
-        local = index.search(q["terms"], k=q["k"], mode="and")
-        got = [(d, s) for _, d, s in sorted(by_q.get(q["query_id"], []))]
-        assert [d for d, _ in got] == [d for d, _ in local]
-        np.testing.assert_allclose(
-            [s for _, s in got], [s for _, s in local], atol=1e-9, rtol=0
-        )
+    for mode in ("and", "or"):
+        out = run_queries(spark, index, queries, mode=mode).collect()
+        by_q: dict[int, list] = {}
+        for r in out:
+            by_q.setdefault(int(r["query_id"]), []).append(
+                (int(r["rank"]), int(r["doc_id"]), float(r["score"]))
+            )
+        for q in queries:
+            local = index.search(q["terms"], k=q["k"], mode=mode)
+            got = [(d, s) for _, d, s in sorted(by_q.get(q["query_id"], []))]
+            assert got == [(d, s) for d, s in local], f"query {q['query_id']} mode={mode}"
 
 
 def test_batch_scores_bit_identical_across_shuffle_partitions(spark, built_index):
@@ -82,94 +77,6 @@ def test_batch_scores_bit_identical_across_shuffle_partitions(spark, built_index
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
     assert a == b  # exact float equality, including scores
-
-
-def test_or_pruning_plan_engages_and_saves_decode(spark, built_index):
-    """Round-3 verdict #2: the OR batch path must decode measurably fewer
-    posting rows than a full scan, while staying exact (exactness is pinned
-    by test_distributed_matches_oracle[or], which runs the same path)."""
-    from localsearchengine_spark.operators.batch_query import (
-        _decode_arrow,
-        _postings_scan,
-        decode_postings_df,
-        filter_blocks_tau,
-        plan_or_pruning,
-    )
-
-    idx_dir, _, _ = built_index
-    index = Index(spark, idx_dir)
-    queries = golden_queries()
-    dic = index.lookup(sorted({t for q in queries for t in q["terms"]}))
-    plan = plan_or_pruning(index, queries, dic)
-    assert plan is not None
-    # on the Zipf fixture some hot term must be non-essential everywhere or
-    # some decoded term must have an active block threshold
-    assert plan["probe_terms"] or any(v > 0.0 for v in plan["tau"].values())
-    full_rows = decode_postings_df(spark, idx_dir, sorted(dic)).count()
-    phase1_rows = _decode_arrow(
-        filter_blocks_tau(
-            _postings_scan(spark, idx_dir, plan["decoded_terms"]), spark, plan["tau"]
-        )
-    ).count()
-    assert phase1_rows < full_rows, (phase1_rows, full_rows)
-
-
-def test_or_pruning_disabled_under_negative_idf(spark, built_index):
-    """Classic RSJ idf goes negative for df > N/2 terms; bound directions
-    flip, so the pruned plan must refuse and the generic path take over."""
-    from types import SimpleNamespace
-
-    from localsearchengine_spark.config import BM25Config
-    from localsearchengine_spark.operators.batch_query import plan_or_pruning
-
-    idx_dir, _, _ = built_index
-    index = Index(spark, idx_dir)
-    rsj = SimpleNamespace(
-        cfg=BM25Config(idf_variant="rsj"),
-        n_docs=index.n_docs,
-        fetch_postings=index.fetch_postings,
-    )
-    dic = {"hot": {"df": index.n_docs, "max_tf_norm": 1.0}}
-    assert (
-        plan_or_pruning(rsj, [{"query_id": 0, "terms": ["hot"], "k": 5}], dic) is None
-    )
-
-
-def test_pruned_decode_phases_partition_the_full_decode(spark, built_index):
-    """For any τ, phase-1 (tf_norm_max > τ) and its inverse complement
-    decode DISJOINT block sets whose union is exactly the full decode —
-    the invariant the two-phase OR path's exactness rests on."""
-    from localsearchengine_spark.operators.batch_query import (
-        _decode_arrow,
-        _postings_scan,
-        decode_postings_df,
-        filter_blocks_tau,
-    )
-
-    idx_dir, _, _ = built_index
-    terms = ["the", "spark", "join"]
-    index = Index(spark, idx_dir)
-    post = index.fetch_postings(terms)
-    terms = sorted(post)
-    # τ strictly between each term's min and max per-block bound, so both
-    # phases are non-empty wherever the bounds spread
-    tau = {
-        t: 0.5 * float(post[t].block_bound_tfn.min() + post[t].block_bound_tfn.max())
-        for t in terms
-    }
-    spread = any(
-        post[t].block_bound_tfn.min() < post[t].block_bound_tfn.max() for t in terms
-    )
-    assert spread
-    full = decode_postings_df(spark, idx_dir, terms).collect()
-    p1 = _decode_arrow(
-        filter_blocks_tau(_postings_scan(spark, idx_dir, terms), spark, tau)
-    ).collect()
-    p2 = _decode_arrow(
-        filter_blocks_tau(_postings_scan(spark, idx_dir, terms), spark, tau, inverse=True)
-    ).collect()
-    assert len(p1) < len(full)  # τ between the bound extremes must skip something
-    assert sorted(map(tuple, p1 + p2)) == sorted(map(tuple, full))
 
 
 def test_doc_filter_restricts_without_rescoring(spark, built_index):
@@ -208,35 +115,3 @@ def test_batch_exclusions_match_driver_local(spark, built_index):
     ]
     local = index.search("merge small -window -slow", k=10, mode="and")
     assert got == [(d, s) for d, s in local]
-
-def test_overcap_survivors_fall_back_without_driver_collect(
-    spark, built_index, monkeypatch
-):
-    """The survivor cap must be enforced executor-side (limit+count) BEFORE
-    any driver materialization: with the cap forced to 0, the pruned path
-    must return the generic-path result (fallback) and the 2-column survivor
-    frame must never be collect()ed."""
-    from pyspark.sql import DataFrame
-
-    import localsearchengine_spark.operators.batch_query as bq
-
-    idx_dir, _, _ = built_index
-    index = Index(spark, idx_dir)
-    queries = [q for q in golden_queries() if len(q["terms"]) >= 2][:3]
-
-    monkeypatch.setattr(bq, "_SURVIVOR_CAP", 0)
-    collected_cols: list[tuple] = []
-    orig_collect = DataFrame.collect
-
-    def spy(self):
-        collected_cols.append(tuple(self.columns))
-        return orig_collect(self)
-
-    monkeypatch.setattr(DataFrame, "collect", spy)
-    out = orig_collect(run_queries(spark, index, queries, mode="or", prune=True))
-    assert ("query_id", "doc_id") not in collected_cols, (
-        "over-cap survivor set was materialized on the driver"
-    )
-    monkeypatch.setattr(DataFrame, "collect", orig_collect)
-    base = orig_collect(run_queries(spark, index, queries, mode="or", prune=False))
-    assert sorted(map(tuple, out)) == sorted(map(tuple, base))

@@ -62,18 +62,18 @@ def test_reload_tombstones_on_live_handle(spark, deletable_index):
     assert top[0][0] not in [d for d, _ in index.search(TERMS, k=10, mode="wand")]
 
 
-@pytest.mark.parametrize("mode,prune", [("and", None), ("or", False), ("or", True)])
-def test_batch_paths_exclude_deleted(spark, deletable_index, mode, prune):
+@pytest.mark.parametrize("mode", ["and", "or"], ids=["and-None", "or-False"])
+def test_batch_paths_exclude_deleted(spark, deletable_index, mode):
     idx_dir, _ = deletable_index
     base = Index(spark, idx_dir)
     q = [{"query_id": 0, "terms": TERMS, "k": 8}]
-    wide = run_queries(spark, base, [{**q[0], "k": 20}], mode=mode, prune=prune).collect()
+    wide = run_queries(spark, base, [{**q[0], "k": 20}], mode=mode).collect()
     ranked = [(int(r["doc_id"]), float(r["score"])) for r in sorted(wide, key=lambda r: r["rank"])]
     victims = [d for d, _ in ranked[:3]]
     delete_docs(idx_dir, victims)
 
     index = Index(spark, idx_dir)
-    got = run_queries(spark, index, q, mode=mode, prune=prune).collect()
+    got = run_queries(spark, index, q, mode=mode).collect()
     got = [(int(r["doc_id"]), float(r["score"])) for r in sorted(got, key=lambda r: r["rank"])]
     exp = [(d, s) for d, s in ranked if d not in set(victims)][:8]
     assert got == exp

@@ -24,19 +24,36 @@ def _term(name: str, doc_ids: list[int], rng: np.random.Generator, n_docs: int,
     ids = np.asarray(sorted(set(doc_ids)), dtype=np.int64)
     tfs = rng.integers(1, 6, size=len(ids)).astype(np.int64)
     dls = rng.integers(5, 60, size=len(ids)).astype(np.int64)
-    blocks = [
-        b._asdict()
-        for b in codec.encode_blocks(
-            ids, tfs, dls, block_size=block_size, k1=cfg.k1, b=cfg.b, avgdl=AVGDL
-        )
-    ]
+    blocks = codec.encode_blocks(
+        ids, tfs, dls, block_size=block_size, k1=cfg.k1, b=cfg.b, avgdl=AVGDL
+    )
+    # the engine's storage layout: per stream, the blocks' bytes concatenated
+    # into one buffer plus per-block offsets
+    bufs, offs = {}, {}
+    for stream in ("doc", "tf", "dl"):
+        parts = [getattr(blk, f"{stream}_bytes") for blk in blocks]
+        bufs[stream] = b"".join(parts)
+        lens = [len(x) for x in parts]
+        offs[stream] = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
+    counts = np.asarray([blk.n for blk in blocks], dtype=np.int64)
     return TermPostings(
         term=name,
-        blocks=blocks,
         idf=cfg.idf(len(ids), n_docs),
         df=len(ids),
         avgdl=AVGDL,
         cfg=cfg,
+        streams=codec.StreamBlocks(counts, bufs, offs),
+        block_max_doc=np.asarray([blk.max_doc_id for blk in blocks], dtype=np.int64),
+        block_bound_tfn=np.asarray([blk.tf_norm_max for blk in blocks], dtype=np.float64),
+    )
+
+
+def _fresh(p: TermPostings, cfg: BM25Config) -> TermPostings:
+    """A new TermPostings over the same streams — its decode cache is empty,
+    so the reference path shares no decoded state with the WAND run."""
+    return TermPostings(
+        p.term, p.idf, p.df, AVGDL, cfg, streams=p._streams,
+        block_max_doc=p.block_max_doc, block_bound_tfn=p.block_bound_tfn,
     )
 
 
@@ -60,13 +77,7 @@ def test_wand_equals_exhaustive(data, n_terms, k, block_size, seed):
         plists.append(_term(f"t{i:02d}", ids, rng, n_docs, block_size))
     plists.sort(key=lambda p: p.term)
     got = wand_topk(plists, k, CFG)
-    # fresh postings objects for the reference path (no shared decode cache)
-    ref_lists = []
-    for p in plists:
-        ref_lists.append(
-            TermPostings(p.term, p.blocks, p.idf, p.df, AVGDL, CFG)
-        )
-    exp = _or_topk(ref_lists, k, CFG)
+    exp = _or_topk([_fresh(p, CFG) for p in plists], k, CFG)
     assert got == exp
 
 
@@ -94,6 +105,5 @@ def test_wand_equals_exhaustive_negative_idf(data, n_terms, k, block_size, seed)
         plists.append(_term(f"t{i:02d}", ids, rng, n_docs, block_size, RSJ))
     plists.sort(key=lambda p: p.term)
     got = wand_topk(plists, k, RSJ)
-    ref_lists = [TermPostings(p.term, p.blocks, p.idf, p.df, AVGDL, RSJ) for p in plists]
-    exp = _or_topk(ref_lists, k, RSJ)
+    exp = _or_topk([_fresh(p, RSJ) for p in plists], k, RSJ)
     assert got == exp
