@@ -42,7 +42,7 @@ else:
     BENCH_TMP = tempfile.gettempdir()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 # 4× the driver's lineitem multiplier: the build must be compute-dominated
 # (not job-overhead-dominated) for the N vs 4N scaling numbers to mean
 # anything — 240k turns ≈ 12.5M tokens at sf0.1.

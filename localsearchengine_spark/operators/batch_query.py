@@ -6,10 +6,12 @@ keeps everything in DataFrames:
 
     postings (term-filtered parquet scan, pushdown)
       → mapInArrow decode (contiguous varint streams → long form)
-      → broadcast-join the exploded query set + per-term idf
+      → broadcast-join the exploded query set + per-term idf and fold slot
       → JVM Column-expression BM25 contribution  (whole-stage codegen)
-      → groupBy(query_id, doc_id) partial-agg sum  [the only big shuffle]
-      → AND filter (nt == n_terms) → per-query top-k window
+      → groupBy(query_id, doc_id) per-slot sums, added in slot order
+        (codegen'd HashAggregate)  [the only big shuffle]
+      → AND filter (nt == n_terms) → per-query top-k window, cut per
+        partition (WindowGroupLimit) before the query_id exchange
 
 The per-term idf/df comes from the dictionary (driver-side lookup — the
 query set's term list is small by definition), so no second big join.
@@ -207,82 +209,55 @@ def _contrib_col(index: Index):
     )
 
 
-def _local_topk(scored: DataFrame) -> DataFrame:
-    """Partition-local per-query top-k pre-reduce before the global ranking
-    window.  The window's partitionBy(query_id) funnels EVERY scored doc of
-    a query onto one reducer — at 10^12-doc scale a hot query is a straggler
-    by construction.  The global top-k is a subset of the union of each
-    partition's per-query top-k, so keeping only k rows per (query,
-    input-partition) first bounds the skewed shuffle to k·P rows per query
-    while leaving every surviving row's score untouched (no recompute — the
-    determinism contract is unaffected).  Input/output columns:
-    (query_id, doc_id, score, k).
-
-    Arrow-native kernel (same reasoning as `_decode_arrow`): the original
-    mapInPandas version spent its time in Arrow→pandas conversion plus
-    pandas sort_values/groupby — profiled as the dominant stage of the
-    whole OR batch at 2.4M docs.  One numpy lexsort + a vectorized
-    per-group cumcount does the identical cut (top-k per (query, Arrow
-    batch), ties by doc_id asc) with none of that overhead."""
-    cols = ["query_id", "doc_id", "score", "k"]
-
-    def prune(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            col = {n: rb.column(i) for i, n in enumerate(names)}
-            qid = col["query_id"].to_numpy(zero_copy_only=False)
-            doc = col["doc_id"].to_numpy(zero_copy_only=False)
-            score = col["score"].to_numpy(zero_copy_only=False)
-            k = col["k"].to_numpy(zero_copy_only=False)
-            order = np.lexsort((doc, -score, qid))
-            qs = qid[order]
-            idx = np.arange(len(qs), dtype=np.int64)
-            group_start = np.maximum.accumulate(
-                np.where(np.concatenate(([True], qs[1:] != qs[:-1])), idx, 0)
-            )
-            cumcount = idx - group_start
-            keep = order[cumcount < k[order]]
-            yield rb.take(pa.array(np.sort(keep)))
-
-    return scored.select(*cols).mapInArrow(
-        prune, schema="query_id long, doc_id long, score double, k long"
-    )
-
-
-def _rank_topk(scored: DataFrame) -> DataFrame:
+def _rank_topk(scored: DataFrame, k_max: int) -> DataFrame:
     """(query_id, doc_id, score, k) → per-query (rank ≤ k) rows, rank over
-    (score desc, doc_id asc), after the partition-local pre-reduce."""
+    (score desc, doc_id asc).
+
+    The window's partitionBy(query_id) funnels every scored doc of a query
+    onto one reducer.  The constant bound ``row_number() <= k_max`` (the
+    batch's largest k) lets Spark's InferWindowGroupLimit put a Partial
+    WindowGroupLimit before the query_id exchange: each input partition
+    keeps only its per-query top k_max, a superset of what the global
+    window keeps, and no surviving row's score is recomputed."""
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    rn = F.col("rank")
     return (
-        _local_topk(scored)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter((rn <= F.lit(k_max)) & (rn <= F.col("k")))
+        .select("query_id", rn.cast("long").alias("rank"), "doc_id", "score")
         .orderBy("query_id", "rank")
     )
 
 
-def _fold(contribs: DataFrame, *extra_aggs) -> DataFrame:
-    """(query_id, doc_id, term, k, contrib) → one (query_id, doc_id, score,
-    *extra_aggs, k) row per (query, doc).
+def _fold(contribs: DataFrame, n_slots: int, *extra_aggs) -> DataFrame:
+    """(query_id, doc_id, slot, k, contrib) → one (query_id, doc_id, score,
+    *extra_aggs, k) row per (query, doc).  ``slot`` is the term's position
+    among its query's present terms in sorted order, below ``n_slots``.
 
-    Fixed-order summation (the §2.4 determinism contract): per (query, doc),
-    contributions are sorted by term and folded left-to-right, so the
-    float64 score is bit-identical across parallelism levels and to the
-    driver-local paths.  The collected list is bounded by the query's term
-    count (small by definition), so per-group state stays tiny."""
-    return contribs.groupBy("query_id", "doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score"),
-        *extra_aggs,
-        F.first("k").alias("k"),
+    Fixed-order summation (the §2.4 determinism contract): the score is
+    ``((0.0 + c_0) + c_1) + …`` over the slots in order, with an absent
+    term's c_j = 0.0, so the float64 score is bit-identical across
+    parallelism levels and to the driver-local paths, which fold the
+    present terms in sorted order from 0.0.  Each slot holds at most one
+    contribution per (query, doc) (one posting per term and doc), so its
+    sum is that contribution exactly, whatever the partial-aggregation
+    order; and adding 0.0 for an absent term leaves the running score
+    unchanged (x + 0.0 == x).  Plain sums keep the fold a codegen'd
+    HashAggregate."""
+    slots = [f"c{j}" for j in range(n_slots)]
+    score = F.lit(0.0)
+    for c in slots:
+        score = score + F.coalesce(F.col(c), F.lit(0.0))
+    return (
+        contribs.groupBy("query_id", "doc_id")
+        .agg(
+            *[F.sum(F.when(F.col("slot") == j, F.col("contrib"))).alias(c)
+              for j, c in enumerate(slots)],
+            *extra_aggs,
+            F.first("k").alias("k"),
+        )
+        .withColumn("score", score)
+        .drop(*slots)
     )
 
 
@@ -315,7 +290,13 @@ def run_queries(
     then one (query, doc) fold ranks.  Skipping blocks by their score bound
     (a two-phase block-max/MaxScore plan) lost to this at every measured
     scale: its second scan and second shuffle cost more than the decode it
-    saved (BENCH.md round 3)."""
+    saved (BENCH.md round 3).
+
+    The per-query top-k cut runs per partition before the query_id
+    exchange only while the batch's largest k is at most Spark's
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000).
+    Above it Spark plans no WindowGroupLimit: every scored (query, doc)
+    pair crosses the exchange, and results stay the same."""
     cfg = index.cfg
     all_terms = sorted({t for q in queries for t in q["terms"]})
     dic = index.lookup(all_terms)
@@ -323,25 +304,27 @@ def run_queries(
     qrows = []
     for qd in queries:
         terms = sorted(set(qd["terms"]))
-        n_present = sum(1 for t in terms if t in dic)
-        for t in terms:
-            if t in dic:
-                qrows.append(
-                    (
-                        int(qd["query_id"]),
-                        t,
-                        float(cfg.idf(dic[t]["df"], index.n_docs)),
-                        int(len(terms)),
-                        int(n_present),
-                        int(qd.get("k", 10)),
-                    )
+        present = [t for t in terms if t in dic]
+        for slot, t in enumerate(present):
+            qrows.append(
+                (
+                    int(qd["query_id"]),
+                    t,
+                    slot,
+                    float(cfg.idf(dic[t]["df"], index.n_docs)),
+                    int(len(terms)),
+                    int(len(present)),
+                    int(qd.get("k", 10)),
                 )
+            )
     if not qrows:
         return spark.createDataFrame(
             [], "query_id long, rank long, doc_id long, score double"
         )
     qdf = spark.createDataFrame(
-        qrows, "query_id long, term string, idf double, n_terms long, n_present long, k long"
+        qrows,
+        "query_id long, term string, slot int, idf double, n_terms long, "
+        "n_present long, k long",
     )
 
     excl_rows = []
@@ -391,7 +374,7 @@ def run_queries(
 
     contrib = _contrib_col(index)
     joined = decoded.join(F.broadcast(qdf), "term").select(
-        "query_id", "doc_id", "term", "n_terms", "n_present", "k", contrib.alias("contrib")
+        "query_id", "doc_id", "slot", "n_terms", "n_present", "k", contrib.alias("contrib")
     )
     if cand is not None:
         # one pass over the decoded scan: rows of filtered queries survive
@@ -417,6 +400,7 @@ def run_queries(
         joined = joined.join(excl_pairs, ["query_id", "doc_id"], "left_anti")
     scored = _fold(
         joined,
+        max(r[2] for r in qrows) + 1,
         F.count(F.lit(1)).alias("nt"),
         F.first("n_terms").alias("n_terms"),
         F.first("n_present").alias("n_present"),
@@ -427,7 +411,7 @@ def run_queries(
         scored = scored.filter(
             (F.col("nt") == F.col("n_terms")) & (F.col("n_present") == F.col("n_terms"))
         )
-    return _rank_topk(scored)
+    return _rank_topk(scored, max(r[-1] for r in qrows))
 
 
 def run_phrase_queries(
@@ -493,18 +477,24 @@ def run_phrase_queries(
         parts.append(
             cur.select(F.lit(qid).cast("long").alias("query_id"), "doc_id")
         )
-        for t in sorted(set(ph)):
-            qrows.append((qid, t, float(index.cfg.idf(dic[t]["df"], index.n_docs)), k))
+        for slot, t in enumerate(sorted(set(ph))):
+            qrows.append(
+                (qid, t, slot, float(index.cfg.idf(dic[t]["df"], index.n_docs)), k)
+            )
     if not parts:
         return spark.createDataFrame([], empty)
     cand = parts[0]
     for p in parts[1:]:
         cand = cand.unionByName(p)
-    qdf = spark.createDataFrame(qrows, "query_id long, term string, idf double, k long")
+    qdf = spark.createDataFrame(
+        qrows, "query_id long, term string, slot int, idf double, k long"
+    )
     contribs = (
         decoded.select("term", "doc_id", "tf", "dl")
         .join(F.broadcast(qdf), "term")
         .join(cand, ["query_id", "doc_id"], "left_semi")
-        .select("query_id", "doc_id", "term", "k", _contrib_col(index).alias("contrib"))
+        .select("query_id", "doc_id", "slot", "k", _contrib_col(index).alias("contrib"))
     )
-    return _rank_topk(_fold(contribs))
+    return _rank_topk(
+        _fold(contribs, max(r[2] for r in qrows) + 1), max(r[-1] for r in qrows)
+    )

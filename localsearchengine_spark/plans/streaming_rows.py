@@ -233,13 +233,13 @@ def _stage_events_two_streams(sf_dir: str, n_batches: int = 3) -> tuple[str, str
         for drop, types in ((drop_a, _ST06_A_TYPES), (drop_b, _ST06_B_TYPES)):
             path = os.path.join(drop, f"b{i}.parquet")
             pq.write_table(
-                part.filter(pc.is_in(part["event_type"], pa_values(types))), path
+                part.filter(pc.is_in(part["event_type"], _pa_values(types))), path
             )
             os.utime(path, (now + i, now + i))
     return drop_a, drop_b
 
 
-def pa_values(vals):
+def _pa_values(vals):
     import pyarrow as pa
 
     return pa.array(list(vals), pa.string())

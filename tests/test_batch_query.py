@@ -54,6 +54,32 @@ def test_distributed_matches_driver_local(spark, built_index):
             assert got == [(d, s) for d, s in local], f"query {q['query_id']} mode={mode}"
 
 
+def test_wide_and_mixed_k_batch_matches_driver_local(spark, built_index):
+    """One batch whose queries span 1 to 7 fold slots and whose per-query k
+    sits below the batch's largest k: each query returns exactly its own
+    min(k, matches) rows, bit-equal to the driver-local search."""
+    idx_dir, _, _ = built_index
+    index = Index(spark, idx_dir)
+    queries = [
+        {"query_id": 0, "terms": ["term00001"], "k": 3},  # 2 matching docs
+        {"query_id": 1, "terms": ["spark", "join", "merge", "small", "query", "index", "data"],
+         "k": 10},
+        {"query_id": 2, "terms": ["merge", "term"], "k": 25},
+    ]
+    for mode in ("and", "or"):
+        out = run_queries(spark, index, queries, mode=mode).collect()
+        for q in queries:
+            got = [
+                (int(r["doc_id"]), float(r["score"]))
+                for r in sorted(out, key=lambda r: r["rank"])
+                if r["query_id"] == q["query_id"]
+            ]
+            local = index.search(q["terms"], k=q["k"], mode=mode)
+            matches = len(index.search(q["terms"], k=index.n_docs, mode=mode))
+            assert len(got) == min(q["k"], matches), f"query {q['query_id']} mode={mode}"
+            assert got == [(d, s) for d, s in local], f"query {q['query_id']} mode={mode}"
+
+
 def test_batch_scores_bit_identical_across_shuffle_partitions(spark, built_index):
     """The §2.4 determinism contract now extends to the distributed batch
     path: per-(query,doc) contributions fold in sorted term order, so the

@@ -10,6 +10,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -88,6 +89,32 @@ def test_batch_query_broadcasts_queryset(spark, built_index):
     df = run_queries(spark, index, [{"query_id": 0, "terms": ["spark", "join"], "k": 5}])
     plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
+
+
+def test_batch_fold_and_topk_stay_in_the_jvm(spark, built_index):
+    """The (query, doc) fold is a plain HashAggregate (no ObjectHashAggregate
+    from a collected list) and the per-query top-k is cut per partition by a
+    Partial WindowGroupLimit below the query_id exchange, so the decode is
+    the plan's only Python pass."""
+    from localsearchengine_spark.operators.batch_query import run_queries
+    from localsearchengine_spark.operators.search import Index
+
+    idx_dir, _, _ = built_index
+    index = Index(spark, idx_dir)
+    queries = [{"query_id": 0, "terms": ["spark", "join"], "k": 5},
+               {"query_id": 1, "terms": ["merge"], "k": 10}]
+    plan = plan_of(run_queries(spark, index, queries, mode="or"))
+    tree, _, details = plan.partition("\n\n\n")
+    nodes = {int(b[1:b.index(")")]): b for b in details.split("\n\n") if b.startswith("(")}
+    line_of = {int(line[line.rindex("(") + 1:-1]): i for i, line in enumerate(tree.splitlines())
+             if line.endswith(")")}
+    (partial,) = [i for i, b in nodes.items()
+                  if "WindowGroupLimit" in b.splitlines()[0] and b.rstrip().endswith("Partial")]
+    (exchange,) = [i for i, b in nodes.items()
+                   if re.search(r"hashpartitioning\(query_id#\d+L, \d+\)", b)]
+    assert "ObjectHashAggregate" not in plan
+    assert tree.count("MapInArrow") == 1  # the decode
+    assert line_of[exchange] < line_of[partial]  # the tree prints parents first
 
 
 def test_b28_bucketed_join_is_shuffle_free(spark):
