@@ -166,7 +166,9 @@ def _build_child(
     # Per-rep self-certification (same contract as the query benches): every
     # rep records wall seconds, process-tree CPU seconds, and the max host
     # 1-min load around it, so an artifact excursion under co-tenant load is
-    # distinguishable from an engine regression without a re-run.
+    # distinguishable from an engine regression without a re-run.  load1 is
+    # sampled only at rep start and end, so a co-tenant spike confined to
+    # the middle of a long rep can be missed; the CPU seconds still show it.
     best, best_cpu = None, None
     rep_detail: list[dict] = []
     for _ in range(reps):

@@ -28,7 +28,7 @@ from pyspark.sql import SparkSession
 
 from localsearchengine_spark.config import BuildConfig
 from localsearchengine_spark.operators import postings as P_mod
-from localsearchengine_spark.operators.docids import assign_doc_ids
+from localsearchengine_spark.operators.docids import number_turns, range_turns
 from localsearchengine_spark.sources.io import input_snapshot_id, scan_transcripts
 from localsearchengine_spark.utils import atomic_write_json, read_json
 
@@ -107,29 +107,21 @@ def _write_docstore(
     spark: SparkSession, source: str, index_dir: str, conf: BuildConfig,
     doc_id_base: int = 0, num_partitions: int = 0,
 ) -> None:
-    """Docs stage: stable docIDs (A2) + column-pruned write — pure JVM, no
-    Python pass (corpus stats come from the fused stats_hot_scan).
+    """Docs stage: stable docIDs (A2) + column-pruned write — pure JVM, one
+    range shuffle, no Python pass (corpus stats come from stats_hot_scan).
 
-    A small corpus (fewer natural input splits than cores) is explicitly
-    repartitioned so docs/ lands as many files — a single parquet file is
-    one row group, i.e. ONE split, and every downstream Arrow pass would run
-    at parallelism 1.  At production scale the input already has thousands
-    of splits and this branch never triggers (no extra text shuffle)."""
-    t = scan_transcripts(spark, source)
-    with_ids = assign_doc_ids(t, conf.num_partitions, doc_id_base)
-    docs = with_ids.select(
-        "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "text"
-    )
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if _dir_bytes(source) < P * 8 * 1024 * 1024:
-        # range-partition by doc_id (not round-robin): same parallelism win,
-        # and every docs file then covers a disjoint doc_id range, so the
-        # doc-store fetch path (Index.fetch_docs) prunes to one file per
-        # requested range via parquet min/max stats.  At production scale
-        # this branch never triggers; the Iceberg table's sort order plays
-        # the same role there.
-        docs = docs.repartitionByRange(P, "doc_id").sortWithinPartitions("doc_id")
-    docs.write.mode("overwrite").parquet(os.path.join(index_dir, "docs"))
+    The numbered frame is written as it is: P files of disjoint, sorted
+    doc_id ranges, so Index.fetch_docs prunes files by their min/max stats
+    and even a one-file corpus gives the Arrow passes P splits.  The
+    persisted turns are released even when the contiguity check raises."""
+    cols = ("conv_id", "turn_idx", "role", "tool", "ts", "text")
+    ranged = range_turns(scan_transcripts(spark, source).select(*cols),
+                         num_partitions or conf.num_partitions)
+    try:
+        docs = number_turns(ranged, doc_id_base).select("doc_id", *cols)
+        docs.write.mode("overwrite").parquet(os.path.join(index_dir, "docs"))
+    finally:
+        ranged.unpersist()
 
 
 def build_index(
@@ -202,8 +194,10 @@ def build_index(
 
             th = threading.Thread(target=_stats_job, daemon=True)
             th.start()
-            _write_docstore(spark, source, index_dir, conf, doc_id_base, num_partitions=P)
-            th.join()
+            try:
+                _write_docstore(spark, source, index_dir, conf, doc_id_base, num_partitions=P)
+            finally:
+                th.join()
         finally:
             _restore_conf(spark, saved)
         if "err" in stats_result:

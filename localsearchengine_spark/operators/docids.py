@@ -3,122 +3,102 @@
 BASELINE.json:6: "documents keyed by conv_id+turn_idx under stable turn
 ordering".  ``doc_id = conv_offset(conv_id) + turn_idx`` where conv_offset is
 the number of turns in all conversations with a lexicographically smaller
-conv_id.  This is invariant to partition layout and parallelism level —
-unlike ``zipWithIndex``/``monotonically_increasing_id`` (SURVEY.md §7.4-1).
+conv_id.  This is invariant to partition layout and parallelism level.
 
-Scale path (10^12 turns ⇒ ~10^11 conversations — a single-partition global
-window over conversations would NOT fly): a range-partitioned two-phase
-prefix sum.
+Scale path (10^12 turns — no single-partition global window): ONE range
+shuffle of the turns and a prefix sum over partitions.
 
-  1. ``convs = transcripts.groupBy(conv_id).agg(n_turns)``  (map-side combine)
-  2. range-partition convs by conv_id, sort within partitions
-  3. per-partition turn totals → driver (one row per partition) → exclusive
-     prefix over partitions (partition order == conv_id order because range
-     partitioning assigns contiguous key ranges to increasing partition ids)
-  4. mapInPandas adds partition offset + local exclusive cumsum
+  1. ``range_turns``: range-partition by conv_id, sort by (conv_id,
+     turn_idx), persist.  Range partitions are contiguous conv_id ranges in
+     partition-id order, so (partition, row) order IS the global order and
+     no conversation straddles partitions.  A contiguity flag (window
+     ``row_number() - 1 != turn_idx``) rides on that layout, no exchange.
+  2. ``number_turns``: one action → per-partition turn counts + the first
+     flagged conversation; then ``doc_id = base + (exclusive prefix of the
+     counts) + (row's position in its partition)``, the position being the
+     low 33 bits of ``monotonically_increasing_id()``.  Given contiguity a
+     row's global rank equals ``conv_offset + turn_idx``.
 
-The result depends only on the *sorted order* of conv_ids, never on where the
-range boundaries land, so sampling nondeterminism in RangePartitioner cannot
-change doc_ids.  The sorted convs frame is persisted between phase 3 and 4 so
-both actions see the same physical partitioning.
+The result depends only on the sorted order, never on where the range
+boundaries land.  The frame is persisted so the counting action and the
+numbering read the same partitions (RangePartitioner samples with a per-job
+seed); the caller unpersists it once the numbered frame is written.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+# monotonically_increasing_id() = partition index << 33 | row in partition
+_ROW_BITS = 33
 
-def conversation_offsets(transcripts: DataFrame, num_partitions: int = 0) -> DataFrame:
-    """→ DataFrame(conv_id string, n_turns long, conv_offset long).
 
-    Asserts the per-conversation ``turn_idx`` contiguity invariant that makes
-    doc_ids dense (FIXTURES.md §2; prod gets this validation pass too).
-    """
+def partition_offsets(counts: dict[int, int]) -> list[int]:
+    """{pid: turn count} → ``offsets[pid]``, the exclusive prefix in pid
+    order.  Raises at 2^33 rows in a partition, where the row position would
+    wrap into monotonically_increasing_id's partition bits."""
+    big = sorted(p for p, n in counts.items() if n >= 1 << _ROW_BITS)
+    if big:
+        raise ValueError(
+            f"partition {big[0]} holds {counts[big[0]]} turns, past the "
+            f"2^{_ROW_BITS} rows per partition that doc_id numbering supports; "
+            "build with more partitions"
+        )
+    offsets, acc = [], 0
+    for pid in range(max(counts, default=-1) + 1):
+        offsets.append(acc)
+        acc += int(counts.get(pid, 0))
+    return offsets
+
+
+def range_turns(transcripts: DataFrame, num_partitions: int = 0) -> DataFrame:
+    """Turns range-partitioned by conv_id, sorted by (conv_id, turn_idx),
+    flagged ``_bad`` where not contiguous, persisted MEMORY_AND_DISK — the
+    caller must ``unpersist()`` it.  The window is planned here, on the
+    range exchange, because over a not yet materialized cache Spark cannot
+    see the layout and would add a hash exchange."""
     spark = transcripts.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    convs = transcripts.groupBy("conv_id").agg(
-        (F.max("turn_idx") + 1).alias("n_turns"),
-        F.count(F.lit(1)).alias("_cnt"),
-        F.count_distinct("turn_idx").alias("_dcnt"),
-    )
-
-    csorted = (
-        convs.repartitionByRange(P, "conv_id")
-        .sortWithinPartitions("conv_id")
-        .withColumn("pid", F.spark_partition_id())
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    return (
+        transcripts.repartitionByRange(P, "conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .withColumn("_bad", F.row_number().over(w) - 1 != F.col("turn_idx"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # ONE action yields both the per-partition prefix sums and the turn_idx
-    # contiguity/uniqueness validation (dense docIDs require 0..n-1 per conv)
-    bad_cond = (F.col("_cnt") != F.col("n_turns")) | (
-        F.col("_dcnt") != F.col("n_turns")
-    )
-    stats = csorted.groupBy("pid").agg(
-        F.sum("n_turns").alias("s"),
-        F.min(F.when(bad_cond, F.col("conv_id"))).alias("bad_conv"),
+
+
+def number_turns(ranged: DataFrame, doc_id_base: int = 0) -> DataFrame:
+    """``range_turns`` output → its turns + ``doc_id``, sorted within each
+    partition.  Asserts the per-conversation ``turn_idx`` contiguity that
+    makes doc_ids dense (FIXTURES.md §2)."""
+    stats = ranged.groupBy(F.spark_partition_id().alias("pid")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.when(F.col("_bad"), F.col("conv_id"))).alias("bad_conv"),
     ).collect()
     bad = sorted(r["bad_conv"] for r in stats if r["bad_conv"] is not None)
     if bad:
-        raise ValueError(
-            f"turn_idx not contiguous/unique for conv_id={bad[0]}; "
-            "dense docID scheme requires 0..n-1 per conversation"
-        )
-    part_sums = {r["pid"]: r["s"] for r in stats}
-    offsets = {}
-    acc = 0
-    for pid in sorted(part_sums):
-        offsets[pid] = acc
-        acc += int(part_sums[pid])
-
-    def add_offsets(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        running: dict[int, int] = {}
-        for pdf in it:
-            if pdf.empty:
-                continue
-            pid = int(pdf["pid"].iloc[0])
-            start = running.get(pid, offsets[pid])
-            cum = pdf["n_turns"].cumsum().shift(fill_value=0) + start
-            running[pid] = int(start + pdf["n_turns"].sum())
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"],
-                    "n_turns": pdf["n_turns"],
-                    "conv_offset": cum.astype("int64"),
-                }
-            )
-
-    out = csorted.mapInPandas(
-        add_offsets, schema="conv_id string, n_turns long, conv_offset long"
-    )
-    # materialization note: callers that need csorted released should
-    # checkpoint/persist `out`; for build jobs the offsets frame is small
-    # relative to turns and is consumed once into a join.
-    return out
+        raise ValueError(f"turn_idx not contiguous/unique for conv_id={bad[0]}; "
+                         "dense docID scheme requires 0..n-1 per conversation")
+    offsets = partition_offsets({int(r["pid"]): int(r["n"]) for r in stats}) or [0]
+    lits = [F.lit(o).cast("long") for o in offsets]
+    offset = F.element_at(F.array(*lits), F.spark_partition_id() + 1)
+    pos = F.monotonically_increasing_id().bitwiseAND((1 << _ROW_BITS) - 1)
+    return ranged.drop("_bad").withColumn("doc_id", F.lit(int(doc_id_base)) + offset + pos)
 
 
 def assign_doc_ids(
     transcripts: DataFrame, num_partitions: int = 0, doc_id_base: int = 0
 ) -> DataFrame:
     """transcripts → transcripts + ``doc_id`` (dense, deterministic).
-
-    ``doc_id_base`` offsets the whole id space — incremental batches appended
-    to an existing index (streaming/incremental.py, merge.py) pass the
-    current corpus size so doc_id spaces stay disjoint and range-ordered.
-
-    The offsets⋈transcripts join is an equi-join on conv_id; AQE broadcasts
-    it when the conversations side is small, and at 10^12-turn scale it is a
-    plain shuffled equi-join co-partitioned with downstream per-conv work.
-    """
-    offs = conversation_offsets(transcripts, num_partitions).select(
-        "conv_id", "conv_offset"
-    )
-    return transcripts.join(offs, "conv_id").withColumn(
-        "doc_id",
-        F.lit(int(doc_id_base)) + F.col("conv_offset") + F.col("turn_idx").cast("long"),
-    ).drop("conv_offset")
+    ``doc_id_base`` offsets the id space (incremental appends pass the
+    current corpus size).  The persisted turns stay cached under the result;
+    the build's docs stage calls the two steps itself to release them."""
+    ranged = range_turns(transcripts, num_partitions)
+    try:
+        return number_turns(ranged, doc_id_base)
+    except BaseException:
+        ranged.unpersist()
+        raise

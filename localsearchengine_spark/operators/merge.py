@@ -4,16 +4,19 @@ BASELINE.json:6: "distributed segment merge with per-partition lineage
 checkpoints".  Merges k complete indexes (segments) whose doc_id spaces are
 disjoint into one index.
 
-Two paths:
+Doc store: doc_ids are already globally unique, so the merged ``docs/`` is
+the inputs' files hard-linked (copied when a link fails) in doc-range
+order — no rewrite; ranges and row counts come from the parquet footers,
+with no Spark job.  Postings are always rewritten (block bounds depend on
+the merged avgdl), on one of two paths:
 
-* **Ordered fast path** (the common case: incremental batches and lineage
-  groups are appended, *contiguous* doc_id ranges): blocks are
-  self-contained (codec.py), so a term's merged posting list is just its
-  segment rows in (segment, salt) order.  The merge is then a pure
-  DataFrame job — union → renumber salt = seg_idx·SALT_STRIDE + salt →
-  recompute block score bounds from (max_tf, min_dl) under the merged
-  corpus avgdl with JVM `transform()` expressions.  Zero Python in the
-  plan, zero decode, one shuffle-free write (plus the dictionary groupBy).
+* **Ordered fast path** (the common case: incremental batches are
+  appended, *contiguous* doc_id ranges): blocks are self-contained
+  (codec.py), so a term's merged posting list is just its segment rows in
+  (segment, salt) order.  The merge is then a pure DataFrame job — union →
+  renumber salts densely by (seg, salt) per term → recompute block score
+  bounds from (max_tf, min_dl) under the merged corpus avgdl with JVM
+  `transform()` expressions.  Zero Python in the plan, zero decode.
 
 * **Interleaved fallback**: doc ranges overlap (but doc_ids are still
   globally unique across segments) — repartition by term and k-way merge
@@ -26,6 +29,7 @@ Two paths:
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
 
@@ -37,6 +41,25 @@ from pyspark.sql import functions as F
 from localsearchengine_spark.config import BuildConfig
 from localsearchengine_spark.operators import codec
 from localsearchengine_spark.utils import atomic_write_json, read_json
+
+
+def _docs_files(index_dir: str) -> list[tuple[int, int, int, str]]:
+    """(min doc_id, max doc_id, rows, path) of each non-empty docs file,
+    from its parquet footer."""
+    import pyarrow.parquet as pq
+
+    out, ddir = [], os.path.join(index_dir, "docs")
+    for path in [os.path.join(ddir, f) for f in sorted(os.listdir(ddir)) if f[0] not in "_."]:
+        md = pq.read_metadata(path)
+        col = md.schema.names.index("doc_id")
+        sts = [md.row_group(g).column(col).statistics for g in range(md.num_row_groups)]
+        if md.num_rows == 0:
+            continue
+        if any(st is None or not st.has_min_max for st in sts):
+            raise RuntimeError(f"docs file {path} has no doc_id statistics in its footer")
+        out.append((min(st.min for st in sts), max(st.max for st in sts), md.num_rows, path))
+    return out
+
 
 def _bound_expr(max_tf, min_dl, k1: float, b: float, avgdl: float):
     from localsearchengine_spark.functions.bm25 import tf_norm_column
@@ -68,7 +91,10 @@ def merge_indexes(
 ) -> dict:
     """Merge complete indexes at ``index_dirs`` into a new index at
     ``out_dir``.  Returns the merged meta dict.  ``force_path`` overrides
-    path selection ("ordered"/"interleaved") — tests and external segments."""
+    path selection ("ordered"/"interleaved") — tests and external segments.
+
+    ``out_dir/docs`` links every input docs file (P more per append);
+    ``delete.compact(spark, out_dir, new_dir)`` rewrites it into P files."""
     t0 = time.time()
     metas = [read_json(os.path.join(d, "meta.json")) for d in index_dirs]
     for m, d in zip(metas, index_dirs):
@@ -86,16 +112,11 @@ def merge_indexes(
     avgdl = total_tokens / n_docs if n_docs else 0.0
 
     # ---- doc-range layout: ordered fast path vs interleaved fallback -------
-    ranges = []
-    for d in index_dirs:
-        r = (
-            spark.read.parquet(os.path.join(d, "docs"))
-            .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"),
-                 F.count(F.lit(1)).alias("n"))
-            .collect()[0]
-        )
-        ranges.append((int(r["lo"]), int(r["hi"]), int(r["n"]), d))
-    ranges.sort()
+    files = [_docs_files(d) for d in index_dirs]
+    ranges = sorted(
+        (min(f[0] for f in fs), max(f[1] for f in fs), sum(f[2] for f in fs), d)
+        for d, fs in zip(index_dirs, files)
+    )
     total_n = sum(r[2] for r in ranges)
     if total_n != n_docs:
         raise RuntimeError("docs tables inconsistent with metas")
@@ -106,12 +127,16 @@ def merge_indexes(
 
     os.makedirs(out_dir, exist_ok=True)
 
-    # ---- docs: union (doc_ids already globally unique) ----------------------
-    docs = None
-    for d in index_dirs:
-        part = spark.read.parquet(os.path.join(d, "docs"))
-        docs = part if docs is None else docs.unionByName(part)
-    docs.write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
+    # ---- docs: link the inputs' files (doc_ids already globally unique) ----
+    docs_out = os.path.join(out_dir, "docs")
+    shutil.rmtree(docs_out, ignore_errors=True)
+    os.makedirs(docs_out)
+    for k, f in enumerate(sorted(f for fs in files for f in fs)):
+        dst = os.path.join(docs_out, f"part-{k:05d}.parquet")
+        try:
+            os.link(f[3], dst)
+        except OSError:  # another filesystem, or no hard links
+            shutil.copyfile(f[3], dst)
 
     # ---- postings -----------------------------------------------------------
     posts = None
@@ -157,8 +182,6 @@ def merge_indexes(
     # merging must never resurrect a deleted doc.  Stats stay the inputs'
     # as-built sums, consistent with tombstone semantics (compact() is the
     # pressure valve that folds deletes into the stats).
-    import numpy as np
-
     from localsearchengine_spark.operators.delete import delete_docs, load_tombstones
 
     all_ts = np.unique(

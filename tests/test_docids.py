@@ -5,7 +5,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from localsearchengine_spark.operators.docids import assign_doc_ids, conversation_offsets
+from localsearchengine_spark.operators.docids import assign_doc_ids, partition_offsets
 
 
 def _expected_doc_ids(pdf: pd.DataFrame) -> dict[tuple[str, int], int]:
@@ -49,9 +49,22 @@ def test_partition_count_invariance(spark, transcripts_small):
     assert a == b
 
 
-def test_contiguity_validation(spark):
+@pytest.mark.parametrize("turns", [(0, 2), (0, 0, 1), (1, 2)], ids=["gap", "dup", "start1"])
+def test_contiguity_validation(spark, turns):
     bad = spark.createDataFrame(
-        [("c1", 0, "x"), ("c1", 2, "y")], "conv_id string, turn_idx int, text string"
+        [("c0", 0, "a")] + [("c1", t, "x") for t in turns],
+        "conv_id string, turn_idx int, text string",
     )
     with pytest.raises(ValueError, match="contiguous"):
-        conversation_offsets(bad, 2)
+        assign_doc_ids(bad, 2)
+
+
+def test_partition_offsets_prefix_and_row_field_limit():
+    """Offsets are the exclusive prefix of the per-partition counts (empty
+    partitions count 0); a partition past the 33-bit row field of
+    monotonically_increasing_id must fail loudly, not wrap."""
+    assert partition_offsets({0: 3, 2: 5, 3: 1}) == [0, 3, 3, 8]
+    assert partition_offsets({}) == []
+    assert partition_offsets({0: 2**33 - 1, 1: 4}) == [0, 2**33 - 1]
+    with pytest.raises(ValueError, match="2\\^33"):
+        partition_offsets({0: 5, 1: 2**33})

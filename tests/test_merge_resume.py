@@ -5,6 +5,10 @@ from __future__ import annotations
 import os
 import shutil
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 import pytest
 
 from localsearchengine_spark.build import build_index, resume
@@ -56,6 +60,33 @@ def test_merge_ordered_fast_path(spark, built_index, transcripts_small, tmp_path
     got = _query_all(Index(spark, out), queries)
     exp = _query_all(Index(spark, full_idx), queries)
     assert got == exp
+
+    # merged docs/ holds exactly the inputs' rows ...
+    def docs(d):
+        return ds.dataset(os.path.join(d, "docs")).to_table().sort_by("doc_id")
+
+    assert docs(out).equals(pa.concat_tables([docs(ia), docs(ib)]).sort_by("doc_id"))
+    # ... in files of disjoint, sorted doc_id ranges (Index.fetch_docs prunes
+    # files by their min/max, so overlapping files would read more)
+    spans = []
+    for name in sorted(os.listdir(os.path.join(out, "docs"))):
+        ids = pq.read_table(os.path.join(out, "docs", name), columns=["doc_id"])
+        ids = ids["doc_id"].to_numpy()
+        assert len(ids) and (np.diff(ids) > 0).all(), name
+        spans.append((int(ids[0]), int(ids[-1])))
+    spans.sort()
+    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
+    # ... and owns its files: the merged index outlives its inputs
+    shutil.rmtree(ia)
+    shutil.rmtree(ib)
+    merged = Index(spark, out)
+    assert _query_all(merged, queries) == exp
+    fetched = merged.fetch_docs([0, n_a - 1, n_a, len(pdf) - 1])
+    assert [fetched[d]["text"] for d in sorted(fetched)] == [
+        pdf.sort_values(["conv_id", "turn_idx"])["text"].iloc[i]
+        for i in (0, n_a - 1, n_a, len(pdf) - 1)
+    ]
+    assert spark.read.parquet(os.path.join(out, "docs")).count() == len(pdf)
 
 
 def test_merge_interleaved_fallback(spark, built_index, transcripts_small, tmp_path):

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from localsearchengine_spark.operators.search import Index
 from localsearchengine_spark.sources.fixtures import (
     golden_queries,
@@ -100,3 +102,33 @@ def test_interrupted_swap_recovers(spark, tmp_path):
     ix.process_batch(spark.createDataFrame(make_transcripts(100, seed=3)), epoch_id=1)
     meta = read_json(os.path.join(live, "meta.json"))
     assert meta["n_docs"] == 400  # 300 recovered + 100 appended, not 100
+
+
+def test_builds_and_appends_leave_no_cached_frames(spark, tmp_path):
+    """The docs stage persists the range-partitioned turns (text included)
+    to number them; every build — each micro-batch's segment build too —
+    must release them, also when the contiguity check rejects the input.
+    A leak would pin one cached frame per batch for the session's life."""
+    from localsearchengine_spark.build import build_index
+
+    def persistent_rdds_empty():
+        return spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+
+    spark.catalog.clearCache()  # direct assign_doc_ids callers own their caches
+    conf = BuildConfig(num_partitions=4, hot_df_threshold=10**9)
+    for seed in (1, 2):
+        src = str(tmp_path / f"t{seed}.parquet")
+        write_transcripts_parquet(make_transcripts(200, seed=seed), src)
+        build_index(spark, src, str(tmp_path / f"idx{seed}"), conf)
+    assert persistent_rdds_empty()
+    ix = IncrementalIndexer(spark, str(tmp_path / "idx1"), str(tmp_path / "work"), conf)
+    ix.process_batch(spark.createDataFrame(make_transcripts(100, seed=3)), epoch_id=0)
+    assert persistent_rdds_empty()
+
+    bad = make_transcripts(100, seed=4)
+    bad.loc[0, "turn_idx"] += 1000  # a gap (or a non-zero start) in one conversation
+    src = str(tmp_path / "bad.parquet")
+    write_transcripts_parquet(bad, src)
+    with pytest.raises(ValueError, match="contiguous"):
+        build_index(spark, src, str(tmp_path / "idx_bad"), conf)
+    assert persistent_rdds_empty()
