@@ -38,21 +38,19 @@ def _postings_scan(spark: SparkSession, index_dir: str, terms: list[str]) -> Dat
     files the dictionary maps the terms to (per-file pid stats make the
     pushed pid filter skip whole row groups; merged segments carry pid -1
     and skip the pruning)."""
-    rows = spark.read.parquet(os.path.join(index_dir, "postings"))
+    import pyarrow.dataset as ds
+
     from localsearchengine_spark.sources import io as lse_io
 
-    dic_ds = lse_io.open_dataset(os.path.join(index_dir, "dictionary"))
-    if "pids" in dic_ds.schema.names:  # legacy indexes predate the pid map
-        import pyarrow.dataset as ds
-
-        dic = dic_ds.to_table(
-            columns=["term", "pids"],
-            filter=ds.field("term").isin(sorted(set(terms))),
-        )
-        pids = sorted({int(p) for ps in dic["pids"].to_pylist() for p in ps})
-        if pids and all(p >= 0 for p in pids):
-            rows = rows.filter(F.col("pid").isin(pids))
-    return rows.filter(F.col("term").isin(sorted(set(terms)))).select("term", "blocks")
+    terms = sorted(set(terms))
+    rows = spark.read.parquet(os.path.join(index_dir, "postings"))
+    dic = lse_io.open_dataset(os.path.join(index_dir, "dictionary")).to_table(
+        columns=["term", "pids"], filter=ds.field("term").isin(terms)
+    )
+    pids = sorted({int(p) for ps in dic["pids"].to_pylist() for p in ps})
+    if pids and all(p >= 0 for p in pids):
+        rows = rows.filter(F.col("pid").isin(pids))
+    return rows.filter(F.col("term").isin(terms)).select("term", "blocks")
 
 
 DECODED_POS_SCHEMA = DECODED_SCHEMA + ", pos array<long>"
@@ -63,15 +61,11 @@ def _decode_arrow(rows: DataFrame, with_pos: bool = False) -> DataFrame:
     With ``with_pos``, each posting's within-doc position run rides along
     as an array column (posting i owns tf[i] flat positions).
 
-    mapInArrow keeps the compressed block structs as Arrow buffers — per
-    RecordBatch, the per-block metadata becomes NumPy views and each varint
-    stream is ONE contiguous buffer slice decoded in a single vectorized
-    LEB128 pass (concatenated varint streams are themselves a valid
-    stream; blocks are self-contained, so `docids_from_deltas` restores
-    absolutes across block boundaries).  The earlier mapInPandas kernel
-    converted every block struct to a Python dict first — measured as the
-    dominant cost of the decode stage, dwarfing the actual varint work."""
-    from localsearchengine_spark.operators.search import _binary_offsets
+    mapInArrow keeps the compressed block structs as Arrow buffers and
+    `codec.decode_block_lists` decodes each varint stream of a RecordBatch
+    in one vectorized pass.  The earlier mapInPandas kernel converted every
+    block struct to a Python dict first — measured as the dominant cost of
+    the decode stage, dwarfing the actual varint work."""
 
     def decode(batches):
         import pyarrow as pa
@@ -80,27 +74,11 @@ def _decode_arrow(rows: DataFrame, with_pos: bool = False) -> DataFrame:
             if rb.num_rows == 0:
                 continue
             cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
-            la = cols["blocks"]
-            row_off = la.offsets.to_numpy().astype(np.int64)
-            flat = la.values
-            blk_lo, blk_hi = int(row_off[0]), int(row_off[-1])
-            if blk_hi == blk_lo:
+            dec = codec.decode_block_lists(cols["blocks"], with_pos)
+            if dec is None:
                 continue
-            n_all = flat.field("n").to_numpy().astype(np.int64)[blk_lo:blk_hi]
-            total = int(n_all.sum())
-            streams = {}
-            for name in ("doc", "tf", "dl") + (("pos",) if with_pos else ()):
-                ba = flat.field(f"{name}_bytes")
-                boffs = _binary_offsets(ba)
-                data = ba.buffers()[2]
-                streams[name] = bytes(data[boffs[blk_lo] : boffs[blk_hi]])
-            deltas = codec.decode_varints(streams["doc"], total)
-            doc_ids = codec.docids_from_deltas(deltas, n_all)
-            tfs = codec.decode_varints(streams["tf"], total).astype(np.int64)
-            dls = codec.decode_varints(streams["dl"], total).astype(np.int64)
-            cs = np.concatenate(([0], np.cumsum(n_all)))
-            per_row = cs[row_off - blk_lo][1:] - cs[row_off - blk_lo][:-1]
-            term_idx = np.repeat(np.arange(rb.num_rows, dtype=np.int64), per_row)
+            row_off, doc_ids, tfs, dls, pos = dec
+            term_idx = np.repeat(np.arange(rb.num_rows, dtype=np.int64), np.diff(row_off))
             arrays = [
                 cols["term"].take(pa.array(term_idx)),
                 pa.array(doc_ids, type=pa.int64()),
@@ -109,13 +87,10 @@ def _decode_arrow(rows: DataFrame, with_pos: bool = False) -> DataFrame:
             ]
             names = ["term", "doc_id", "tf", "dl"]
             if with_pos:
-                pos_flat = codec.decode_varints(
-                    streams["pos"], int(tfs.sum())
-                ).astype(np.int64)
                 tf_cum = np.concatenate(([0], np.cumsum(tfs))).astype(np.int32)
                 arrays.append(
                     pa.ListArray.from_arrays(
-                        pa.array(tf_cum), pa.array(pos_flat, type=pa.int64())
+                        pa.array(tf_cum), pa.array(pos, type=pa.int64())
                     )
                 )
                 names.append("pos")

@@ -1,9 +1,11 @@
 """A8 — delta+varint block compression of sorted docID postings.
 
 BASELINE.json:6 mandates "delta+varint block compression of sorted docID
-postings".  This module is pure NumPy (vectorized LEB128) so it runs inside
-the Arrow-batched ``applyInPandas``/``mapInPandas`` build stage (SURVEY.md
-§3.1 step 7) with no per-row Python.
+postings".  This module is pure NumPy (vectorized LEB128, no per-posting
+Python) and owns the posting-block format: the build's encode, the Arrow
+decode of whole ``blocks`` columns for the distributed paths
+(:func:`decode_block_lists`) and the driver-local lazy decode
+(:class:`StreamBlocks`) all live here.
 
 Block layout (per posting-list block of up to ``block_size`` postings):
   n            int32   postings in this block
@@ -11,11 +13,16 @@ Block layout (per posting-list block of up to ``block_size`` postings):
   tf_norm_max  float64 max over docs of tf/(tf + k1*(1-b+b*dl/avgdl)) —
                        block-max score bound = idf * (k1+1) * tf_norm_max
                        (Ding & Suel, SIGIR 2011)
+  max_tf       int64   max term frequency in the block  } recompute a valid
+  min_dl       int64   min document length in the block } bound under a new avgdl
   doc_bytes    binary  LEB128 varints of doc_id deltas (first = absolute)
   tf_bytes     binary  LEB128 varints of term frequencies
   dl_bytes     binary  LEB128 varints of document lengths (stored per posting
                        so query-time scoring needs no doc-table join — an
                        impact-style space/shuffle tradeoff, SURVEY.md §7.4)
+  pos_bytes    binary  LEB128 varints of each posting's ascending within-doc
+                       token positions (tf of them), concatenated; empty
+                       unless the index stores positions
 
 Blocks are self-contained (the first doc_id of each block is stored absolute,
 not as a delta from the previous block) so salted sub-postings and segments
@@ -173,34 +180,6 @@ def encode_blocks(
     return blocks
 
 
-def decode_blocks(blocks: list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inverse of :func:`encode_blocks` → (doc_ids, tfs, dls) int64 arrays.
-
-    Accepts :class:`Block` tuples or any objects/dicts with the same fields
-    (e.g. Spark Row structs).
-    """
-    doc_parts: list[np.ndarray] = []
-    tf_parts: list[np.ndarray] = []
-    dl_parts: list[np.ndarray] = []
-    for blk in blocks:
-        if isinstance(blk, dict):
-            n, dob, tfb, dlb = blk["n"], blk["doc_bytes"], blk["tf_bytes"], blk["dl_bytes"]
-        else:
-            n, dob, tfb, dlb = blk.n, blk.doc_bytes, blk.tf_bytes, blk.dl_bytes
-        deltas = decode_varints(bytes(dob), n)
-        doc_parts.append(np.cumsum(deltas.astype(np.int64)))
-        tf_parts.append(decode_varints(bytes(tfb), n).astype(np.int64))
-        dl_parts.append(decode_varints(bytes(dlb), n).astype(np.int64))
-    if not doc_parts:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    return (
-        np.concatenate(doc_parts),
-        np.concatenate(tf_parts),
-        np.concatenate(dl_parts),
-    )
-
-
 def docids_from_deltas(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
     """Concatenated per-block delta streams → absolute doc_ids in one pass.
 
@@ -267,3 +246,78 @@ def decode_block_positions(pos_bytes: bytes, tfs: np.ndarray) -> list[np.ndarray
     total = int(tfs.sum())
     flat = decode_varints(bytes(pos_bytes), total).astype(np.int64)
     return np.split(flat, np.cumsum(tfs)[:-1])
+
+
+def reorder_positions(
+    flat: np.ndarray, starts: np.ndarray, tfs: np.ndarray, order: np.ndarray
+) -> np.ndarray:
+    """Re-lay a flat per-posting position stream in a new posting order.
+
+    ``flat`` holds each posting's ``tfs[i]`` positions contiguously at
+    ``starts[i]``; the result is the same stream with postings permuted by
+    ``order`` — a vectorized gather (no Python loop over postings)."""
+    lens = tfs[order]
+    cum = np.concatenate(([0], np.cumsum(lens)))
+    idx = (
+        np.arange(cum[-1], dtype=np.int64)
+        - np.repeat(cum[:-1], lens)
+        + np.repeat(starts[order], lens)
+    )
+    return flat[idx]
+
+
+def binary_offsets(ba) -> np.ndarray:
+    """Value offsets of an Arrow Binary/LargeBinary array as int64.
+
+    Plain ``binary`` stores int32 offsets, which cap a column chunk's byte
+    payload at 2 GiB; readers switch to ``large_binary`` (int64 offsets)
+    beyond that — a 100× index can hit it, so both layouts are handled
+    instead of assuming int32.
+    """
+    import pyarrow as pa
+
+    if pa.types.is_large_binary(ba.type) or pa.types.is_large_string(ba.type):
+        dtype = np.int64
+    elif pa.types.is_binary(ba.type) or pa.types.is_string(ba.type):
+        dtype = np.int32
+    else:
+        raise TypeError(f"expected a (large_)binary array, got {ba.type}")
+    return np.frombuffer(ba.buffers()[1], dtype=dtype)[
+        ba.offset : ba.offset + len(ba) + 1
+    ].astype(np.int64)
+
+
+def decode_block_lists(la, with_pos: bool = False):
+    """Decode an Arrow ``list<block struct>`` array (one posting list per
+    row, e.g. a RecordBatch's ``blocks`` column) straight from its buffers.
+
+    Each varint stream of all rows is ONE contiguous buffer slice decoded in
+    a single LEB128 pass (concatenated varint streams are themselves a valid
+    stream; blocks are self-contained, so :func:`docids_from_deltas`
+    restores absolutes across block boundaries) — no Python object per
+    block.  Returns ``None`` when the rows hold no blocks, else
+    ``(row_off, doc_ids, tfs, dls, pos)``: row i owns postings
+    ``row_off[i]:row_off[i+1]`` of the int64 arrays, and ``pos`` (None
+    unless ``with_pos``) is the flat position stream in which posting j owns
+    ``tfs[j]`` positions."""
+    blk_off = la.offsets.to_numpy().astype(np.int64)
+    lo, hi = int(blk_off[0]), int(blk_off[-1])
+    if hi == lo:
+        return None
+    flat = la.values
+    counts = flat.field("n").to_numpy().astype(np.int64)[lo:hi]
+    total = int(counts.sum())
+
+    def stream(name: str) -> bytes:
+        ba = flat.field(f"{name}_bytes")
+        boffs = binary_offsets(ba)
+        return bytes(ba.buffers()[2][boffs[lo] : boffs[hi]])
+
+    doc_ids = docids_from_deltas(decode_varints(stream("doc"), total), counts)
+    tfs = decode_varints(stream("tf"), total).astype(np.int64)
+    dls = decode_varints(stream("dl"), total).astype(np.int64)
+    pos = None
+    if with_pos:
+        pos = decode_varints(stream("pos"), int(tfs.sum())).astype(np.int64)
+    cs = np.concatenate(([0], np.cumsum(counts)))
+    return cs[blk_off - lo], doc_ids, tfs, dls, pos

@@ -85,14 +85,14 @@ def _emit_surviving(
 ) -> DataFrame:
     """(term, salt, blocks) rows → the build's packed EMIT_SCHEMA rows with
     tombstoned postings dropped — the same Arrow-buffer decode as
-    `batch_query._decode_arrow`, but per-row grouping is preserved so the
-    output feeds `build_posting_partitions` directly (no explode, no extra
-    shuffle beyond the build's own salted repartition).  With ``with_pos``
-    the flat position stream rides along: posting i owns tf[i] positions,
-    so the posting keep-mask expands to positions with one np.repeat."""
+    `batch_query._decode_arrow` (`codec.decode_block_lists`), but per-row
+    grouping is preserved so the output feeds `build_posting_partitions`
+    directly (no explode, no extra shuffle beyond the build's own salted
+    repartition).  With ``with_pos`` the flat position stream rides along:
+    posting i owns tf[i] positions, so the posting keep-mask expands to
+    positions with one np.repeat."""
     from localsearchengine_spark.operators import codec
     from localsearchengine_spark.operators.postings import EMIT_SCHEMA, EMIT_SCHEMA_POS
-    from localsearchengine_spark.operators.search import _binary_offsets
 
     sc = postings.sparkSession.sparkContext
     ts_bc = sc.broadcast(tombstones)
@@ -105,31 +105,14 @@ def _emit_surviving(
             if rb.num_rows == 0:
                 continue
             cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
-            la = cols["blocks"]
-            row_off = la.offsets.to_numpy().astype(np.int64)
-            flat = la.values
-            blk_lo, blk_hi = int(row_off[0]), int(row_off[-1])
-            if blk_hi == blk_lo:
+            dec = codec.decode_block_lists(cols["blocks"], with_pos)
+            if dec is None:
                 continue
-            n_all = flat.field("n").to_numpy().astype(np.int64)[blk_lo:blk_hi]
-            total = int(n_all.sum())
-            streams = {}
-            for name in ("doc", "tf", "dl") + (("pos",) if with_pos else ()):
-                ba = flat.field(f"{name}_bytes")
-                boffs = _binary_offsets(ba)
-                data = ba.buffers()[2]
-                streams[name] = bytes(data[boffs[blk_lo] : boffs[blk_hi]])
-            deltas = codec.decode_varints(streams["doc"], total)
-            doc_ids = codec.docids_from_deltas(deltas, n_all)
-            tfs = codec.decode_varints(streams["tf"], total).astype(np.int64)
-            dls = codec.decode_varints(streams["dl"], total).astype(np.int64)
+            row_off, doc_ids, tfs, dls, pos = dec
             keep = ~_isin_sorted(doc_ids, ts)
             # per-row posting offsets → per-row KEPT offsets via one cumsum
-            cs = np.concatenate(([0], np.cumsum(n_all)))
-            row_posting_off = cs[row_off - blk_lo]
             kept_cum = np.concatenate(([0], np.cumsum(keep, dtype=np.int64)))
-            kept_off = kept_cum[row_posting_off]
-            offs = pa.array(kept_off.astype(np.int32))
+            offs = pa.array(kept_cum[row_off].astype(np.int32))
             arrays = [
                 cols["term"],
                 cols["salt"],
@@ -141,17 +124,13 @@ def _emit_surviving(
             ]
             names = ["term", "salt", "doc_ids", "tfs", "dls"]
             if with_pos:
-                pos_flat = codec.decode_varints(
-                    streams["pos"], int(tfs.sum())
-                ).astype(np.int64)
-                pos_keep = np.repeat(keep, tfs)
                 kept_tf_cum = np.concatenate(
                     ([0], np.cumsum(np.where(keep, tfs, 0), dtype=np.int64))
                 )
                 arrays.append(
                     pa.ListArray.from_arrays(
-                        pa.array(kept_tf_cum[row_posting_off].astype(np.int32)),
-                        pa.array(pos_flat[pos_keep], type=pa.int64()),
+                        pa.array(kept_tf_cum[row_off].astype(np.int32)),
+                        pa.array(pos[np.repeat(keep, tfs)], type=pa.int64()),
                     )
                 )
                 names.append("pos")

@@ -261,9 +261,7 @@ def emit_postings(
             ]
             names = ["term", "salt", "doc_ids", "tfs", "dls"]
             if with_pos:
-                from localsearchengine_spark.operators.merge import reorder_positions
-
-                flat = reorder_positions(
+                flat = codec.reorder_positions(
                     res["pos_flat"], res["pos_off"][:-1].astype(np.int64),
                     res["tf"], order,
                 )
@@ -357,9 +355,7 @@ def build_posting_partitions(
             if cur_pos:
                 flat = np.concatenate(cur_pos)
                 starts = np.cumsum(t) - t
-                from localsearchengine_spark.operators.merge import reorder_positions
-
-                pos = reorder_positions(flat, starts, t, order)
+                pos = codec.reorder_positions(flat, starts, t, order)
             d, t, L = d[order], t[order], L[order]
             if len(d) > 1 and (np.diff(d) <= 0).any():
                 raise ValueError(

@@ -24,6 +24,7 @@ from localsearchengine_spark.config import BM25Config, BuildConfig
 from localsearchengine_spark.functions.analyze import tokenize_text
 from localsearchengine_spark.functions.bm25 import tf_norm_np
 from localsearchengine_spark.operators import codec
+from localsearchengine_spark.operators.delete import _isin_sorted
 from localsearchengine_spark.operators.wand import wand_topk
 
 
@@ -83,21 +84,18 @@ class TermPostings:
         return hit
 
     def _mask_deleted(self, ids, tfs, dls):
-        if self._ts is None or len(ids) == 0:
+        if self._ts is None:
             return ids, tfs, dls
-        pos = np.searchsorted(self._ts, ids)
-        dead = self._ts[np.minimum(pos, len(self._ts) - 1)] == ids
-        if not dead.any():
+        live = ~_isin_sorted(ids, self._ts)
+        if live.all():
             return ids, tfs, dls
-        live = ~dead
         return ids[live], tfs[live], dls[live]
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
         if self._full is None:
             ids, tfs, dls = self._streams.decode_all()
             if self._ts is not None and len(ids):
-                pos = np.searchsorted(self._ts, ids)
-                live = self._ts[np.minimum(pos, len(self._ts) - 1)] != ids
+                live = ~_isin_sorted(ids, self._ts)
                 # per-block LIVE counts: consumers gathering block membership
                 # out of the full decode (wand's fast path) must align with
                 # the masked array, not the as-built block sizes
@@ -149,27 +147,6 @@ class TermPostings:
                 if j < len(bids) and bids[j] == did:
                     out[int(did)] = plist[j]
         return out
-
-
-def _binary_offsets(ba) -> np.ndarray:
-    """Value offsets of an Arrow Binary/LargeBinary array as int64.
-
-    Plain ``binary`` stores int32 offsets, which cap a column chunk's byte
-    payload at 2 GiB; readers switch to ``large_binary`` (int64 offsets)
-    beyond that — a 100× index can hit it, so both layouts are handled
-    instead of assuming int32.
-    """
-    import pyarrow as pa
-
-    if pa.types.is_large_binary(ba.type) or pa.types.is_large_string(ba.type):
-        dtype = np.int64
-    elif pa.types.is_binary(ba.type) or pa.types.is_string(ba.type):
-        dtype = np.int32
-    else:
-        raise TypeError(f"expected a (large_)binary array, got {ba.type}")
-    return np.frombuffer(ba.buffers()[1], dtype=dtype)[
-        ba.offset : ba.offset + len(ba) + 1
-    ].astype(np.int64)
 
 
 class Index:
@@ -327,7 +304,7 @@ class Index:
             # only the posting files that can contain the queried terms —
             # O(query terms) files instead of all P partitions
             dic = self.lookup(need)
-            pids = sorted({int(p) for r in dic.values() for p in r.get("pids") or []})
+            pids = sorted({int(p) for r in dic.values() for p in r["pids"]})
             if any(p < 0 for p in pids):
                 pids = []  # merged segments: no hash layout, scan the dataset
             for t in need:
@@ -365,7 +342,7 @@ class Index:
             )
             for name in names:
                 ba = flat.field(f"{name}_bytes")
-                boffs = _binary_offsets(ba)
+                boffs = codec.binary_offsets(ba)
                 bdata = ba.buffers()[2]
                 stream_raw[name] = (boffs, bdata)
             rows_by_term: dict[str, list[int]] = {}

@@ -109,7 +109,7 @@ def ensure_merged_documents_index(spark: SparkSession, sf_dir: str) -> str:
 
     The corpus is split at doc_id = N/2; each half is built as its own
     complete index with ``doc_id_base`` pinning its global doc_id range
-    (exactly the incremental-append layout A10's ordered fast path merges),
+    (disjoint ranges, exactly the incremental-append layout A10 merges),
     then ``merge_indexes`` combines them.  Queries over the merged index
     must therefore match the same whole-corpus oracle as a single build —
     merge ∘ build ≡ build."""

@@ -2,11 +2,12 @@
 
 The north rule (BASELINE.json:14) is a batch build + query engine, so this
 is an *extension*: new transcript conversations arriving on a stream are
-indexed as append segments and folded into the main index with the ordered
-fast-path merge (A10).  Each micro-batch must contain whole conversations
-(the deployment contract for the stream producer); its doc_id space starts
-at the current corpus size, so segments stay disjoint + range-ordered and
-the merge stays fully declarative.
+indexed as append segments and folded into the main index with the
+declarative segment merge (A10).  Each micro-batch must contain whole
+conversations (the deployment contract for the stream producer); its doc_ids
+start one above the live index's largest doc_id (read from the docs files'
+parquet footers), so segments stay disjoint and range-ordered also after
+``delete.compact`` has left the live ids sparse.
 
 Exactly-once despite foreachBatch's at-least-once replay semantics:
 
@@ -29,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from localsearchengine_spark.build import build_index
 from localsearchengine_spark.config import BuildConfig
-from localsearchengine_spark.operators.merge import merge_indexes
+from localsearchengine_spark.operators.merge import docs_files, merge_indexes
 from localsearchengine_spark.sources.io import TRANSCRIPTS_SCHEMA
 from localsearchengine_spark.utils import atomic_write_json, read_json
 
@@ -77,11 +78,8 @@ class IncrementalIndexer:
         staged = os.path.join(self.work_dir, f"batch-{epoch_id}")
         batch_df.write.mode("overwrite").parquet(staged)
 
-        base = 0
         have_main = os.path.exists(os.path.join(self.index_dir, "meta.json"))
-        if have_main:
-            main_meta = read_json(os.path.join(self.index_dir, "meta.json"))
-            base = int(main_meta["n_docs"]) + int(main_meta.get("doc_id_base", 0))
+        base = 1 + max(f[1] for f in docs_files(self.index_dir)) if have_main else 0
         seg_dir = os.path.join(self.work_dir, f"seg-{epoch_id}")
         if os.path.exists(seg_dir):
             shutil.rmtree(seg_dir)  # epoch replay: rebuild deterministically

@@ -126,7 +126,7 @@ def test_merge_carries_tombstones(spark, built_index, transcripts_small, tmp_pat
     from tests.test_merge_resume import _split_and_write
 
     _, _, pdf = built_index
-    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path), even_odd=False)
+    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path))
     ia, ib = str(tmp_path / "ia"), str(tmp_path / "ib")
     conf = BuildConfig(num_partitions=8, hot_df_threshold=300, block_size=64)
     build_index(spark, pa_, ia, conf)

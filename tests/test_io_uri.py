@@ -2,8 +2,7 @@
 fetch_postings / fetch_docs and decode_postings_df's pid pruning) goes
 through sources/io.py's pyarrow-filesystem abstraction, so a prod index on a
 URI filesystem works unchanged; and a corrupt dictionary RAISES instead of
-silently degrading to a full postings scan (only the legacy no-`pids` layout
-falls back)."""
+silently degrading to a full postings scan."""
 
 from __future__ import annotations
 
@@ -72,22 +71,6 @@ def test_corrupt_dictionary_raises(spark, index_copy):
             fh.write(b"not a parquet file")
     with pytest.raises(Exception):
         decode_postings_df(spark, index_copy, ["the"])
-
-
-def test_legacy_dictionary_without_pids_full_scans(spark, index_copy, built_index):
-    """The one tolerated fallback: an older index whose dictionary lacks the
-    ``pids`` column skips pruning but still answers correctly."""
-    import pyarrow.parquet as pq
-
-    dic_dir = os.path.join(index_copy, "dictionary")
-    files = [os.path.join(dic_dir, f) for f in os.listdir(dic_dir) if f.endswith(".parquet")]
-    for f in files:
-        t = pq.read_table(f)
-        pq.write_table(t.drop_columns(["pids"]), f)
-    queries = golden_queries()[:2]
-    legacy = run_queries(spark, Index(spark, index_copy), queries).collect()
-    fresh = run_queries(spark, Index(spark, built_index[0]), queries).collect()
-    assert sorted(map(tuple, legacy)) == sorted(map(tuple, fresh))
 
 
 def test_entry_helpers_workdirs_under_one_root():

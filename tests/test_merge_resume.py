@@ -24,12 +24,10 @@ from localsearchengine_spark.sources.fixtures import (
 CONF = BuildConfig(num_partitions=6, hot_df_threshold=300, block_size=64)
 
 
-def _split_and_write(pdf, tmp, even_odd: bool):
+def _split_and_write(pdf, tmp):
+    """Prefix split by conversation → two inputs with contiguous doc ranges."""
     convs = sorted(pdf["conv_id"].unique())
-    if even_odd:  # interleaved doc ranges → exercises the fallback path
-        a_set = set(convs[::2])
-    else:  # prefix split → contiguous ranges → ordered fast path
-        a_set = set(convs[: len(convs) * 3 // 5])
+    a_set = set(convs[: len(convs) * 3 // 5])
     a = pdf[pdf["conv_id"].isin(a_set)].reset_index(drop=True)
     b = pdf[~pdf["conv_id"].isin(a_set)].reset_index(drop=True)
     pa_, pb_ = os.path.join(tmp, "a.parquet"), os.path.join(tmp, "b.parquet")
@@ -49,13 +47,12 @@ def test_merge_ordered_fast_path(spark, built_index, transcripts_small, tmp_path
     must answer every golden query identically (bit-equal scores) to the
     single full build, because doc_ids line up with global conv order."""
     full_idx, _, pdf = built_index
-    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path), even_odd=False)
+    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path))
     ia, ib = str(tmp_path / "ia"), str(tmp_path / "ib")
     build_index(spark, pa_, ia, CONF)
     build_index(spark, pb_, ib, CONF, doc_id_base=n_a)
     out = str(tmp_path / "merged")
-    meta = merge_indexes(spark, [ia, ib], out)
-    assert meta["merge_path"] == "ordered"
+    merge_indexes(spark, [ia, ib], out)
     queries = golden_queries()[::4]
     got = _query_all(Index(spark, out), queries)
     exp = _query_all(Index(spark, full_idx), queries)
@@ -89,30 +86,14 @@ def test_merge_ordered_fast_path(spark, built_index, transcripts_small, tmp_path
     assert spark.read.parquet(os.path.join(out, "docs")).count() == len(pdf)
 
 
-def test_merge_interleaved_fallback(spark, built_index, transcripts_small, tmp_path):
-    """The decode→merge-sort→re-encode fallback must produce the same query
-    results as the declarative ordered path on the same segments (forced via
-    force_path), and duplicate doc_ids across segments must be rejected."""
-    full_idx, _, pdf = built_index
-    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path), even_odd=False)
-    ia, ib = str(tmp_path / "ia"), str(tmp_path / "ib")
-    build_index(spark, pa_, ia, CONF)
-    build_index(spark, pb_, ib, CONF, doc_id_base=n_a)
-    fast = str(tmp_path / "fast")
-    slow = str(tmp_path / "slow")
-    assert merge_indexes(spark, [ia, ib], fast)["merge_path"] == "ordered"
-    assert (
-        merge_indexes(spark, [ia, ib], slow, force_path="interleaved")["merge_path"]
-        == "interleaved"
-    )
-    queries = golden_queries()[::4]
-    assert _query_all(Index(spark, slow), queries) == _query_all(
-        Index(spark, fast), queries
-    )
-    # duplicate doc_id spaces must be rejected by the fallback's merge check
-    with pytest.raises(Exception):
-        merge_indexes(spark, [ia, ia], str(tmp_path / "bad"), force_path="interleaved")
-        spark.read.parquet(os.path.join(str(tmp_path / "bad"), "postings")).collect()
+def test_merge_rejects_overlapping_ranges(spark, built_index, tmp_path):
+    """Inputs whose doc_id ranges overlap are refused up front, before the
+    output directory exists (no half-linked docs/ left behind)."""
+    idx = built_index[0]
+    out = str(tmp_path / "bad")
+    with pytest.raises(ValueError, match="overlap"):
+        merge_indexes(spark, [idx, idx], out)
+    assert not os.path.exists(out)
 
 
 def test_resume_after_partial_failure(spark, transcripts_small, tmp_path):
@@ -157,22 +138,20 @@ def test_build_determinism_across_parallelism(spark, transcripts_small, tmp_path
     assert _query_all(Index(spark, i4), queries) == _query_all(Index(spark, i13), queries)
 
 
-def test_merge_positional_interleaved(spark, transcripts_small, tmp_path):
-    """Interleaved (decode→merge-sort→re-encode) merge of POSITIONAL
-    segments: the merged index must answer phrase queries identically to a
-    single full positional build (the round-1 NotImplementedError path)."""
+def test_merge_positional(spark, transcripts_small, tmp_path):
+    """Merge of POSITIONAL segments: the merged index must answer phrase
+    queries identically to a single full positional build."""
     path, pdf = transcripts_small
     pconf = BuildConfig(num_partitions=4, hot_df_threshold=300, block_size=64,
                         store_positions=True)
     full = str(tmp_path / "pfull")
     build_index(spark, path, full, pconf)
-    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path), even_odd=False)
+    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path))
     ia, ib = str(tmp_path / "pia"), str(tmp_path / "pib")
     build_index(spark, pa_, ia, pconf)
     build_index(spark, pb_, ib, pconf, doc_id_base=n_a)
     out = str(tmp_path / "pmerged")
-    meta = merge_indexes(spark, [ia, ib], out, force_path="interleaved")
-    assert meta["merge_path"] == "interleaved"
+    merge_indexes(spark, [ia, ib], out)
     mi, fi = Index(spark, out), Index(spark, full)
     for q in ('"the small batch"', '"fast scan"', '"join order" -dup', "spark"):
         assert mi.search(q, k=15, mode="wand") == fi.search(q, k=15, mode="wand"), q
@@ -180,10 +159,8 @@ def test_merge_positional_interleaved(spark, transcripts_small, tmp_path):
 
 def test_reorder_positions_scrambled():
     """The position gather must be correct under a genuinely out-of-order
-    permutation (overlapping doc ranges across external segments)."""
-    import numpy as np
-
-    from localsearchengine_spark.operators.merge import reorder_positions
+    permutation (packed chunks reach the build's encoder in any order)."""
+    from localsearchengine_spark.operators.codec import reorder_positions
 
     rng = np.random.default_rng(7)
     tfs = rng.integers(1, 5, size=50).astype(np.int64)
@@ -193,32 +170,3 @@ def test_reorder_positions_scrambled():
     got = reorder_positions(flat, starts, tfs, order)
     exp = np.concatenate([flat[starts[i]: starts[i] + tfs[i]] for i in order])
     assert (got == exp).all()
-
-
-def test_merge_pre_positions_segments(spark, transcripts_small, tmp_path):
-    """Version shim: segments written without the blocks[].pos_bytes field
-    (pre-positions layout) must merge cleanly, not fail analysis."""
-    from pyspark.sql import functions as F
-
-    path, pdf = transcripts_small
-    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path), even_odd=False)
-    ia, ib = str(tmp_path / "via"), str(tmp_path / "vib")
-    build_index(spark, pa_, ia, CONF)
-    build_index(spark, pb_, ib, CONF, doc_id_base=n_a)
-    # strip pos_bytes from one segment's postings, simulating an old index
-    posts = spark.read.parquet(os.path.join(ia, "postings"))
-    fields = [f for f in posts.schema["blocks"].dataType.elementType.fieldNames()
-              if f != "pos_bytes"]
-    stripped = posts.withColumn(
-        "blocks",
-        F.transform("blocks", lambda blk: F.struct(*[blk[f].alias(f) for f in fields])),
-    )
-    stripped.write.mode("overwrite").parquet(os.path.join(str(tmp_path), "olddir"))
-    import shutil as _sh
-    _sh.rmtree(os.path.join(ia, "postings"))
-    _sh.move(os.path.join(str(tmp_path), "olddir"), os.path.join(ia, "postings"))
-    out = str(tmp_path / "vmerged")
-    merge_indexes(spark, [ia, ib], out)
-    queries = golden_queries()[::10]
-    got = _query_all(Index(spark, out), queries)
-    assert any(len(v) for v in got.values())

@@ -132,3 +132,35 @@ def test_builds_and_appends_leave_no_cached_frames(spark, tmp_path):
     with pytest.raises(ValueError, match="contiguous"):
         build_index(spark, src, str(tmp_path / "idx_bad"), conf)
     assert persistent_rdds_empty()
+
+
+def test_append_after_compaction(spark, tmp_path):
+    """`delete.compact` keeps doc_ids, so the live ids are sparse afterwards
+    (n_docs < 1 + the largest id).  The next append must still number its
+    batch above every live id: numbering from n_docs overlaps the
+    survivors' range and the merge cannot take the batch."""
+    import numpy as np
+    import pyarrow.dataset as ds
+
+    from localsearchengine_spark.build import build_index
+    from localsearchengine_spark.operators.delete import compact, delete_docs
+
+    pdf = make_transcripts(600)
+    convs = sorted(pdf["conv_id"].unique())
+    first = pdf["conv_id"].isin(set(convs[: len(convs) // 2]))
+    a, b = pdf[first].reset_index(drop=True), pdf[~first].reset_index(drop=True)
+    src = str(tmp_path / "a.parquet")
+    write_transcripts_parquet(a, src)
+    conf = BuildConfig(num_partitions=4, hot_df_threshold=10**9)
+    built, live = str(tmp_path / "built"), str(tmp_path / "live")
+    build_index(spark, src, built, conf)
+    delete_docs(built, range(10, 40))
+    compact(spark, built, live)
+
+    ix = IncrementalIndexer(spark, live, str(tmp_path / "work"), conf)
+    ix.process_batch(spark.createDataFrame(b), epoch_id=0)
+    ids = ds.dataset(os.path.join(live, "docs")).to_table(columns=["doc_id"])
+    ids = ids["doc_id"].to_numpy()
+    assert len(np.unique(ids)) == len(ids)
+    assert len(ids) == len(a) - 30 + len(b)
+    assert ids.max() == len(a) + len(b) - 1
