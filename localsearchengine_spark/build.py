@@ -6,11 +6,12 @@ Index layout on disk (Parquet locally; Iceberg tables in prod — io.py):
       meta.json        build_id, BuildConfig, snapshot, N, avgdl, P, status
       docs/            doc_id, conv_id, turn_idx, role, tool, ts, text
       postings/        part-{pid}.parquet — term, salt, df, cf, max_tf_norm,
-                       n_blocks, pid, blocks array<struct<n,max_doc_id,
+                       n_blocks, blocks array<struct<n,max_doc_id,
                        tf_norm_max,max_tf,min_dl,doc_bytes,tf_bytes,
                        dl_bytes,pos_bytes>>   (task-written, A9; block
-                       layout in operators/codec.py)
-      dictionary/      term, df, cf, max_tf_norm, n_rows, n_blocks, pids
+                       layout in operators/codec.py; {pid} is the shuffle
+                       partition; readers find a term's rows by term alone)
+      dictionary/      term, df, cf, max_tf_norm, n_rows, n_blocks
       manifest/        postings-{pid}.json lineage markers + stage markers
 
 Resumability (A11, BASELINE.json:6 "per-partition lineage checkpoints for

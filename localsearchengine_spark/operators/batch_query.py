@@ -5,7 +5,7 @@ scale the postings for a large query batch don't fit one driver, so this path
 keeps everything in DataFrames:
 
     postings (term-filtered parquet scan, pushdown)
-      → mapInArrow decode (contiguous varint streams → long form)
+      → mapInArrow decode, once (contiguous varint streams → long form)
       → broadcast-join the exploded query set + per-term idf and fold slot
       → JVM Column-expression BM25 contribution  (whole-stage codegen)
       → groupBy(query_id, doc_id) per-slot sums, added in slot order
@@ -32,25 +32,10 @@ DECODED_SCHEMA = "term string, doc_id long, tf long, dl long"
 
 
 def _postings_scan(spark: SparkSession, index_dir: str, terms: list[str]) -> DataFrame:
-    """Term-filtered postings scan (compressed blocks, not yet decoded).
-
-    Besides the pushed term filter, the scan is pre-pruned to the partition
-    files the dictionary maps the terms to (per-file pid stats make the
-    pushed pid filter skip whole row groups; merged segments carry pid -1
-    and skip the pruning)."""
-    import pyarrow.dataset as ds
-
-    from localsearchengine_spark.sources import io as lse_io
-
-    terms = sorted(set(terms))
+    """Term-filtered postings scan (compressed blocks, not yet decoded); a
+    term's rows are found by ``term`` alone, the filter pushed down."""
     rows = spark.read.parquet(os.path.join(index_dir, "postings"))
-    dic = lse_io.open_dataset(os.path.join(index_dir, "dictionary")).to_table(
-        columns=["term", "pids"], filter=ds.field("term").isin(terms)
-    )
-    pids = sorted({int(p) for ps in dic["pids"].to_pylist() for p in ps})
-    if pids and all(p >= 0 for p in pids):
-        rows = rows.filter(F.col("pid").isin(pids))
-    return rows.filter(F.col("term").isin(terms)).select("term", "blocks")
+    return rows.filter(F.col("term").isin(sorted(set(terms))))
 
 
 DECODED_POS_SCHEMA = DECODED_SCHEMA + ", pos array<long>"
@@ -136,7 +121,7 @@ def facet_counts(
     whole result set, so the driver-local heap path doesn't apply).
 
     Shape for scale: the decode touches only the query terms' postings
-    (term + pid pruned scan); the match test is one hash aggregate on
+    (term-filtered scan); the match test is one hash aggregate on
     doc_id whose partial (map-side) combine collapses each doc's ≤|terms|
     rows before the shuffle; the facet join is doc_id-keyed against the
     metadata table (matched ids ≪ corpus, AQE picks the strategy) and the
@@ -156,21 +141,6 @@ def facet_counts(
         .groupBy(facet_col)
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-
-
-# AND queries whose rarest term has df below the selectivity cutoff are
-# pre-filtered with that term's (small) posting list before the big shuffle —
-# the classic rare∧hot search shape then shuffles df_rare rows per query
-# instead of Σ df_t.  Queries with no selective term skip the filter (the
-# candidate set would be as large as the thing it filters).  The cutoff
-# derives from corpus stats (round-2 verdict #5): a term is "rare" when it
-# matches ≤5% of the corpus, capped so a huge corpus doesn't call a
-# 100M-doc posting list rare.
-_SELECTIVE_DF_CAP = 1_000_000
-
-
-def _selective_df(n_docs: int) -> int:
-    return min(_SELECTIVE_DF_CAP, max(1, n_docs // 20))
 
 
 def _contrib_col(index: Index):
@@ -261,11 +231,11 @@ def run_queries(
     driver-local path, exclusion never changes the positive terms' idf or
     scores.
 
-    AND and OR run as one job: every block of every query term decodes,
-    then one (query, doc) fold ranks.  Skipping blocks by their score bound
-    (a two-phase block-max/MaxScore plan) lost to this at every measured
-    scale: its second scan and second shuffle cost more than the decode it
-    saved (BENCH.md round 3).
+    AND and OR run as one job: every block of every query term decodes
+    once, then one (query, doc) fold ranks.  Skipping blocks by their score
+    bound (a two-phase block-max/MaxScore plan), and pre-filtering AND by
+    its rarest term's postings, each lost to this: the second decode costs
+    more than it saves (BENCH.md round 3; "One postings decode per batch").
 
     The per-query top-k cut runs per partition before the query_id
     exchange only while the batch's largest k is at most Spark's
@@ -303,7 +273,6 @@ def run_queries(
     )
 
     excl_rows = []
-    excl_dic = {}
     if any(q.get("exclude") for q in queries):
         excl_terms = sorted({t for q in queries for t in q.get("exclude", [])})
         excl_dic = index.lookup(excl_terms)
@@ -320,49 +289,10 @@ def run_queries(
             doc_filter.select("doc_id").distinct(), "doc_id", "left_semi"
         )
 
-    # rare-term semi-join pre-filter (AND only): candidates from a second,
-    # term-pushdown-pruned scan of just the rare posting lists
-    cand = None
-    if mode == "and":
-        rare_rows = []
-        cutoff = _selective_df(index.n_docs)
-        for qd in queries:
-            terms = sorted(set(qd["terms"]))
-            present = [(int(dic[t]["df"]), t) for t in terms if t in dic]
-            if len(present) >= 2 and min(present)[0] <= cutoff:
-                rare_rows.append((int(qd["query_id"]), min(present)[1]))
-        if rare_rows:
-            rare_df = spark.createDataFrame(rare_rows, "query_id long, term string")
-            rare_terms = sorted({t for _, t in rare_rows})
-            # .distinct(): correctness of the left-join flag below requires
-            # unique (query_id, doc_id) candidates; a healthy index never
-            # yields duplicates, but a corrupt or externally-produced segment
-            # with duplicate postings must filter, not inflate, scores
-            # (cheap — bounded by the rare terms' df).
-            cand = (
-                decode_postings_df(spark, index.index_dir, rare_terms)
-                .join(F.broadcast(rare_df), "term")
-                .select("query_id", "doc_id")
-                .distinct()
-            )
-            filtered_qids = {qid for qid, _ in rare_rows}
-
     contrib = _contrib_col(index)
     joined = decoded.join(F.broadcast(qdf), "term").select(
         "query_id", "doc_id", "slot", "n_terms", "n_present", "k", contrib.alias("contrib")
     )
-    if cand is not None:
-        # one pass over the decoded scan: rows of filtered queries survive
-        # only when the (query, doc) pair appears in the rare-term
-        # candidate set (a left join + flag — NOT two filter branches
-        # unioned, which would execute the decode scan twice)
-        in_f = F.col("query_id").isin([int(q) for q in filtered_qids])
-        cand_flag = cand.withColumn("cand_hit", F.lit(1))
-        joined = (
-            joined.join(cand_flag, ["query_id", "doc_id"], "left")
-            .filter(~in_f | F.col("cand_hit").isNotNull())
-            .drop("cand_hit")
-        )
     if excl_rows:
         excl_qdf = spark.createDataFrame(excl_rows, "query_id long, term string")
         excl_pairs = (

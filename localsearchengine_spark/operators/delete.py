@@ -152,7 +152,10 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     an index built over the surviving corpus with the same docIDs (the
     fts12 driver gate pins this against the SQL oracle).  Positional
     indexes compact too: each surviving posting's position run rides
-    through the same kernel, so phrase queries keep working afterwards."""
+    through the same kernel, so phrase queries keep working afterwards.
+    The meta's ``doc_id_high_water`` keeps appends numbering above the
+    deleted ids too, so no deleted doc's id is reused."""
+    from localsearchengine_spark.operators.merge import next_doc_id
     from localsearchengine_spark.operators.postings import (
         build_posting_partitions,
         skew_report,
@@ -235,6 +238,7 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
             "skew": skew_report(manifest_rows),
             "compacted_from": index_dir,
             "deleted_docs": n_del,
+            "doc_id_high_water": next_doc_id(index_dir),
             "status": "complete",
         }
     )

@@ -53,6 +53,15 @@ def docs_files(index_dir: str) -> list[tuple[int, int, int, str]]:
     return out
 
 
+def next_doc_id(index_dir: str) -> int:
+    """One above every doc_id the index has held: 1 + the docs footers'
+    largest id, or the meta's ``doc_id_high_water`` (left by
+    ``delete.compact``, which may drop the largest ids) when larger."""
+    meta = read_json(os.path.join(index_dir, "meta.json"))
+    top = 1 + max(f[1] for f in docs_files(index_dir))
+    return max(top, int(meta.get("doc_id_high_water", 0)))
+
+
 def _bound_expr(max_tf, min_dl, k1: float, b: float, avgdl: float):
     from localsearchengine_spark.functions.bm25 import tf_norm_column
 
@@ -113,8 +122,8 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> d
     # ---- postings -----------------------------------------------------------
     posts = None
     for d in index_dirs:
-        part = spark.read.parquet(os.path.join(d, "postings")).withColumn(
-            "seg", F.lit(seg_order[d])
+        part = spark.read.parquet(os.path.join(d, "postings")).select(
+            "term", "salt", "df", "cf", "blocks", F.lit(seg_order[d]).alias("seg")
         )
         posts = part if posts is None else posts.unionByName(part)
     merged = _merge_ordered(posts, cfg.k1, cfg.b, avgdl)
@@ -135,6 +144,7 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> d
         "total_tokens": total_tokens,
         "avgdl": avgdl,
         "num_partitions": int(metas[0]["num_partitions"]),
+        "doc_id_high_water": max(next_doc_id(d) for d in index_dirs),
         "merged_from": len(index_dirs),
         "merge_elapsed_s": round(time.time() - t0, 3),
     }
@@ -187,8 +197,5 @@ def _merge_ordered(posts: DataFrame, k1: float, b: float, avgdl: float) -> DataF
             "max_tf_norm"
         ),
         F.size(new_blocks).cast("long").alias("n_blocks"),
-        # merged files do not follow the hash(term,salt) layout; the sentinel
-        # makes query-time partition pruning fall back to the full scan
-        F.lit(-1).cast("int").alias("pid"),
         new_blocks.alias("blocks"),
     )

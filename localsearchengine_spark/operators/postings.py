@@ -88,7 +88,6 @@ def postings_arrow_schema():
             pa.field("cf", pa.int64()),
             pa.field("max_tf_norm", pa.float64()),
             pa.field("n_blocks", pa.int64()),
-            pa.field("pid", pa.int32()),
             pa.field("blocks", pa.list_(block)),
         ]
     )
@@ -373,7 +372,6 @@ def build_posting_partitions(
                     "cf": int(t.sum()),
                     "max_tf_norm": float(max(blk.tf_norm_max for blk in blocks)),
                     "n_blocks": len(blocks),
-                    "pid": pid,
                     "blocks": [blk._asdict() for blk in blocks],
                 }
             )
@@ -479,7 +477,7 @@ def write_dictionary(spark, postings_dir: str, dict_dir: str) -> None:
     data = ds.dataset(postings_dir, format="parquet")
     if data.count_rows() <= _DICT_DRIVER_MAX_ROWS:
         tbl = data.to_table(
-            columns=["term", "df", "cf", "max_tf_norm", "n_blocks", "pid"]
+            columns=["term", "df", "cf", "max_tf_norm", "n_blocks"]
         )
         agg = (
             tbl.to_pandas()
@@ -490,7 +488,6 @@ def write_dictionary(spark, postings_dir: str, dict_dir: str) -> None:
                 max_tf_norm=("max_tf_norm", "max"),
                 n_rows=("term", "size"),
                 n_blocks=("n_blocks", "sum"),
-                pids=("pid", lambda x: sorted(set(int(v) for v in x))),
             )
             .reset_index()
         )
@@ -513,7 +510,6 @@ def write_dictionary(spark, postings_dir: str, dict_dir: str) -> None:
             F.max("max_tf_norm").alias("max_tf_norm"),
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("n_blocks").alias("n_blocks"),
-            F.sort_array(F.collect_set("pid")).alias("pids"),
         )
         .write.mode("overwrite")
         .parquet(dict_dir)

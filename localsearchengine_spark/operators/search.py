@@ -300,28 +300,8 @@ class Index:
         terms = sorted(set(terms))
         need = [t for t in terms if t not in self._cache]
         if need:
-            # partition pruning via the dictionary's per-term pid list: open
-            # only the posting files that can contain the queried terms —
-            # O(query terms) files instead of all P partitions
-            dic = self.lookup(need)
-            pids = sorted({int(p) for r in dic.values() for p in r["pids"]})
-            if any(p < 0 for p in pids):
-                pids = []  # merged segments: no hash layout, scan the dataset
-            for t in need:
-                if t not in dic:
-                    self._cache[t] = None
-            need = [t for t in need if t in dic]
-            if not need:
-                return {t: self._cache[t] for t in terms if self._cache.get(t)}
-            src = self._dataset("postings")
-            if pids:
-                files = [
-                    os.path.join(self.index_dir, "postings", f"part-{p:05d}.parquet")
-                    for p in pids
-                ]
-                if all(self._io.path_exists(f) for f in files):
-                    src = self._io.open_dataset(files)
-            tbl = src.to_table(
+            # found by term alone; a term with no rows caches None
+            tbl = self._dataset("postings").to_table(
                 columns=["term", "salt", "df", "blocks"],
                 filter=ds.field("term").isin(need),
             ).combine_chunks()

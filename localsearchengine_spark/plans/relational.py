@@ -882,8 +882,8 @@ def fts04(spark, sf_dir):
 # whole query set evaluated as ONE Spark job (decode scan → broadcast query
 # join → fixed-order partial-agg → per-query window top-k) vs an
 # independent per-query SQL oracle UNION ALL'd with query_id + rank.
-# Query shapes pin every branch: hot∧hot, rare∧hot (semi-join pre-filter),
-# 3-term, single-term, and a term absent from the corpus (empty result).
+# Query shapes: hot∧hot, rare∧hot, 3-term, single-term, and a term absent
+# from the corpus (empty result).
 # ---------------------------------------------------------------------------
 _FTS5_QUERIES = [
     {"query_id": 1, "terms": ["scan", "small"], "k": 10},
@@ -1381,7 +1381,7 @@ def fts27(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # FTS17 — distributed faceted search (A25): per facet value, the count of
 # ALL docs matching the conjunctive query — full recall over the decoded
-# postings (term+pid-pruned scan → map-side-combined match test → metadata
+# postings (term-filtered scan → map-side-combined match test → metadata
 # join), not a top-k.  Facet field comes from the documents metadata table.
 # ---------------------------------------------------------------------------
 _FTS17_TERMS = ["join", "spark"]  # sorted

@@ -5,9 +5,10 @@ is an *extension*: new transcript conversations arriving on a stream are
 indexed as append segments and folded into the main index with the
 declarative segment merge (A10).  Each micro-batch must contain whole
 conversations (the deployment contract for the stream producer); its doc_ids
-start one above the live index's largest doc_id (read from the docs files'
-parquet footers), so segments stay disjoint and range-ordered also after
-``delete.compact`` has left the live ids sparse.
+start one above every doc_id the live index has held (``merge.next_doc_id``:
+the docs files' parquet footers, or the high-water mark ``delete.compact``
+records), so segments stay disjoint and range-ordered, and a deleted doc's
+id is never handed out again.
 
 Exactly-once despite foreachBatch's at-least-once replay semantics:
 
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from localsearchengine_spark.build import build_index
 from localsearchengine_spark.config import BuildConfig
-from localsearchengine_spark.operators.merge import docs_files, merge_indexes
+from localsearchengine_spark.operators.merge import merge_indexes, next_doc_id
 from localsearchengine_spark.sources.io import TRANSCRIPTS_SCHEMA
 from localsearchengine_spark.utils import atomic_write_json, read_json
 
@@ -79,7 +80,7 @@ class IncrementalIndexer:
         batch_df.write.mode("overwrite").parquet(staged)
 
         have_main = os.path.exists(os.path.join(self.index_dir, "meta.json"))
-        base = 1 + max(f[1] for f in docs_files(self.index_dir)) if have_main else 0
+        base = next_doc_id(self.index_dir) if have_main else 0
         seg_dir = os.path.join(self.work_dir, f"seg-{epoch_id}")
         if os.path.exists(seg_dir):
             shutil.rmtree(seg_dir)  # epoch replay: rebuild deterministically

@@ -95,26 +95,29 @@ def test_batch_fold_and_topk_stay_in_the_jvm(spark, built_index):
     """The (query, doc) fold is a plain HashAggregate (no ObjectHashAggregate
     from a collected list) and the per-query top-k is cut per partition by a
     Partial WindowGroupLimit below the query_id exchange, so the decode is
-    the plan's only Python pass."""
+    the plan's only Python pass, and it runs once in both modes (AND has no
+    second decode of a rare term's postings; term00071 has df 3)."""
     from localsearchengine_spark.operators.batch_query import run_queries
     from localsearchengine_spark.operators.search import Index
 
     idx_dir, _, _ = built_index
     index = Index(spark, idx_dir)
     queries = [{"query_id": 0, "terms": ["spark", "join"], "k": 5},
-               {"query_id": 1, "terms": ["merge"], "k": 10}]
-    plan = plan_of(run_queries(spark, index, queries, mode="or"))
-    tree, _, details = plan.partition("\n\n\n")
-    nodes = {int(b[1:b.index(")")]): b for b in details.split("\n\n") if b.startswith("(")}
-    line_of = {int(line[line.rindex("(") + 1:-1]): i for i, line in enumerate(tree.splitlines())
-             if line.endswith(")")}
-    (partial,) = [i for i, b in nodes.items()
-                  if "WindowGroupLimit" in b.splitlines()[0] and b.rstrip().endswith("Partial")]
-    (exchange,) = [i for i, b in nodes.items()
-                   if re.search(r"hashpartitioning\(query_id#\d+L, \d+\)", b)]
-    assert "ObjectHashAggregate" not in plan
-    assert tree.count("MapInArrow") == 1  # the decode
-    assert line_of[exchange] < line_of[partial]  # the tree prints parents first
+               {"query_id": 1, "terms": ["merge"], "k": 10},
+               {"query_id": 2, "terms": ["spark", "term00071"], "k": 5}]
+    for mode in ("or", "and"):
+        plan = plan_of(run_queries(spark, index, queries, mode=mode))
+        tree, _, details = plan.partition("\n\n\n")
+        nodes = {int(b[1:b.index(")")]): b for b in details.split("\n\n") if b.startswith("(")}
+        line_of = {int(line[line.rindex("(") + 1:-1]): i
+                   for i, line in enumerate(tree.splitlines()) if line.endswith(")")}
+        (partial,) = [i for i, b in nodes.items()
+                      if "WindowGroupLimit" in b.splitlines()[0] and b.rstrip().endswith("Partial")]
+        (exchange,) = [i for i, b in nodes.items()
+                       if re.search(r"hashpartitioning\(query_id#\d+L, \d+\)", b)]
+        assert "ObjectHashAggregate" not in plan, mode
+        assert tree.count("MapInArrow") == 1, mode  # the decode
+        assert line_of[exchange] < line_of[partial], mode  # the tree prints parents first
 
 
 def test_b28_bucketed_join_is_shuffle_free(spark):

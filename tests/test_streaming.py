@@ -134,16 +134,22 @@ def test_builds_and_appends_leave_no_cached_frames(spark, tmp_path):
     assert persistent_rdds_empty()
 
 
-def test_append_after_compaction(spark, tmp_path):
+@pytest.mark.parametrize("deleted", [
+    pytest.param(lambda n: range(10, 40), id="ids_10_39"),
+    pytest.param(lambda n: range(n - 10, n), id="top_10_ids"),
+])
+def test_append_after_compaction(spark, tmp_path, deleted):
     """`delete.compact` keeps doc_ids, so the live ids are sparse afterwards
     (n_docs < 1 + the largest id).  The next append must still number its
-    batch above every live id: numbering from n_docs overlaps the
-    survivors' range and the merge cannot take the batch."""
+    batch above every id the index held: numbering from n_docs overlaps the
+    survivors' range and the merge cannot take the batch, and numbering
+    from the survivors' largest id hands the deleted top ids to new docs."""
     import numpy as np
     import pyarrow.dataset as ds
 
     from localsearchengine_spark.build import build_index
     from localsearchengine_spark.operators.delete import compact, delete_docs
+    from localsearchengine_spark.utils import read_json
 
     pdf = make_transcripts(600)
     convs = sorted(pdf["conv_id"].unique())
@@ -154,7 +160,8 @@ def test_append_after_compaction(spark, tmp_path):
     conf = BuildConfig(num_partitions=4, hot_df_threshold=10**9)
     built, live = str(tmp_path / "built"), str(tmp_path / "live")
     build_index(spark, src, built, conf)
-    delete_docs(built, range(10, 40))
+    gone = list(deleted(len(a)))
+    delete_docs(built, gone)
     compact(spark, built, live)
 
     ix = IncrementalIndexer(spark, live, str(tmp_path / "work"), conf)
@@ -162,5 +169,7 @@ def test_append_after_compaction(spark, tmp_path):
     ids = ds.dataset(os.path.join(live, "docs")).to_table(columns=["doc_id"])
     ids = ids["doc_id"].to_numpy()
     assert len(np.unique(ids)) == len(ids)
-    assert len(ids) == len(a) - 30 + len(b)
+    assert not np.isin(gone, ids).any()
+    assert len(ids) == len(a) - len(gone) + len(b)
     assert ids.max() == len(a) + len(b) - 1
+    assert read_json(os.path.join(live, "meta.json"))["doc_id_high_water"] == len(a) + len(b)
