@@ -5,13 +5,13 @@ Index layout on disk (Parquet locally; Iceberg tables in prod — io.py):
     index_dir/
       meta.json        build_id, BuildConfig, snapshot, N, avgdl, P, status
       docs/            doc_id, conv_id, turn_idx, role, tool, ts, text
-      postings/        part-{pid}.parquet — term, salt, df, cf, max_tf_norm,
-                       n_blocks, blocks array<struct<n,max_doc_id,
-                       tf_norm_max,max_tf,min_dl,doc_bytes,tf_bytes,
-                       dl_bytes,pos_bytes>>   (task-written, A9; block
-                       layout in operators/codec.py; {pid} is the shuffle
-                       partition; readers find a term's rows by term alone)
-      dictionary/      term, df, cf, max_tf_norm, n_rows, n_blocks
+      postings/        part-{pid}.parquet — term, salt, df, cf, blocks
+                       array<struct<n,max_doc_id,tf_norm_max,max_tf,min_dl,
+                       doc_bytes,tf_bytes,dl_bytes,pos_bytes>>  (task-
+                       written, A9; block layout declared once in
+                       operators/codec.py; {pid} is the shuffle partition;
+                       readers find a term's rows by term alone)
+      dictionary/      term, df, cf
       manifest/        postings-{pid}.json lineage markers + stage markers
 
 Resumability (A11, BASELINE.json:6 "per-partition lineage checkpoints for
@@ -59,13 +59,20 @@ def _docs_complete_marker(d: str) -> str:
 
 
 def _completed_pids(index_dir: str) -> set[int]:
+    """Partitions whose manifest is backed by its postings file: the file
+    exists with the manifest's byte size (an empty partition's manifest
+    records 0 bytes and has no file).  Any other partition is rebuilt."""
     mdir = os.path.join(index_dir, "manifest")
     if not os.path.isdir(mdir):
         return set()
     out = set()
     for f in os.listdir(mdir):
         if f.startswith("postings-") and f.endswith(".json"):
-            out.add(int(f[len("postings-"):-len(".json")]))
+            pid = int(f[len("postings-"):-len(".json")])
+            path = os.path.join(index_dir, "postings", f"part-{pid:05d}.parquet")
+            size = os.path.getsize(path) if os.path.exists(path) else 0
+            if size == int(read_json(os.path.join(mdir, f))["bytes"]):
+                out.add(pid)
     return out
 
 

@@ -5,14 +5,17 @@ per-row Python".  The analyzer is THE #1 rank-identity knob (SURVEY.md §2.4):
 the exact rule of the reference's ``Split.pm`` is unrecoverable in this
 sandbox, so the rule lives in :class:`BM25Config` (lowercase + keep runs of
 ``[0-9a-z_]``) and is shared verbatim by the build path, the query path, and
-the test oracles' SQL.
+the test oracles' SQL.  Every form lowercases with Arrow ``utf8_lower``,
+one code point to one code point ('İ' → 'i'), so a query analyzes text
+exactly as the build indexed it; Python's ``str.lower`` (and Spark's
+``lower``) give 'i̇', an 'i' plus a combining dot that splits the token.
 
 Three forms of the same analyzer:
   * :func:`tokenize_text` — driver-side pure function (query analysis, A13)
   * :func:`tokenize_pandas` — pd.Series[str] → pd.Series[list[str]] (build, A3)
   * :func:`term_freq_frame` — batch text → long-form (row, term, tf, dl)
-    pandas frame, the fused posting-emission kernel (A4) used by
-    ``mapInPandas`` so no per-(doc,term) shuffle is ever needed for tf.
+    pandas frame, the fused posting-emission kernel (A4), so no
+    per-(doc,term) shuffle is ever needed for tf.
 """
 
 from __future__ import annotations
@@ -21,6 +24,8 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from localsearchengine_spark.config import BM25Config
 
@@ -30,7 +35,7 @@ def tokenize_text(text: str, cfg: BM25Config | None = None) -> list[str]:
     if text is None:
         return []
     if cfg.lowercase:
-        text = text.lower()
+        text = pc.utf8_lower(pa.scalar(text, pa.string())).as_py()
     return re.findall(cfg.token_pattern, text)
 
 
@@ -38,7 +43,8 @@ def tokenize_pandas(s: pd.Series, cfg: BM25Config | None = None) -> pd.Series:
     cfg = cfg or BM25Config()
     s = s.fillna("")
     if cfg.lowercase:
-        s = s.str.lower()
+        low = pc.utf8_lower(pa.array(s, type=pa.string()))
+        s = pd.Series(low.to_numpy(zero_copy_only=False), index=s.index, dtype=object)
     return s.str.findall(cfg.token_pattern)
 
 
@@ -78,8 +84,6 @@ def term_freq_frame(
     # (term_freq_arrow) — the analyzer is the #1 rank-identity knob, so
     # there must be exactly one class-pattern tokenize+count kernel; the
     # independent reference stays _term_freq_frame_pandas (findall path).
-    import pyarrow as pa
-
     res = term_freq_arrow(
         pa.array(texts.reset_index(drop=True), type=pa.string()),
         cfg,
@@ -118,9 +122,6 @@ def term_freq_arrow(
     :func:`term_freq_frame` (shared tokenize rule; equivalence-tested).
     """
     cfg = cfg or BM25Config()
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     if isinstance(texts, pa.ChunkedArray):
         texts = texts.combine_chunks()
     sep = separator_pattern(cfg)
@@ -225,9 +226,6 @@ def doc_lengths(texts: pd.Series, cfg: BM25Config | None = None) -> np.ndarray:
     available for the pattern, else findall)."""
     cfg = cfg or BM25Config()
     try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         arr = pa.array(texts.reset_index(drop=True).fillna(""), type=pa.string())
         if cfg.lowercase:
             arr = pc.utf8_lower(arr)

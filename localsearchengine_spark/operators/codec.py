@@ -1,11 +1,12 @@
 """A8 — delta+varint block compression of sorted docID postings.
 
 BASELINE.json:6 mandates "delta+varint block compression of sorted docID
-postings".  This module is pure NumPy (vectorized LEB128, no per-posting
-Python) and owns the posting-block format: the build's encode, the Arrow
-decode of whole ``blocks`` columns for the distributed paths
-(:func:`decode_block_lists`) and the driver-local lazy decode
-(:class:`StreamBlocks`) all live here.
+postings".  This module owns the posting-block format: its one declaration
+(:data:`BLOCK_FIELDS`), the build's vectorized encode straight into Arrow
+(:func:`encode_blocks`), the Arrow decode of whole ``blocks`` columns for
+the distributed paths (:func:`decode_block_lists`) and the driver-local
+lazy decode (:class:`StreamBlocks`).  All of it is NumPy over whole
+streams (vectorized LEB128), with no Python per posting or per block.
 
 Block layout (per posting-list block of up to ``block_size`` postings):
   n            int32   postings in this block
@@ -14,7 +15,10 @@ Block layout (per posting-list block of up to ``block_size`` postings):
                        block-max score bound = idf * (k1+1) * tf_norm_max
                        (Ding & Suel, SIGIR 2011)
   max_tf       int64   max term frequency in the block  } recompute a valid
-  min_dl       int64   min document length in the block } bound under a new avgdl
+  min_dl       int64   min document length in the block } bound under a new
+                       avgdl without decoding: tf_norm rises with tf and falls
+                       with dl, so bound(max_tf, min_dl, avgdl') ≥ every doc's
+                       tf_norm (the segment merge, A10, relies on this)
   doc_bytes    binary  LEB128 varints of doc_id deltas (first = absolute)
   tf_bytes     binary  LEB128 varints of term frequencies
   dl_bytes     binary  LEB128 varints of document lengths (stored per posting
@@ -31,9 +35,20 @@ can be concatenated in doc_id-range order without re-encoding (A7/A10).
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
 import numpy as np
+import pyarrow as pa
+
+BLOCK_FIELDS = (
+    ("n", pa.int32()),
+    ("max_doc_id", pa.int64()),
+    ("tf_norm_max", pa.float64()),
+    ("max_tf", pa.int64()),
+    ("min_dl", pa.int64()),
+    ("doc_bytes", pa.binary()),
+    ("tf_bytes", pa.binary()),
+    ("dl_bytes", pa.binary()),
+    ("pos_bytes", pa.binary()),
+)
 
 _MASK7 = np.uint64(0x7F)
 _SHIFT7 = np.uint64(7)
@@ -62,11 +77,6 @@ def encode_varints_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     return out[mask].tobytes(), lengths
 
 
-def encode_varints(values: np.ndarray) -> bytes:
-    """Vectorized LEB128 encode of a uint64 array."""
-    return encode_varints_with_lengths(values)[0]
-
-
 def decode_varints(buf: bytes, count: int) -> np.ndarray:
     """Vectorized LEB128 decode → uint64 array of ``count`` values."""
     if count == 0:
@@ -87,97 +97,90 @@ def decode_varints(buf: bytes, count: int) -> np.ndarray:
     return values
 
 
-class Block(NamedTuple):
-    n: int
-    max_doc_id: int
-    tf_norm_max: float
-    # max_tf/min_dl make a valid (looser) score bound recomputable under a
-    # *changed* avgdl without decoding — tf_norm is monotone ↑ in tf and
-    # ↓ in dl, so bound(max_tf, min_dl, avgdl') ≥ every doc's tf_norm.
-    # Segment merge (A10) uses this to stay declarative (no re-encode).
-    max_tf: int
-    min_dl: int
-    doc_bytes: bytes
-    tf_bytes: bytes
-    dl_bytes: bytes
-    # varints of within-document token positions, ascending, concatenated
-    # per posting (tf positions each); b"" when the index stores none
-    pos_bytes: bytes = b""
+def block_type() -> pa.DataType:
+    """The Arrow struct of one posting block (layout in the module
+    docstring), built from :data:`BLOCK_FIELDS`."""
+    return pa.struct([pa.field(name, typ) for name, typ in BLOCK_FIELDS])
+
+
+def _binary_column(values: np.ndarray, cuts: np.ndarray) -> pa.Array:
+    """One varint stream as a ``binary`` column: the LEB128 buffer of all
+    ``values`` plus the byte offsets of the value indices ``cuts`` — value
+    ``cuts[i]:cuts[i+1]`` is row i, with no Python object per row."""
+    buf, lens = encode_varints_with_lengths(values)
+    off = np.concatenate(([0], np.cumsum(lens)))[cuts]
+    if off[-1] > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"{off[-1]} varint bytes exceed one binary column's 2 GiB offsets"
+        )
+    return pa.Array.from_buffers(
+        pa.binary(), len(cuts) - 1,
+        [None, pa.py_buffer(off.astype(np.int32)), pa.py_buffer(buf)],
+    )
 
 
 def encode_blocks(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
+    group_off: np.ndarray,
     *,
     block_size: int,
     k1: float,
     b: float,
     avgdl: float,
     positions: np.ndarray | None = None,
-) -> list[Block]:
-    """Sorted (strictly increasing) doc_ids + parallel tf/dl → blocks.
+) -> pa.ListArray:
+    """Encode many posting lists in one call → a ``list<block>`` array with
+    one row per list.
 
-    ``positions`` (optional): flat ascending within-doc token positions,
-    concatenated per posting — posting i owns positions[Σtf[:i] : Σtf[:i+1]].
+    List g owns postings ``group_off[g]:group_off[g+1]`` of the parallel
+    doc_id/tf/dl arrays (``group_off`` runs from 0 to ``len(doc_ids)``);
+    its doc_ids are strictly increasing.  ``positions`` (optional): flat
+    ascending within-doc token positions, concatenated per posting —
+    posting i owns positions[Σtf[:i] : Σtf[:i+1]].
+
+    ONE varint pass per stream for all lists: per-value byte lengths give
+    the block boundaries inside each concatenated stream, so blocking is
+    pure offset arithmetic and each binary column is that stream's buffer
+    plus its block byte offsets.
     """
     doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
     tfs = np.ascontiguousarray(tfs, dtype=np.int64)
     dls = np.ascontiguousarray(dls, dtype=np.int64)
+    group_off = np.asarray(group_off, dtype=np.int64)
     n = len(doc_ids)
-    if n == 0:
-        return []
-    # ONE varint pass per stream for the whole list (not per 128-entry
-    # block): per-value byte lengths give the block boundaries inside each
-    # concatenated stream, so blocking is pure slicing.  Hot posting lists
-    # previously paid ~3 small-array NumPy calls per block — the dominant
-    # per-call overhead of the encode stage at millions of blocks.
-    starts = np.arange(0, n, block_size)
-    ends = np.append(starts[1:], n)
-    deltas = np.empty(n, dtype=np.uint64)
-    deltas[0] = doc_ids[0]
-    deltas[1:] = np.diff(doc_ids).astype(np.uint64)
+    # block j of list g starts at posting group_off[g] + j·block_size
+    n_blk = -(-np.diff(group_off) // block_size)
+    blk_off = np.concatenate(([0], np.cumsum(n_blk)))
+    starts = np.repeat(group_off[:-1], n_blk) + block_size * (
+        np.arange(blk_off[-1]) - np.repeat(blk_off[:-1], n_blk)
+    )
+    cuts = np.append(starts, n)
+    deltas = np.diff(doc_ids, prepend=0).astype(np.uint64)
     deltas[starts] = doc_ids[starts].astype(np.uint64)  # block-local absolutes
     tf_f = tfs.astype(np.float64)
     tf_norm = tf_f / (tf_f + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
-
-    def stream_cuts(values: np.ndarray, cut_idx: np.ndarray):
-        buf, lens = encode_varints_with_lengths(values)
-        byte_off = np.concatenate(([0], np.cumsum(lens)))
-        return buf, byte_off[cut_idx]
-
-    doc_buf, doc_cut = stream_cuts(deltas, np.append(starts, n))
-    tf_buf, tf_cut = stream_cuts(tfs.astype(np.uint64), np.append(starts, n))
-    dl_buf, dl_cut = stream_cuts(dls.astype(np.uint64), np.append(starts, n))
-    pos_buf, pos_cut = b"", None
-    if positions is not None:
+    if positions is None:
+        pos = _binary_column(np.empty(0, np.uint64), np.zeros(len(cuts), np.int64))
+    else:
         tf_cum = np.concatenate(([0], np.cumsum(tfs)))
-        pos_buf, pos_cut = stream_cuts(
-            np.ascontiguousarray(positions, dtype=np.uint64),
-            tf_cum[np.append(starts, n)],
-        )
-    max_doc = doc_ids[ends - 1]
-    tfn_max = np.maximum.reduceat(tf_norm, starts)
-    tf_max = np.maximum.reduceat(tfs, starts)
-    dl_min = np.minimum.reduceat(dls, starts)
-    blocks: list[Block] = []
-    for i in range(len(starts)):
-        blocks.append(
-            Block(
-                n=int(ends[i] - starts[i]),
-                max_doc_id=int(max_doc[i]),
-                tf_norm_max=float(tfn_max[i]),
-                max_tf=int(tf_max[i]),
-                min_dl=int(dl_min[i]),
-                doc_bytes=doc_buf[doc_cut[i]:doc_cut[i + 1]],
-                tf_bytes=tf_buf[tf_cut[i]:tf_cut[i + 1]],
-                dl_bytes=dl_buf[dl_cut[i]:dl_cut[i + 1]],
-                pos_bytes=(
-                    pos_buf[pos_cut[i]:pos_cut[i + 1]] if pos_cut is not None else b""
-                ),
-            )
-        )
-    return blocks
+        pos = _binary_column(np.ascontiguousarray(positions, dtype=np.uint64), tf_cum[cuts])
+    columns = {
+        "n": pa.array(np.diff(cuts).astype(np.int32)),
+        "max_doc_id": pa.array(doc_ids[cuts[1:] - 1]),
+        "tf_norm_max": pa.array(np.maximum.reduceat(tf_norm, starts)),
+        "max_tf": pa.array(np.maximum.reduceat(tfs, starts)),
+        "min_dl": pa.array(np.minimum.reduceat(dls, starts)),
+        "doc_bytes": _binary_column(deltas, cuts),
+        "tf_bytes": _binary_column(tfs.astype(np.uint64), cuts),
+        "dl_bytes": _binary_column(dls.astype(np.uint64), cuts),
+        "pos_bytes": pos,
+    }
+    blocks = pa.StructArray.from_arrays(
+        [columns[name] for name, _ in BLOCK_FIELDS], fields=list(block_type())
+    )
+    return pa.ListArray.from_arrays(pa.array(blk_off.astype(np.int32)), blocks)
 
 
 def docids_from_deltas(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
@@ -274,8 +277,6 @@ def binary_offsets(ba) -> np.ndarray:
     beyond that — a 100× index can hit it, so both layouts are handled
     instead of assuming int32.
     """
-    import pyarrow as pa
-
     if pa.types.is_large_binary(ba.type) or pa.types.is_large_string(ba.type):
         dtype = np.int64
     elif pa.types.is_binary(ba.type) or pa.types.is_string(ba.type):

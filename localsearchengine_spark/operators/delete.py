@@ -171,19 +171,28 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
 
     docs = spark.read.parquet(os.path.join(index_dir, "docs"))
     # deleted-doc stats BEFORE the rewrite: the new avgdl feeds the block
-    # encoder's tf_norm bounds.  Token counts use the config's own analyzer
-    # rule JVM-side; total_tokens(meta) − deleted tokens ≡ survivors' total.
-    tok = F.size(
-        F.expr(
-            "regexp_extract_all({}, '{}', 0)".format(
-                "lower(text)" if conf.bm25.lowercase else "text",
-                conf.bm25.token_pattern,
+    # encoder's tf_norm bounds.  Token counts use the build's own analyzer
+    # (an Arrow kernel), so total_tokens(meta) − deleted tokens ≡ the
+    # survivors' total exactly as a build over them would count it.
+    cfg = conf.bm25
+
+    def count_tokens(batches):
+        import pyarrow as pa
+
+        from localsearchengine_spark.functions.analyze import doc_lengths
+
+        for rb in batches:
+            dl = doc_lengths(rb.column(0).to_pandas(), cfg)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([rb.num_rows]), pa.array([int(dl.sum())])], ["n", "t"]
             )
-        )
-    ).cast("long")
+
     drow = (
         docs.join(F.broadcast(ts_df), "doc_id", "left_semi")
-        .agg(F.count(F.lit(1)).alias("n"), F.coalesce(F.sum(tok), F.lit(0)).alias("t"))
+        .select("text")
+        .mapInArrow(count_tokens, schema="n long, t long")
+        .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n"),
+             F.coalesce(F.sum("t"), F.lit(0)).alias("t"))
         .collect()[0]
     )
     n_del, tok_del = int(drow["n"]), int(drow["t"])

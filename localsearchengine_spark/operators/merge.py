@@ -14,10 +14,11 @@ with no Spark job.
 Postings are rewritten because block score bounds depend on the merged
 avgdl, but never decoded: blocks are self-contained (codec.py), so a term's
 merged posting list is just its segment rows in (segment, salt) order.  The
-merge is one DataFrame job — union → renumber salts densely by
-(seg, salt) per term → recompute block score bounds from
-(max_tf, min_dl) under the merged avgdl with JVM `transform()`
-expressions.  Zero Python in the plan, zero decode.
+merge is one DataFrame job over the rows' (term, salt, df, cf, blocks) —
+union → renumber salts densely by (seg, salt) per term → replace each
+block's ``tf_norm_max`` with the bound from its (max_tf, min_dl) under the
+merged avgdl (a JVM ``transform`` + ``withField``; every other block field
+passes through).  Zero Python in the plan, zero decode.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from localsearchengine_spark.config import BuildConfig
+from localsearchengine_spark.functions.bm25 import tf_norm_column
 from localsearchengine_spark.utils import atomic_write_json, read_json
 
 
@@ -60,12 +62,6 @@ def next_doc_id(index_dir: str) -> int:
     meta = read_json(os.path.join(index_dir, "meta.json"))
     top = 1 + max(f[1] for f in docs_files(index_dir))
     return max(top, int(meta.get("doc_id_high_water", 0)))
-
-
-def _bound_expr(max_tf, min_dl, k1: float, b: float, avgdl: float):
-    from localsearchengine_spark.functions.bm25 import tf_norm_column
-
-    return tf_norm_column(max_tf, min_dl, F.lit(avgdl), k1, b)
 
 
 def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> dict:
@@ -170,32 +166,21 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> d
 def _merge_ordered(posts: DataFrame, k1: float, b: float, avgdl: float) -> DataFrame:
     """Declarative merge: per-term dense salt renumbering by (seg, salt) via
     a row_number window (rows per term are few — salts, not postings), which
-    stays collision-free under repeated merges; block score bounds are
-    recomputed JVM-side from (max_tf, min_dl) for the new avgdl."""
+    stays collision-free under repeated merges; each block's score bound is
+    recomputed JVM-side from its (max_tf, min_dl) for the new avgdl."""
     from pyspark.sql import Window
-    new_blocks = F.transform(
-        F.col("blocks"),
-        lambda blk: F.struct(
-            blk["n"].alias("n"),
-            blk["max_doc_id"].alias("max_doc_id"),
-            _bound_expr(blk["max_tf"], blk["min_dl"], k1, b, avgdl).alias("tf_norm_max"),
-            blk["max_tf"].alias("max_tf"),
-            blk["min_dl"].alias("min_dl"),
-            blk["doc_bytes"].alias("doc_bytes"),
-            blk["tf_bytes"].alias("tf_bytes"),
-            blk["dl_bytes"].alias("dl_bytes"),
-            blk["pos_bytes"].alias("pos_bytes"),
-        ),
-    )
+
     w = Window.partitionBy("term").orderBy("seg", "salt")
     return posts.select(
         "term",
         (F.row_number().over(w) - 1).cast("int").alias("salt"),
         "df",
         "cf",
-        F.array_max(F.transform(new_blocks, lambda blk: blk["tf_norm_max"])).alias(
-            "max_tf_norm"
-        ),
-        F.size(new_blocks).cast("long").alias("n_blocks"),
-        new_blocks.alias("blocks"),
+        F.transform(
+            "blocks",
+            lambda blk: blk.withField(
+                "tf_norm_max",
+                tf_norm_column(blk["max_tf"], blk["min_dl"], F.lit(avgdl), k1, b),
+            ),
+        ).alias("blocks"),
     )

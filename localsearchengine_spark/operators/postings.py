@@ -17,10 +17,14 @@ Dataflow (SURVEY.md §3.1):
       → filter pmod(hash(term,salt),P) ∈ pending   [resume pruning, A11]
       → repartition(P, term, salt) → sortWithinPartitions(term, salt)
         [packed rows: one per (term,salt,batch) — doc_id order is restored
-        inside the encode task with a near-linear merge]
-      → mapInPandas: stream runs, encode blocks (codec, A8), task writes its
-        own parquet segment + manifest marker atomically  [per-partition
-        lineage: a killed job leaves completed partitions durable]
+        inside the encode task]
+      → mapInArrow: per Arrow batch, find the (term, salt) group bounds,
+        one lexsort by (group, doc_id), one encode_blocks call for all the
+        batch's groups (codec, A8) — a group that may continue into the
+        next batch is carried over to it; the task writes its own parquet
+        segment (term, salt, df, cf, blocks) + manifest marker atomically
+        [per-partition lineage: a killed job leaves completed partitions
+        durable]
 
 The task-side write is the lineage mechanism: shuffle partition id is the
 deterministic function pmod(murmur3(term,salt), P), so a resumed build prunes
@@ -38,10 +42,8 @@ from __future__ import annotations
 
 import os
 import time
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -63,35 +65,6 @@ EMIT_SCHEMA_POS = EMIT_SCHEMA + ", pos array<long>"
 # salts are capped at 4096 buckets (stats_hot_scan), so this packs a
 # (term_code, salt) pair into one sortable int64 group key
 _SALT_CAP = 4096
-
-def postings_arrow_schema():
-    import pyarrow as pa
-
-    block = pa.struct(
-        [
-            pa.field("n", pa.int32()),
-            pa.field("max_doc_id", pa.int64()),
-            pa.field("tf_norm_max", pa.float64()),
-            pa.field("max_tf", pa.int64()),
-            pa.field("min_dl", pa.int64()),
-            pa.field("doc_bytes", pa.binary()),
-            pa.field("tf_bytes", pa.binary()),
-            pa.field("dl_bytes", pa.binary()),
-            pa.field("pos_bytes", pa.binary()),
-        ]
-    )
-    return pa.schema(
-        [
-            pa.field("term", pa.string()),
-            pa.field("salt", pa.int32()),
-            pa.field("df", pa.int64()),
-            pa.field("cf", pa.int64()),
-            pa.field("max_tf_norm", pa.float64()),
-            pa.field("n_blocks", pa.int64()),
-            pa.field("blocks", pa.list_(block)),
-        ]
-    )
-
 
 # empty string can never be a real term (token_pattern requires ≥1 char),
 # so it is a safe in-band carrier for the per-batch corpus-stats partials.
@@ -245,18 +218,10 @@ def emit_postings(
             gsalts = (ks[gstarts] % _SALT_CAP).astype(np.int32)
             dict_arr = pa.array(res["uniq"], type=pa.string())
             tf_ord = res["tf"][order]
-            arrays = [
-                dict_arr.take(pa.array(gcodes)),
-                pa.array(gsalts, type=pa.int32()),
-                pa.ListArray.from_arrays(
-                    pa.array(goff), pa.array(doc_ids[order], type=pa.int64())
-                ),
-                pa.ListArray.from_arrays(
-                    pa.array(goff), pa.array(tf_ord, type=pa.int64())
-                ),
-                pa.ListArray.from_arrays(
-                    pa.array(goff), pa.array(res["dl"][order], type=pa.int64())
-                ),
+            arrays = [dict_arr.take(pa.array(gcodes)), pa.array(gsalts, type=pa.int32())]
+            arrays += [
+                pa.ListArray.from_arrays(pa.array(goff), pa.array(v, type=pa.int64()))
+                for v in (doc_ids[order], tf_ord, res["dl"][order])
             ]
             names = ["term", "salt", "doc_ids", "tfs", "dls"]
             if with_pos:
@@ -289,16 +254,17 @@ def build_posting_partitions(
     manifest_dir: str,
     build_id: str,
     pending: list[int] | None = None,
-) -> list[dict]:
-    """A6+A8+A9+A12 — the shuffle-partitioned build.  Returns the manifest
-    rows of the partitions processed in this job (tasks also persist them)."""
+) -> None:
+    """A6+A8+A9+A12 — the shuffle-partitioned build.  Each task writes its
+    partition's postings file and manifest; callers read the manifests back
+    from ``manifest_dir``."""
     P = num_partitions
     cfg = conf.bm25
     block_size = conf.block_size
     df = emitted
     if pending is not None:
         if not pending:
-            return []
+            return
         df = df.filter(
             F.pmod(F.hash(F.col("term"), F.col("salt")), F.lit(P)).isin(
                 [int(p) for p in pending]
@@ -312,135 +278,139 @@ def build_posting_partitions(
 
     k1, b = cfg.k1, cfg.b
 
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(it):
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         t0 = time.time()
-        schema = postings_arrow_schema()
-        pid = None
-        writer = None
-        tmp_path = None
-        rows_buf: list[dict] = []
-        n_postings = 0
-        n_rows = 0
+        schema = pa.schema(
+            [("term", pa.string()), ("salt", pa.int32()), ("df", pa.int64()),
+             ("cf", pa.int64()), ("blocks", pa.list_(codec.block_type()))]
+        )
+        pid = writer = tmp_path = None
+        out: list[pa.RecordBatch] = []  # encoded rows not yet written
+        n_postings = n_terms = 0
         top: list[tuple[int, str]] = []
-        cur_key: tuple[str, int] | None = None
-        cur_docs: list[np.ndarray] = []
-        cur_tfs: list[np.ndarray] = []
-        cur_dls: list[np.ndarray] = []
-        cur_pos: list[np.ndarray] = []
+        carry = None  # rows of a group that may continue into the next batch
 
-        def flush_rows(force: bool = False):
-            nonlocal rows_buf, writer
-            if writer is None or (not rows_buf) or (len(rows_buf) < 512 and not force):
-                return
-            writer.write_table(pa.Table.from_pylist(rows_buf, schema=schema))
-            rows_buf = []
+        def group_starts(rb) -> np.ndarray:
+            """First row of each (term, salt) run of the sorted rows."""
+            salts = rb.column("salt").to_numpy()
+            new = np.ones(rb.num_rows, dtype=bool)
+            if rb.num_rows > 1:
+                terms = rb.column("term")
+                new[1:] = pc.not_equal(terms[1:], terms[:-1]).to_numpy(
+                    zero_copy_only=False
+                ) | (salts[1:] != salts[:-1])
+            return np.flatnonzero(new)
 
-        def end_run():
-            nonlocal cur_key, cur_docs, cur_tfs, cur_dls, cur_pos, n_rows, top
-            if cur_key is None:
-                return
-            d = np.concatenate(cur_docs)
-            t = np.concatenate(cur_tfs)
-            L = np.concatenate(cur_dls)
-            # packed chunks arrive in arbitrary batch order — re-sort the
-            # group's postings by doc_id (each chunk is already sorted, so
-            # mergesort is near-linear); final blocks are bit-identical to
+        def write(force: bool = False):
+            # 512-row row groups: Index.fetch_postings prunes row groups by
+            # their term min/max, so a row group spans a narrow term range
+            nonlocal out
+            tbl = pa.Table.from_batches(out, schema)
+            size = tbl.num_rows if force else tbl.num_rows // 512 * 512
+            if size:
+                writer.write_table(tbl.slice(0, size), row_group_size=512)
+            out = tbl.slice(size).to_batches()
+
+        def encode(rb, firsts: np.ndarray):
+            """Encode the rows of ``rb`` — whole groups starting at ``firsts``
+            — into one output row per group, in one vectorized pass."""
+            nonlocal n_postings, n_terms, top
+            lens = pc.list_value_length(rb.column("doc_ids")).to_numpy().astype(np.int64)
+            row_grp = np.repeat(np.arange(len(firsts)), np.diff(np.append(firsts, rb.num_rows)))
+            grp = np.repeat(row_grp, lens)
+            d, t, L = (
+                pc.list_flatten(rb.column(c)).to_numpy().astype(np.int64)
+                for c in ("doc_ids", "tfs", "dls")
+            )
+            # packed chunks arrive in arbitrary batch order — re-sort each
+            # group's postings by doc_id; final blocks are bit-identical to
             # a per-posting shuffle regardless of batching or parallelism
-            order = np.argsort(d, kind="mergesort")
+            order = np.lexsort((d, grp))
             pos = None
-            if cur_pos:
-                flat = np.concatenate(cur_pos)
-                starts = np.cumsum(t) - t
-                pos = codec.reorder_positions(flat, starts, t, order)
-            d, t, L = d[order], t[order], L[order]
-            if len(d) > 1 and (np.diff(d) <= 0).any():
-                raise ValueError(
-                    f"duplicate doc_id in posting group {cur_key!r}"
-                )
+            if "pos" in rb.schema.names:
+                flat = pc.list_flatten(rb.column("pos")).to_numpy().astype(np.int64)
+                pos = codec.reorder_positions(flat, np.cumsum(t) - t, t, order)
+            d, t, L, grp = d[order], t[order], L[order], grp[order]
+            dup = np.flatnonzero((grp[1:] == grp[:-1]) & (d[1:] <= d[:-1]))
+            if len(dup):
+                r = firsts[grp[dup[0]]]
+                key = (rb.column("term")[r].as_py(), int(rb.column("salt")[r].as_py()))
+                raise ValueError(f"duplicate doc_id in posting group {key!r}")
+            row_off = np.concatenate(([0], np.cumsum(lens)))
+            g_off = np.append(row_off[firsts], row_off[-1])
             blocks = codec.encode_blocks(
-                d, t, L, block_size=block_size, k1=k1, b=b, avgdl=avgdl,
+                d, t, L, g_off, block_size=block_size, k1=k1, b=b, avgdl=avgdl,
                 positions=pos,
             )
-            rows_buf.append(
-                {
-                    "term": cur_key[0],
-                    "salt": int(cur_key[1]),
-                    "df": int(len(d)),
-                    "cf": int(t.sum()),
-                    "max_tf_norm": float(max(blk.tf_norm_max for blk in blocks)),
-                    "n_blocks": len(blocks),
-                    "blocks": [blk._asdict() for blk in blocks],
-                }
+            tf_cum = np.concatenate(([0], np.cumsum(t)))
+            dfs = np.diff(g_off)
+            terms = rb.column("term").take(pa.array(firsts)).cast(pa.string())
+            out.append(
+                pa.RecordBatch.from_arrays(
+                    [
+                        terms,
+                        pa.array(rb.column("salt").to_numpy()[firsts], type=pa.int32()),
+                        pa.array(dfs),
+                        pa.array(tf_cum[g_off[1:]] - tf_cum[g_off[:-1]]),
+                        blocks,
+                    ],
+                    schema=schema,
+                )
             )
-            n_rows += 1
-            top.append((len(d), cur_key[0]))
-            if len(top) > 64:
-                top.sort(reverse=True)
-                del top[8:]
-            cur_key, cur_docs, cur_tfs, cur_dls, cur_pos = None, [], [], [], []
-            flush_rows()
+            n_terms += len(firsts)
+            n_postings += len(d)
+            # manifest top_terms: the 5 largest (df, term) groups
+            cand = np.flatnonzero(dfs >= np.sort(dfs)[-min(5, len(dfs))])
+            top = sorted(
+                top + [(int(dfs[i]), terms[int(i)].as_py()) for i in cand], reverse=True
+            )[:5]
+            write()
 
-        for pdf in it:
-            if pdf.empty:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            if pid is None:
-                pid = int(pdf["pid"].iloc[0])
+            if writer is None:
+                pid = int(batch.column("pid")[0].as_py())
                 os.makedirs(postings_dir, exist_ok=True)
                 tmp_path = os.path.join(
                     postings_dir, f".part-{pid:05d}.parquet.tmp-{os.getpid()}"
                 )
                 writer = pq.ParquetWriter(tmp_path, schema)
-            terms = pdf["term"].to_numpy()
-            salts = pdf["salt"].to_numpy()
-            docs_col = pdf["doc_ids"].to_numpy()
-            tfs_col = pdf["tfs"].to_numpy()
-            dls_col = pdf["dls"].to_numpy()
-            pos_col = pdf["pos"].to_numpy() if "pos" in pdf.columns else None
-            for i in range(len(pdf)):
-                key = (terms[i], int(salts[i]))
-                if cur_key is not None and key != cur_key:
-                    end_run()
-                if cur_key is None:
-                    cur_key = key
-                chunk = np.asarray(docs_col[i], dtype=np.int64)
-                n_postings += len(chunk)
-                cur_docs.append(chunk)
-                cur_tfs.append(np.asarray(tfs_col[i], dtype=np.int64))
-                cur_dls.append(np.asarray(dls_col[i], dtype=np.int64))
-                if pos_col is not None:
-                    cur_pos.append(np.asarray(pos_col[i], dtype=np.int64))
-        end_run()
-        if writer is not None:
-            flush_rows(force=True)
-            writer.close()
-            final = os.path.join(postings_dir, f"part-{pid:05d}.parquet")
-            os.replace(tmp_path, final)
-            nbytes = os.path.getsize(final)
-            top.sort(reverse=True)
-            manifest = {
+            rb = batch if carry is None else (
+                pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
+            )
+            firsts = group_starts(rb)
+            # the last group may continue into the next batch: carry it over
+            if len(firsts) > 1:
+                encode(rb.slice(0, int(firsts[-1])), firsts[:-1])
+            carry = rb.slice(int(firsts[-1]))
+        if writer is None:
+            return
+        encode(carry, group_starts(carry))
+        write(force=True)
+        writer.close()
+        final = os.path.join(postings_dir, f"part-{pid:05d}.parquet")
+        os.replace(tmp_path, final)
+        atomic_write_json(
+            os.path.join(manifest_dir, f"postings-{pid:05d}.json"),
+            {
                 "build_id": build_id,
                 "stage": "postings",
                 "pid": pid,
                 "postings": int(n_postings),
-                "terms": int(n_rows),
-                "bytes": int(nbytes),
+                "terms": int(n_terms),
+                "bytes": int(os.path.getsize(final)),
                 "elapsed_s": round(time.time() - t0, 3),
-                "top_terms": [[t, int(n)] for n, t in top[:5]],
-            }
-            atomic_write_json(
-                os.path.join(manifest_dir, f"postings-{pid:05d}.json"), manifest
-            )
-            yield pd.DataFrame([{k: str(v) for k, v in manifest.items()}])
+                "top_terms": [[t, n] for n, t in top],
+            },
+        )
+        yield pa.RecordBatch.from_arrays([pa.array([pid], pa.int32())], ["pid"])
 
-    out = df.mapInPandas(
-        build,
-        schema="build_id string, stage string, pid string, postings string, "
-        "terms string, bytes string, elapsed_s string, top_terms string",
-    )
-    return [r.asDict() for r in out.collect()]
+    df.mapInArrow(build, schema="pid int").collect()
 
 
 def skew_report(manifest_rows: list[dict]) -> dict:
@@ -462,40 +432,30 @@ _DICT_DRIVER_MAX_ROWS = 5_000_000
 
 
 def write_dictionary(spark, postings_dir: str, dict_dir: str) -> None:
-    """A14 support — dictionary = per-term (df, cf, max_tf_norm, n_rows,
-    n_blocks) over the postings metadata columns (the heavy ``blocks``
-    column is never read: per-row block counts are persisted at build).
+    """A14 support — dictionary = per-term (df, cf) summed over the term's
+    postings rows (the heavy ``blocks`` column is never read).
 
     Adaptive execution: a small vocabulary aggregates driver-side in one
     pyarrow scan (no Spark job — the common case at bench scale and for
     per-segment dictionaries); a large vocabulary (10^12-turn corpora have
     vocabularies far beyond driver memory) falls back to a distributed
     column-pruned groupBy."""
+    import pyarrow as pa
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
     data = ds.dataset(postings_dir, format="parquet")
     if data.count_rows() <= _DICT_DRIVER_MAX_ROWS:
-        tbl = data.to_table(
-            columns=["term", "df", "cf", "max_tf_norm", "n_blocks"]
-        )
         agg = (
-            tbl.to_pandas()
-            .groupby("term", sort=False)
-            .agg(
-                df=("df", "sum"),
-                cf=("cf", "sum"),
-                max_tf_norm=("max_tf_norm", "max"),
-                n_rows=("term", "size"),
-                n_blocks=("n_blocks", "sum"),
-            )
-            .reset_index()
+            data.to_table(columns=["term", "df", "cf"])
+            .group_by("term", use_threads=False)
+            .aggregate([("df", "sum"), ("cf", "sum")])
         )
         os.makedirs(dict_dir, exist_ok=True)
-        import pyarrow as pa
-
         tmp = os.path.join(dict_dir, f".dict.parquet.tmp-{os.getpid()}")
-        pq.write_table(pa.Table.from_pandas(agg, preserve_index=False), tmp)
+        pq.write_table(
+            pa.table({"term": agg["term"], "df": agg["df_sum"], "cf": agg["cf_sum"]}), tmp
+        )
         os.replace(tmp, os.path.join(dict_dir, "part-00000.parquet"))
         for f in os.listdir(dict_dir):
             if f.startswith("part-") and f != "part-00000.parquet":
@@ -504,13 +464,7 @@ def write_dictionary(spark, postings_dir: str, dict_dir: str) -> None:
     (
         spark.read.parquet(postings_dir)
         .groupBy("term")
-        .agg(
-            F.sum("df").alias("df"),
-            F.sum("cf").alias("cf"),
-            F.max("max_tf_norm").alias("max_tf_norm"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("n_blocks").alias("n_blocks"),
-        )
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         .write.mode("overwrite")
         .parquet(dict_dir)
     )

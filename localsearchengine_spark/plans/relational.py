@@ -2271,8 +2271,10 @@ def b33(spark, sf_dir):
 # with floor(value·100 + 0.5) — IEEE double mul/add/floor, bit-identical in
 # NumPy and DuckDB — so both UDAF sums are exact int64 arithmetic (order-
 # free) and the single float division of two identical integers rounds
-# identically.  Built-in aggregates cannot mix with GROUPED_AGG UDAFs in
-# one agg(), so the row count is a third one-liner UDAF.  Shape for 100 TB:
+# identically; a group whose sums could leave the int64 range raises
+# OverflowError instead of wrapping.  Built-in aggregates cannot mix with
+# GROUPED_AGG UDAFs in one agg(), so the row count is a third one-liner
+# UDAF.  Shape for 100 TB:
 # grouped-agg pandas UDFs get Arrow-batched partial aggregation per
 # partition only for the final exchange of ≤|event_type| groups — but the
 # full rows DO shuffle to the group (no map-side combine, unlike built-in
@@ -2292,14 +2294,25 @@ def b33(spark, sf_dir):
 def b34(spark, sf_dir):
     import numpy as np
 
+    def int64_sum(*factors: np.ndarray) -> int:
+        """Σ of the factors' elementwise product in int64 — which would wrap
+        silently — so first check, exactly in Python ints, that
+        n · Π max|factor| stays below 2^63; OverflowError otherwise."""
+        bound = len(factors[0])
+        for f in factors:
+            bound *= max(int(f.max()), -int(f.min()))
+        if bound >= 2**63:
+            raise OverflowError(f"int64 sum of {len(factors[0])} products may wrap")
+        return int(np.prod(factors, axis=0).sum())
+
     @F.pandas_udf("long")
     def wsum_cents(v: pd.Series, u: pd.Series) -> int:
         cents = np.floor(v.to_numpy(dtype="float64") * 100.0 + 0.5).astype("int64")
-        return int((cents * u.to_numpy(dtype="int64")).sum())
+        return int64_sum(cents, u.to_numpy(dtype="int64"))
 
     @F.pandas_udf("long")
     def lsum(u: pd.Series) -> int:
-        return int(u.to_numpy(dtype="int64").sum())
+        return int64_sum(u.to_numpy(dtype="int64"))
 
     @F.pandas_udf("long")
     def lcount(u: pd.Series) -> int:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -10,12 +11,9 @@ from localsearchengine_spark.operators import codec
 
 
 def _decode(blocks):
-    """encode_blocks output → (doc_ids, tfs, dls) through the Arrow decoder
-    of the distributed read paths and compaction, with the blocks as one
-    posting-list row."""
-    import pyarrow as pa
-
-    dec = codec.decode_block_lists(pa.array([[blk._asdict() for blk in blocks]]))
+    """encode_blocks output for one posting list → (doc_ids, tfs, dls)
+    through the Arrow decoder of the distributed read paths and compaction."""
+    dec = codec.decode_block_lists(blocks)
     if dec is None:
         return (np.empty(0, dtype=np.int64),) * 3
     row_off, d, t, L, _ = dec
@@ -27,44 +25,82 @@ def _decode(blocks):
 @settings(max_examples=200, deadline=None)
 def test_varint_roundtrip(vals):
     arr = np.asarray(vals, dtype=np.uint64)
-    assert np.array_equal(codec.decode_varints(codec.encode_varints(arr), len(arr)), arr)
+    assert np.array_equal(codec.decode_varints(codec.encode_varints_with_lengths(arr)[0], len(arr)), arr)
 
 
 @given(
-    st.lists(st.integers(min_value=1, max_value=10**7), min_size=1, max_size=500),
+    st.lists(
+        st.lists(st.integers(min_value=1, max_value=10**7), min_size=1, max_size=300),
+        min_size=1,
+        max_size=6,
+    ),
     st.integers(min_value=1, max_value=64),
+    st.booleans(),
 )
 @settings(max_examples=100, deadline=None)
-def test_block_roundtrip(deltas, block_size):
-    doc_ids = np.cumsum(np.asarray(deltas, dtype=np.int64))  # strictly increasing
+def test_block_roundtrip(groups, block_size, with_pos):
+    """Several posting lists in one encode_blocks call: each decodes to its
+    own postings (and positions), and each block's metadata is exact."""
+    ids = [np.cumsum(np.asarray(g, dtype=np.int64)) for g in groups]  # strictly increasing
+    doc_ids = np.concatenate(ids)
+    group_off = np.concatenate(([0], np.cumsum([len(g) for g in ids])))
     rng = np.random.default_rng(7)
-    tfs = rng.integers(1, 50, size=len(doc_ids)).astype(np.int64)
+    tfs = rng.integers(1, 9, size=len(doc_ids)).astype(np.int64)
     dls = rng.integers(1, 200, size=len(doc_ids)).astype(np.int64)
-    blocks = codec.encode_blocks(
-        doc_ids, tfs, dls, block_size=block_size, k1=1.2, b=0.75, avgdl=50.0
+    pos = rng.integers(0, 10**6, size=int(tfs.sum())) if with_pos else None
+    la = codec.encode_blocks(
+        doc_ids, tfs, dls, group_off, block_size=block_size, k1=1.2, b=0.75,
+        avgdl=50.0, positions=pos,
     )
-    d, t, L = _decode(blocks)
+    assert len(la) == len(groups)
+    # one call over many lists ≡ one call per list
+    tf_cum = np.concatenate(([0], np.cumsum(tfs)))
+    singles = [
+        codec.encode_blocks(
+            doc_ids[lo:hi], tfs[lo:hi], dls[lo:hi], [0, hi - lo], block_size=block_size,
+            k1=1.2, b=0.75, avgdl=50.0,
+            positions=pos[tf_cum[lo]:tf_cum[hi]] if with_pos else None,
+        )
+        for lo, hi in zip(group_off[:-1], group_off[1:])
+    ]
+    assert pa.concat_arrays(singles).equals(la)
+    row_off, d, t, L, p = codec.decode_block_lists(la, with_pos=with_pos)
+    assert row_off.tolist() == group_off.tolist()
     assert np.array_equal(d, doc_ids)
     assert np.array_equal(t, tfs)
     assert np.array_equal(L, dls)
-    # block metadata invariants: max_doc_id exact, tf_norm_max is an upper bound
-    pos = 0
-    for blk in blocks:
-        seg = slice(pos, pos + blk.n)
-        assert blk.max_doc_id == int(doc_ids[seg][-1])
-        tfn = tfs[seg] / (tfs[seg] + 1.2 * (1 - 0.75 + 0.75 * dls[seg] / 50.0))
-        assert blk.tf_norm_max >= tfn.max() - 1e-15
-        pos += blk.n
-    assert pos == len(doc_ids)
+    if with_pos:
+        assert np.array_equal(p, pos)
+    # block metadata: blocks of block_size postings restart at every list,
+    # max_doc_id is exact and tf_norm_max is the block's largest tf_norm
+    blk_off = la.offsets.to_numpy()
+    blocks = la.values
+    n = blocks.field("n").to_numpy()
+    max_doc = blocks.field("max_doc_id").to_numpy()
+    tfn_max = blocks.field("tf_norm_max").to_numpy()
+    tfn = tfs / (tfs + 1.2 * (1 - 0.75 + 0.75 * dls / 50.0))
+    for g in range(len(groups)):
+        size = group_off[g + 1] - group_off[g]
+        sizes = [min(block_size, size - s) for s in range(0, size, block_size)]
+        assert n[blk_off[g] : blk_off[g + 1]].tolist() == sizes
+        start = group_off[g]
+        for i in range(blk_off[g], blk_off[g + 1]):
+            seg = slice(start, start + n[i])
+            assert max_doc[i] == doc_ids[seg][-1]
+            assert tfn_max[i] == tfn[seg].max()
+            start += n[i]
 
 
 def test_empty():
-    assert codec.encode_varints(np.empty(0, dtype=np.uint64)) == b""
+    assert codec.encode_varints_with_lengths(np.empty(0, dtype=np.uint64))[0] == b""
     assert len(codec.decode_varints(b"", 0)) == 0
-    assert codec.encode_blocks(
-        np.empty(0), np.empty(0), np.empty(0), block_size=128, k1=1.2, b=0.75, avgdl=10
-    ) == []
-    d, t, L = _decode([])
+    empty = np.empty(0)
+    for group_off, rows in (([0], 0), ([0, 0], 1)):
+        la = codec.encode_blocks(
+            empty, empty, empty, group_off, block_size=128, k1=1.2, b=0.75, avgdl=10
+        )
+        assert len(la) == rows and len(la.values) == 0
+    d, t, L = _decode(la)
     assert len(d) == 0 and len(t) == 0 and len(L) == 0
 
 
@@ -73,7 +109,9 @@ def test_big_doc_ids():
     doc_ids = np.asarray([10**12, 10**12 + 1, 10**12 + 10**9], dtype=np.int64)
     tfs = np.asarray([1, 2, 3], dtype=np.int64)
     dls = np.asarray([10, 20, 30], dtype=np.int64)
-    blocks = codec.encode_blocks(doc_ids, tfs, dls, block_size=2, k1=1.2, b=0.75, avgdl=20.0)
+    blocks = codec.encode_blocks(
+        doc_ids, tfs, dls, [0, 3], block_size=2, k1=1.2, b=0.75, avgdl=20.0
+    )
     d, t, L = _decode(blocks)
     assert np.array_equal(d, doc_ids)
 

@@ -98,3 +98,49 @@ def test_fetch_docs_roundtrips_text(spark, built_index):
     hits = index.search_docs("spark join", k=5, mode="wand")
     assert hits and all(r["text"] for _, _, r in hits)
     assert [d for d, _, _ in hits] == [d for d, _ in index.search("spark join", k=5, mode="wand")]
+
+
+# The build lowercases with Arrow utf8_lower ('İstanbul' → 'istanbul', one
+# token).  Query analysis, snippet windows and compaction's token count must
+# use the same rule: Python's str.lower and Spark's lower map 'İ' to 'i' + a
+# combining dot, which splits the token in two.
+_DOTTED_I_ROWS = ["İstanbul join", "join the spark", "İzmir join join", "spark merge"]
+
+
+@pytest.fixture(scope="module")
+def dotted_i_index(spark, tmp_path_factory):
+    tmp = tmp_path_factory.mktemp("dotted_i")
+    idx = str(tmp / "idx")
+    build_index(spark, _corpus(tmp, _DOTTED_I_ROWS), idx,
+                BuildConfig(num_partitions=2, store_positions=True))
+    return idx
+
+
+def test_string_query_lowercases_like_the_build(spark, dotted_i_index):
+    ix = Index(spark, dotted_i_index)
+    assert [d for d, _ in ix.search("İstanbul", 10)] == [0]
+
+
+def test_snippet_window_lowercases_like_the_build(spark, dotted_i_index):
+    snips = Index(spark, dotted_i_index).snippets("join", k=10, before=0, after=0)
+    assert sorted(d for d, _, _ in snips) == [0, 1, 2]
+    assert {s for _, _, s in snips} == {"join"}
+
+
+def test_compaction_counts_tokens_like_the_build(spark, dotted_i_index, tmp_path):
+    import json
+    import os
+    import shutil
+
+    from localsearchengine_spark.functions.analyze import doc_lengths
+    from localsearchengine_spark.operators.delete import compact, delete_docs
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(dotted_i_index, idx)
+    delete_docs(idx, [2])
+    out = str(tmp_path / "compacted")
+    compact(spark, idx, out)
+    with open(os.path.join(out, "meta.json")) as f:
+        meta = json.load(f)
+    survivors = pd.Series([_DOTTED_I_ROWS[i] for i in (0, 1, 3)])
+    assert meta["total_tokens"] == int(doc_lengths(survivors).sum()) == 7

@@ -96,7 +96,11 @@ def test_merge_rejects_overlapping_ranges(spark, built_index, tmp_path):
     assert not os.path.exists(out)
 
 
-def test_resume_after_partial_failure(spark, transcripts_small, tmp_path):
+@pytest.mark.parametrize("lost", ["file_and_manifest", "file_only"])
+def test_resume_after_partial_failure(spark, transcripts_small, tmp_path, lost):
+    """A partition whose postings file is gone is rebuilt, whether its
+    manifest went with it or was left behind (a manifest alone must not
+    count as a finished partition)."""
     path, _ = transcripts_small
     clean = str(tmp_path / "clean")
     build_index(spark, path, clean, CONF)
@@ -104,7 +108,8 @@ def test_resume_after_partial_failure(spark, transcripts_small, tmp_path):
     shutil.copytree(clean, hurt)
     for pid in (1, 4):
         os.remove(os.path.join(hurt, "postings", f"part-{pid:05d}.parquet"))
-        os.remove(os.path.join(hurt, "manifest", f"postings-{pid:05d}.json"))
+        if lost == "file_and_manifest":
+            os.remove(os.path.join(hurt, "manifest", f"postings-{pid:05d}.json"))
     rep = resume(spark, path, hurt)
     assert rep.partitions_built == 2 and rep.partitions_skipped == 4
     queries = golden_queries()[::6]
@@ -136,6 +141,29 @@ def test_build_determinism_across_parallelism(spark, transcripts_small, tmp_path
     assert d4 == d13
     queries = golden_queries()[::4]
     assert _query_all(Index(spark, i4), queries) == _query_all(Index(spark, i13), queries)
+
+
+def test_postings_independent_of_arrow_batch_size(spark, transcripts_small, tmp_path):
+    """Arrow batches of 7 rows split (term, salt) groups across the encode
+    kernel's batches (the group is carried over) and repack the emitted
+    rows: the postings must still equal a default-batch build's."""
+    path, _ = transcripts_small
+    pconf = BuildConfig(num_partitions=4, hot_df_threshold=300, block_size=16,
+                        store_positions=True)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    build_index(spark, path, str(tmp_path / "default"), pconf)
+    try:
+        spark.conf.set(key, "7")
+        build_index(spark, path, str(tmp_path / "small"), pconf)
+    finally:
+        spark.conf.set(key, saved)
+
+    def postings(d):
+        return pq.read_table(os.path.join(str(tmp_path / d), "postings"))
+
+    got, exp = postings("small"), postings("default")
+    assert got.num_rows > 0 and got.equals(exp)
 
 
 def test_merge_positional(spark, transcripts_small, tmp_path):

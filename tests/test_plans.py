@@ -186,3 +186,20 @@ def test_b34_grouped_agg_is_arrow_udaf(spark):
     # (AggregateInPandas in 3.x)
     assert "ArrowAggregatePython" in plan or "AggregateInPandas" in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_b34_raises_instead_of_wrapping_int64(spark, tmp_path):
+    """Three user_ids near 2^62 sum past the int64 range: the UDAF must
+    fail loudly, not return an average of wrapped sums."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    big = 2**62 + 7
+    pq.write_table(
+        pa.table({"event_type": ["click"] * 3, "user_id": [big, big - 1, big - 2],
+                  "value": [1.25, 2.5, 3.75]}),
+        str(tmp_path / "events.parquet"),
+    )
+    with pytest.raises(Exception, match="OverflowError"):
+        SPARK_QUERIES["b34_grouped_agg_udaf"](spark, str(tmp_path)).collect()

@@ -25,26 +25,25 @@ def _term(name: str, doc_ids: list[int], rng: np.random.Generator, n_docs: int,
     tfs = rng.integers(1, 6, size=len(ids)).astype(np.int64)
     dls = rng.integers(5, 60, size=len(ids)).astype(np.int64)
     blocks = codec.encode_blocks(
-        ids, tfs, dls, block_size=block_size, k1=cfg.k1, b=cfg.b, avgdl=AVGDL
-    )
+        ids, tfs, dls, [0, len(ids)], block_size=block_size, k1=cfg.k1, b=cfg.b,
+        avgdl=AVGDL,
+    ).values
     # the engine's storage layout: per stream, the blocks' bytes concatenated
     # into one buffer plus per-block offsets
     bufs, offs = {}, {}
     for stream in ("doc", "tf", "dl"):
-        parts = [getattr(blk, f"{stream}_bytes") for blk in blocks]
-        bufs[stream] = b"".join(parts)
-        lens = [len(x) for x in parts]
-        offs[stream] = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
-    counts = np.asarray([blk.n for blk in blocks], dtype=np.int64)
+        col = blocks.field(f"{stream}_bytes")
+        offs[stream] = codec.binary_offsets(col)
+        bufs[stream] = col.buffers()[2].to_pybytes()
     return TermPostings(
         term=name,
         idf=cfg.idf(len(ids), n_docs),
         df=len(ids),
         avgdl=AVGDL,
         cfg=cfg,
-        streams=codec.StreamBlocks(counts, bufs, offs),
-        block_max_doc=np.asarray([blk.max_doc_id for blk in blocks], dtype=np.int64),
-        block_bound_tfn=np.asarray([blk.tf_norm_max for blk in blocks], dtype=np.float64),
+        streams=codec.StreamBlocks(blocks.field("n").to_numpy().astype(np.int64), bufs, offs),
+        block_max_doc=blocks.field("max_doc_id").to_numpy(),
+        block_bound_tfn=blocks.field("tf_norm_max").to_numpy(),
     )
 
 
