@@ -83,6 +83,7 @@ def _session(master: str, shuffle_partitions: int):
         .config("spark.driver.memory", "16g")
         .config("spark.local.dir", os.path.join(BENCH_TMP, "spark-local"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
 

@@ -4,17 +4,22 @@ BASELINE.json:2's metric is a *match rate over a query set*; at 10^12-turn
 scale the postings for a large query batch don't fit one driver, so this path
 keeps everything in DataFrames:
 
-    postings (term-filtered parquet scan, pushdown)
+    postings (term-filtered parquet scan, pushdown, declared schema)
       → mapInArrow decode, once (contiguous varint streams → long form)
+      → repartition(spark.sql.shuffle.partitions, doc_id)  [the only big
+        shuffle: one row per decoded posting, before the query fan-out]
       → broadcast-join the exploded query set + per-term idf and fold slot
       → JVM Column-expression BM25 contribution  (whole-stage codegen)
       → groupBy(query_id, doc_id) per-slot sums, added in slot order
-        (codegen'd HashAggregate)  [the only big shuffle]
+        (codegen'd HashAggregate, in the doc_id exchange's reduce tasks:
+        hash partitioning on doc_id already clusters (query_id, doc_id))
       → AND filter (nt == n_terms) → per-query top-k window, cut per
         partition (WindowGroupLimit) before the query_id exchange
 
 The per-term idf/df comes from the dictionary (driver-side lookup — the
 query set's term list is small by definition), so no second big join.
+Driver-side frames are built from Arrow tables, so each plans as a
+LocalTableScan whose broadcast stays in the JVM.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,12 +35,31 @@ from localsearchengine_spark.operators import codec
 from localsearchengine_spark.operators.search import Index
 
 DECODED_SCHEMA = "term string, doc_id long, tf long, dl long"
+RESULT_SCHEMA = pa.schema(
+    [("query_id", pa.int64()), ("rank", pa.int64()), ("doc_id", pa.int64()),
+     ("score", pa.float64())]
+)
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: pa.Schema) -> DataFrame:
+    """Driver-side rows → a DataFrame over an Arrow table.  It plans as a
+    LocalTableScan: collecting it runs no job, and broadcasting it runs a
+    JVM-only one.  A DataFrame made from Python tuples is an RDD scan whose
+    broadcast runs every row through a Python worker."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+    )
 
 
 def _postings_scan(spark: SparkSession, index_dir: str, terms: list[str]) -> DataFrame:
     """Term-filtered postings scan (compressed blocks, not yet decoded); a
     term's rows are found by ``term`` alone, the filter pushed down."""
-    rows = spark.read.parquet(os.path.join(index_dir, "postings"))
+    rows = spark.read.schema(codec.postings_spark_schema()).parquet(
+        os.path.join(index_dir, "postings")
+    )
     return rows.filter(F.col("term").isin(sorted(set(terms))))
 
 
@@ -96,7 +121,7 @@ def _drop_deleted(df: DataFrame, spark: SparkSession, index_dir: str) -> DataFra
     tdir = os.path.join(index_dir, "tombstones")
     if not lse_io.path_exists(tdir):
         return df
-    ts = spark.read.parquet(tdir).select("doc_id").distinct()
+    ts = spark.read.schema("doc_id long").parquet(tdir).distinct()
     return df.join(F.broadcast(ts), "doc_id", "left_anti")
 
 
@@ -163,14 +188,22 @@ def _rank_topk(scored: DataFrame, k_max: int) -> DataFrame:
     batch's largest k) lets Spark's InferWindowGroupLimit put a Partial
     WindowGroupLimit before the query_id exchange: each input partition
     keeps only its per-query top k_max, a superset of what the global
-    window keeps, and no surviving row's score is recomputed."""
+    window keeps, and no surviving row's score is recomputed.
+
+    The result is at most Σk rows, so it is ordered by (query_id, rank) in
+    one partition: ``coalesce(1).sortWithinPartitions`` needs neither the
+    sampling job nor the exchange of a global ``orderBy``.  The coalesce
+    also runs the final window in that one task, over at most k_max rows
+    per query from each fold partition while the Partial WindowGroupLimit
+    applies."""
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     rn = F.col("rank")
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter((rn <= F.lit(k_max)) & (rn <= F.col("k")))
         .select("query_id", rn.cast("long").alias("rank"), "doc_id", "score")
-        .orderBy("query_id", "rank")
+        .coalesce(1)
+        .sortWithinPartitions("query_id", "rank")
     )
 
 
@@ -214,7 +247,8 @@ def run_queries(
     doc_filter: DataFrame | None = None,
 ) -> DataFrame:
     """queries: [{"query_id": int, "terms": [str], "k": int}] →
-    DataFrame(query_id long, rank long, doc_id long, score double).
+    DataFrame(query_id long, rank long, doc_id long, score double), in
+    (query_id, rank) order.
 
     ``doc_filter`` — optional one-column (doc_id) DataFrame restricting
     RESULTS to those docs (metadata-filtered search, e.g. "only docs where
@@ -226,10 +260,11 @@ def run_queries(
 
     A query dict may carry ``"exclude": [terms...]`` — the query language's
     negative path (fts11) distributed: the query's results drop docs
-    containing any excluded term, via a per-query (query_id, doc_id)
-    anti-join built from the excluded terms' own pushdown decode.  Like the
-    driver-local path, exclusion never changes the positive terms' idf or
-    scores.
+    containing any excluded term.  An excluded term joins the query set
+    with slot −1, so its postings decode in the same scan, contribute to no
+    slot, and mark the (query, doc) rows they reach: the fold keeps a row
+    only when its smallest slot is ≥ 0.  Like the driver-local path,
+    exclusion never changes the positive terms' idf or scores.
 
     AND and OR run as one job: every block of every query term decodes
     once, then one (query, doc) fold ranks.  Skipping blocks by their score
@@ -237,79 +272,73 @@ def run_queries(
     its rarest term's postings, each lost to this: the second decode costs
     more than it saves (BENCH.md round 3; "One postings decode per batch").
 
+    The decoded postings cross one exchange, hash-partitioned on doc_id
+    into ``spark.sql.shuffle.partitions`` parts, before the join fans each
+    posting out to its queries: a term's postings sit in one scan task, so
+    exchanging the fanned-out (query, doc) rows instead moved every joined
+    row and combined none.  The count is fixed, not left to AQE: a
+    prototype whose doc_id partitions AQE coalesced left cores idle in the
+    fold (BENCH.md, "One narrow shuffle per batch").
+
     The per-query top-k cut runs per partition before the query_id
     exchange only while the batch's largest k is at most Spark's
     ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000).
     Above it Spark plans no WindowGroupLimit: every scored (query, doc)
-    pair crosses the exchange, and results stay the same."""
+    pair crosses the exchange and reaches the rank window, which then runs
+    in the one task that orders the result (``_rank_topk``); results stay
+    the same."""
     cfg = index.cfg
-    all_terms = sorted({t for q in queries for t in q["terms"]})
-    dic = index.lookup(all_terms)
+    excluded = {int(q["query_id"]): sorted(set(q.get("exclude", []))) for q in queries}
+    dic = index.lookup(
+        sorted({t for q in queries for t in q["terms"]}
+               | {t for ts in excluded.values() for t in ts})
+    )
 
-    qrows = []
+    qrows, excl_rows = [], []
     for qd in queries:
+        qid, k = int(qd["query_id"]), int(qd.get("k", 10))
         terms = sorted(set(qd["terms"]))
         present = [t for t in terms if t in dic]
         for slot, t in enumerate(present):
             qrows.append(
-                (
-                    int(qd["query_id"]),
-                    t,
-                    slot,
-                    float(cfg.idf(dic[t]["df"], index.n_docs)),
-                    int(len(terms)),
-                    int(len(present)),
-                    int(qd.get("k", 10)),
-                )
+                (qid, t, slot, float(cfg.idf(dic[t]["df"], index.n_docs)),
+                 len(terms), len(present), k)
             )
+        # an absent excluded term excludes nothing
+        excl_rows += [(qid, t, -1, 0.0, len(terms), len(present), k)
+                      for t in excluded[qid] if t in dic]
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
-        )
-    qdf = spark.createDataFrame(
-        qrows,
-        "query_id long, term string, slot int, idf double, n_terms long, "
-        "n_present long, k long",
+        return _local_frame(spark, [], RESULT_SCHEMA)
+    qdf = _local_frame(
+        spark,
+        qrows + excl_rows,
+        pa.schema(
+            [("query_id", pa.int64()), ("term", pa.string()), ("slot", pa.int32()),
+             ("idf", pa.float64()), ("n_terms", pa.int64()), ("n_present", pa.int64()),
+             ("k", pa.int64())]
+        ),
     )
 
-    excl_rows = []
-    if any(q.get("exclude") for q in queries):
-        excl_terms = sorted({t for q in queries for t in q.get("exclude", [])})
-        excl_dic = index.lookup(excl_terms)
-        excl_rows = [
-            (int(q["query_id"]), t)
-            for q in queries
-            for t in sorted(set(q.get("exclude", [])))
-            if t in excl_dic  # an absent excluded term excludes nothing
-        ]
-
-    decoded = decode_postings_df(spark, index.index_dir, all_terms)
+    decoded = decode_postings_df(
+        spark, index.index_dir, sorted({r[1] for r in qrows + excl_rows})
+    ).repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id")
     if doc_filter is not None:
         decoded = decoded.join(
             doc_filter.select("doc_id").distinct(), "doc_id", "left_semi"
         )
 
-    contrib = _contrib_col(index)
     joined = decoded.join(F.broadcast(qdf), "term").select(
-        "query_id", "doc_id", "slot", "n_terms", "n_present", "k", contrib.alias("contrib")
+        "query_id", "doc_id", "slot", "n_terms", "n_present", "k",
+        _contrib_col(index).alias("contrib"),
     )
-    if excl_rows:
-        excl_qdf = spark.createDataFrame(excl_rows, "query_id long, term string")
-        excl_pairs = (
-            decode_postings_df(
-                spark, index.index_dir, sorted({t for _, t in excl_rows})
-            )
-            .join(F.broadcast(excl_qdf), "term")
-            .select("query_id", "doc_id")
-        )
-        joined = joined.join(excl_pairs, ["query_id", "doc_id"], "left_anti")
     scored = _fold(
         joined,
         max(r[2] for r in qrows) + 1,
         F.count(F.lit(1)).alias("nt"),
         F.first("n_terms").alias("n_terms"),
         F.first("n_present").alias("n_present"),
-    )
+        F.min("slot").alias("min_slot"),
+    ).filter(F.col("min_slot") >= 0)
     if mode == "and":
         # conjunctive: doc must contain every query term, and every query
         # term must exist in the corpus (matches the driver-local AND path)
@@ -342,7 +371,6 @@ def run_phrase_queries(
             "phrase batch on an index built without positions "
             "(BuildConfig.store_positions=True)"
         )
-    empty = "query_id long, rank long, doc_id long, score double"
     all_terms = sorted({t for q in queries for t in q["phrase"]})
     dic = index.lookup(all_terms)
     decoded = _drop_deleted(
@@ -387,12 +415,17 @@ def run_phrase_queries(
                 (qid, t, slot, float(index.cfg.idf(dic[t]["df"], index.n_docs)), k)
             )
     if not parts:
-        return spark.createDataFrame([], empty)
+        return _local_frame(spark, [], RESULT_SCHEMA)
     cand = parts[0]
     for p in parts[1:]:
         cand = cand.unionByName(p)
-    qdf = spark.createDataFrame(
-        qrows, "query_id long, term string, slot int, idf double, k long"
+    qdf = _local_frame(
+        spark,
+        qrows,
+        pa.schema(
+            [("query_id", pa.int64()), ("term", pa.string()), ("slot", pa.int32()),
+             ("idf", pa.float64()), ("k", pa.int64())]
+        ),
     )
     contribs = (
         decoded.select("term", "doc_id", "tf", "dl")

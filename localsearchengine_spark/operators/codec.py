@@ -2,7 +2,8 @@
 
 BASELINE.json:6 mandates "delta+varint block compression of sorted docID
 postings".  This module owns the posting-block format: its one declaration
-(:data:`BLOCK_FIELDS`), the build's vectorized encode straight into Arrow
+(:data:`BLOCK_FIELDS`, and :func:`postings_schema` for the rows that
+carry the blocks), the build's vectorized encode straight into Arrow
 (:func:`encode_blocks`), the Arrow decode of whole ``blocks`` columns for
 the distributed paths (:func:`decode_block_lists`) and the driver-local
 lazy decode (:class:`StreamBlocks`).  All of it is NumPy over whole
@@ -101,6 +102,25 @@ def block_type() -> pa.DataType:
     """The Arrow struct of one posting block (layout in the module
     docstring), built from :data:`BLOCK_FIELDS`."""
     return pa.struct([pa.field(name, typ) for name, typ in BLOCK_FIELDS])
+
+
+def postings_schema() -> pa.Schema:
+    """The Arrow schema of one postings row: a (term, salt) sub-list with
+    its df, cf and blocks.  The build writes it; every Spark read of a
+    postings directory declares it (:func:`postings_spark_schema`)."""
+    return pa.schema(
+        [("term", pa.string()), ("salt", pa.int32()), ("df", pa.int64()),
+         ("cf", pa.int64()), ("blocks", pa.list_(block_type()))]
+    )
+
+
+def postings_spark_schema():
+    """:func:`postings_schema` as a Spark ``StructType``.  A read that
+    declares it runs no schema-inference job, and a file with further
+    columns (indexes written before they were dropped) reads the same."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(postings_schema())
 
 
 def _binary_column(values: np.ndarray, cuts: np.ndarray) -> pa.Array:

@@ -155,6 +155,9 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     through the same kernel, so phrase queries keep working afterwards.
     The meta's ``doc_id_high_water`` keeps appends numbering above the
     deleted ids too, so no deleted doc's id is reused."""
+    import pyarrow as pa
+
+    from localsearchengine_spark.operators import codec
     from localsearchengine_spark.operators.merge import next_doc_id
     from localsearchengine_spark.operators.postings import (
         build_posting_partitions,
@@ -167,7 +170,7 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     index = Index(spark, index_dir)
     conf = index.conf
     ts = load_tombstones(index_dir)
-    ts_df = spark.createDataFrame([(int(x),) for x in ts], "doc_id long")
+    ts_df = spark.createDataFrame(pa.table({"doc_id": pa.array(ts, type=pa.int64())}))
 
     docs = spark.read.parquet(os.path.join(index_dir, "docs"))
     # deleted-doc stats BEFORE the rewrite: the new avgdl feeds the block
@@ -213,7 +216,9 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
         .parquet(os.path.join(out_dir, "docs"))
     )
 
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+    postings = spark.read.schema(codec.postings_spark_schema()).parquet(
+        os.path.join(index_dir, "postings")
+    )
     emitted = _emit_surviving(postings, ts, with_pos=conf.store_positions)
     manifest_dir = os.path.join(out_dir, "manifest")
     os.makedirs(manifest_dir, exist_ok=True)

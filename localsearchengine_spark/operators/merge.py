@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from localsearchengine_spark.config import BuildConfig
 from localsearchengine_spark.functions.bm25 import tf_norm_column
+from localsearchengine_spark.operators import codec
 from localsearchengine_spark.utils import atomic_write_json, read_json
 
 
@@ -118,8 +119,10 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> d
     # ---- postings -----------------------------------------------------------
     posts = None
     for d in index_dirs:
-        part = spark.read.parquet(os.path.join(d, "postings")).select(
-            "term", "salt", "df", "cf", "blocks", F.lit(seg_order[d]).alias("seg")
+        part = (
+            spark.read.schema(codec.postings_spark_schema())
+            .parquet(os.path.join(d, "postings"))
+            .withColumn("seg", F.lit(seg_order[d]))
         )
         posts = part if posts is None else posts.unionByName(part)
     merged = _merge_ordered(posts, cfg.k1, cfg.b, avgdl)

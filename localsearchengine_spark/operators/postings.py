@@ -284,10 +284,7 @@ def build_posting_partitions(
         import pyarrow.parquet as pq
 
         t0 = time.time()
-        schema = pa.schema(
-            [("term", pa.string()), ("salt", pa.int32()), ("df", pa.int64()),
-             ("cf", pa.int64()), ("blocks", pa.list_(codec.block_type()))]
-        )
+        schema = codec.postings_schema()
         pid = writer = tmp_path = None
         out: list[pa.RecordBatch] = []  # encoded rows not yet written
         n_postings = n_terms = 0
@@ -462,7 +459,8 @@ def write_dictionary(spark, postings_dir: str, dict_dir: str) -> None:
                 os.remove(os.path.join(dict_dir, f))
         return
     (
-        spark.read.parquet(postings_dir)
+        spark.read.schema(codec.postings_spark_schema())
+        .parquet(postings_dir)
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         .write.mode("overwrite")

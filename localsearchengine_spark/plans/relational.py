@@ -962,8 +962,8 @@ def fts13(spark, sf_dir):
 
 # distributed EXCLUSION batch (the query language's negative path at A20
 # scale — fts11's semantics through run_queries): per-query excluded terms
-# drop their docs via a (query_id, doc_id) anti-join off the excluded
-# terms' own pushdown decode; positive idf/scores unchanged.
+# decode in the same scan as the positive ones and drop every (query, doc)
+# row they reach in the fold; positive idf/scores unchanged.
 _FTS15_QUERIES = [
     {"query_id": 1, "terms": ["merge", "scan"], "k": 10, "exclude": ["window"]},
     {"query_id": 2, "terms": ["fast", "key"], "k": 10, "exclude": ["slow"]},

@@ -129,15 +129,31 @@ def test_doc_filter_restricts_without_rescoring(spark, built_index):
 
 def test_batch_exclusions_match_driver_local(spark, built_index):
     """Multi-term exclusion in the batch path ≡ the driver-local query
-    language ("a b -x -y"): same docs, bit-equal scores."""
+    language ("a b -x -y"): same docs, bit-equal scores, in both modes."""
     idx_dir, _, _ = built_index
     index = Index(spark, idx_dir)
     q = [{"query_id": 0, "terms": ["merge", "small"], "k": 10,
           "exclude": ["window", "slow"]}]
-    out = run_queries(spark, index, q, mode="and").collect()
-    got = [
-        (int(r["doc_id"]), float(r["score"]))
-        for r in sorted(out, key=lambda r: r["rank"])
-    ]
-    local = index.search("merge small -window -slow", k=10, mode="and")
-    assert got == [(d, s) for d, s in local]
+    for mode in ("and", "or"):
+        out = run_queries(spark, index, q, mode=mode).collect()
+        got = [
+            (int(r["doc_id"]), float(r["score"]))
+            for r in sorted(out, key=lambda r: r["rank"])
+        ]
+        local = index.search("merge small -window -slow", k=10, mode=mode)
+        assert got == [(d, s) for d, s in local], mode
+
+
+def test_rows_come_back_in_query_and_rank_order(spark, built_index):
+    """``collect()`` yields rows sorted by (query_id, rank), whatever order
+    the batch gives its query_ids in."""
+    idx_dir, _, _ = built_index
+    index = Index(spark, idx_dir)
+    queries = [{"query_id": 7, "terms": ["merge", "small"], "k": 6},
+               {"query_id": 2, "terms": ["spark"], "k": 9},
+               {"query_id": 5, "terms": ["join", "query"], "k": 4}]
+    for mode in ("and", "or"):
+        got = [(r["query_id"], r["rank"]) for r in run_queries(spark, index, queries,
+                                                               mode=mode).collect()]
+        assert got == sorted(got), mode
+        assert {q for q, _ in got} == {7, 2, 5}, mode

@@ -96,6 +96,61 @@ def test_merge_rejects_overlapping_ranges(spark, built_index, tmp_path):
     assert not os.path.exists(out)
 
 
+def _batch(spark, index, queries, mode):
+    from localsearchengine_spark.operators.batch_query import run_queries
+
+    got = {q["query_id"]: [] for q in queries}
+    for r in run_queries(spark, index, queries, mode=mode).collect():
+        got[r["query_id"]].append((r["doc_id"], r["score"]))
+    return got
+
+
+def test_old_postings_columns_open_merge_and_compact(spark, built_index, tmp_path):
+    """Indexes whose postings rows still carry the dropped ``max_tf_norm``,
+    ``n_blocks`` and ``pid`` columns answer ``run_queries`` like
+    ``Index.search``, and merge (with a new segment) and compact into
+    indexes that do too."""
+    import pyarrow.compute as pc
+
+    from localsearchengine_spark.operators.delete import compact, delete_docs
+
+    full_idx, _, pdf = built_index
+    pa_, pb_, n_a, _ = _split_and_write(pdf, str(tmp_path))
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    build_index(spark, pa_, old, CONF)
+    build_index(spark, pb_, new, CONF, doc_id_base=n_a)
+    pdir = os.path.join(old, "postings")
+    for pid, name in enumerate(sorted(f for f in os.listdir(pdir) if f.endswith(".parquet"))):
+        t = pq.read_table(os.path.join(pdir, name))
+        max_norm = [max(b["tf_norm_max"] for b in blocks)
+                    for blocks in t["blocks"].to_pylist()]
+        t = (t.add_column(1, "pid", pa.array([pid] * t.num_rows, pa.int32()))
+             .append_column("max_tf_norm", pa.array(max_norm, pa.float64()))
+             .append_column("n_blocks", pc.list_value_length(t["blocks"]).cast(pa.int32())))
+        pq.write_table(t, os.path.join(pdir, name), row_group_size=512)
+    assert {"pid", "max_tf_norm", "n_blocks"} <= set(ds.dataset(pdir).schema.names)
+
+    queries = golden_queries()[::4]
+
+    def check(index_dir):
+        index = Index(spark, index_dir)
+        for mode in ("and", "or"):
+            exp = {q["query_id"]: index.search(q["terms"], k=q["k"], mode=mode)
+                   for q in queries}
+            assert _batch(spark, index, queries, mode) == exp, (index_dir, mode)
+        return exp
+
+    check(old)
+    merged = str(tmp_path / "merged")
+    merge_indexes(spark, [old, new], merged)
+    assert check(merged) == {q["query_id"]: Index(spark, full_idx).search(
+        q["terms"], k=q["k"], mode="or") for q in queries}
+    delete_docs(old, range(0, n_a, 5))
+    compacted = str(tmp_path / "compacted")
+    compact(spark, old, compacted)
+    check(compacted)
+
+
 @pytest.mark.parametrize("lost", ["file_and_manifest", "file_only"])
 def test_resume_after_partial_failure(spark, transcripts_small, tmp_path, lost):
     """A partition whose postings file is gone is rebuilt, whether its

@@ -96,14 +96,18 @@ def test_batch_fold_and_topk_stay_in_the_jvm(spark, built_index):
     from a collected list) and the per-query top-k is cut per partition by a
     Partial WindowGroupLimit below the query_id exchange, so the decode is
     the plan's only Python pass, and it runs once in both modes (AND has no
-    second decode of a rare term's postings; term00071 has df 3)."""
+    second decode of a rare term's postings; term00071 has df 3), excluded
+    terms included.  The decoded postings cross the plan's one doc_id
+    exchange below the broadcast term join, so no exchange is keyed on
+    (query_id, doc_id); the query frame is a local table (no RDD scan
+    through Python workers), and the result is not range-sorted."""
     from localsearchengine_spark.operators.batch_query import run_queries
     from localsearchengine_spark.operators.search import Index
 
     idx_dir, _, _ = built_index
     index = Index(spark, idx_dir)
     queries = [{"query_id": 0, "terms": ["spark", "join"], "k": 5},
-               {"query_id": 1, "terms": ["merge"], "k": 10},
+               {"query_id": 1, "terms": ["merge"], "k": 10, "exclude": ["spark"]},
                {"query_id": 2, "terms": ["spark", "term00071"], "k": 5}]
     for mode in ("or", "and"):
         plan = plan_of(run_queries(spark, index, queries, mode=mode))
@@ -115,9 +119,15 @@ def test_batch_fold_and_topk_stay_in_the_jvm(spark, built_index):
                       if "WindowGroupLimit" in b.splitlines()[0] and b.rstrip().endswith("Partial")]
         (exchange,) = [i for i, b in nodes.items()
                        if re.search(r"hashpartitioning\(query_id#\d+L, \d+\)", b)]
+        (doc_exchange,) = [i for i, b in nodes.items() if "hashpartitioning(doc_id#" in b]
+        (join,) = [i for i, b in nodes.items() if "BroadcastHashJoin" in b.splitlines()[0]]
+        keys = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
         assert "ObjectHashAggregate" not in plan, mode
         assert tree.count("MapInArrow") == 1, mode  # the decode
         assert line_of[exchange] < line_of[partial], mode  # the tree prints parents first
+        assert line_of[join] < line_of[doc_exchange], mode
+        assert not [k for k in keys if "query_id#" in k and "doc_id#" in k], (mode, keys)
+        assert "Scan ExistingRDD" not in plan and "rangepartitioning" not in plan, mode
 
 
 def test_b28_bucketed_join_is_shuffle_free(spark):
