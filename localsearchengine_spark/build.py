@@ -3,7 +3,9 @@
 Index layout on disk (Parquet locally; Iceberg tables in prod — io.py):
 
     index_dir/
-      meta.json        build_id, BuildConfig, snapshot, N, avgdl, P, status
+      meta.json        build_id, BuildConfig, snapshot, N, avgdl, P, status,
+                       hot_salts + salt_buckets (the salt rule), skew,
+                       elapsed_s (the last run's stage walls)
       docs/            doc_id, conv_id, turn_idx, role, tool, ts, text
       postings/        part-{pid}.parquet — term, salt, df, cf, blocks
                        array<struct<n,max_doc_id,tf_norm_max,max_tf,min_dl,
@@ -18,6 +20,11 @@ Resumability (A11, BASELINE.json:6 "per-partition lineage checkpoints for
 resumable builds"): every posting shuffle partition commits its own segment
 file + manifest marker atomically; ``resume`` re-runs only pending partitions
 against the *same pinned input snapshot* and is a no-op on a finished build.
+
+A build is a straight line: the docs stage writes the numbered doc store; N
+is the docs files' footer row count; one analyzer pass emits packed postings
+that are persisted and feed both the corpus stats / hot-term scan (a JVM
+aggregate) and the salted encode (postings.py has the dataflow).
 """
 
 from __future__ import annotations
@@ -27,11 +34,13 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import SparkSession
 
 from localsearchengine_spark.config import BuildConfig
 from localsearchengine_spark.operators import postings as P_mod
 from localsearchengine_spark.operators.docids import number_turns, range_turns
+from localsearchengine_spark.operators.merge import docs_files
 from localsearchengine_spark.sources.io import input_snapshot_id, scan_transcripts
 from localsearchengine_spark.utils import atomic_write_json, read_json
 
@@ -87,8 +96,9 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def _tune_split_conf(spark: SparkSession, docs_dir: str) -> dict[str, str]:
-    """Size parquet splits so the tokenize passes use every core.
+def _tune_split_conf(spark: SparkSession, source: str) -> dict[str, str]:
+    """Size parquet splits so the docs stage and the tokenize pass use every
+    core.
 
     On a real cluster reading a 100 TB table the natural 128 MB splits give
     thousands of tasks and this is a no-op (the computed target caps at the
@@ -99,7 +109,7 @@ def _tune_split_conf(spark: SparkSession, docs_dir: str) -> dict[str, str]:
     keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
     saved = {k: spark.conf.get(k) for k in keys}
     par = spark.sparkContext.defaultParallelism
-    total = _dir_bytes(docs_dir)
+    total = _dir_bytes(source)
     if total == 0:  # non-filesystem source (e.g. iceberg:) — leave defaults
         return saved
     target = min(128 * 1024 * 1024, max(1024 * 1024, total // (par * 2)))
@@ -118,7 +128,7 @@ def _write_docstore(
     doc_id_base: int = 0, num_partitions: int = 0,
 ) -> None:
     """Docs stage: stable docIDs (A2) + column-pruned write — pure JVM, one
-    range shuffle, no Python pass (corpus stats come from stats_hot_scan).
+    range shuffle, no Python pass (corpus stats come from the emit).
 
     The numbered frame is written as it is: P files of disjoint, sorted
     doc_id ranges, so Index.fetch_docs prunes files by their min/max stats
@@ -174,106 +184,93 @@ def build_index(
         atomic_write_json(meta_p, meta)
     doc_id_base = int(meta.get("doc_id_base", 0))
 
+    done = _completed_pids(index_dir)
+    if "hot_salts" in meta and "salt_buckets" not in meta and done:
+        raise RuntimeError(
+            f"cannot resume {index_dir}: its finished postings partitions "
+            "were salted by an older rule (meta.json has hot_salts but no "
+            "salt_buckets); delete the index directory and rebuild it"
+        )
+
     report = BuildReport(build_id=build_id)
     P = conf.num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if "num_partitions" in meta:
         P = int(meta["num_partitions"])  # resume must reuse the pinned P
     report.num_partitions = P
 
-    # ---- stages: docs write (A2, JVM) ∥ stats+hot scan (A5+A7, Python) -----
-    # Both depend only on the source, so on a fresh build they run as
-    # concurrent Spark jobs in one context (FIFO scheduler interleaves the
-    # stages): the wall time is max() of the two instead of their sum.
-    # The stats pass reads only the text column either way.
-    do_docs = not os.path.exists(_docs_complete_marker(index_dir))
-    do_stats = "hot_salts" not in meta or "n_docs" not in meta
-    stats_result: dict = {}
-    t0 = time.time()
-    if do_docs and do_stats:
-        saved = _tune_split_conf(spark, source)
-        try:
-            src_text = scan_transcripts(spark, source).select("text")
-
-            def _stats_job():
-                try:
-                    stats_result["v"] = P_mod.stats_hot_scan(src_text, conf)
-                except BaseException as e:  # surfaced after join
-                    stats_result["err"] = e
-
-            import threading
-
-            th = threading.Thread(target=_stats_job, daemon=True)
-            th.start()
-            try:
-                _write_docstore(spark, source, index_dir, conf, doc_id_base, num_partitions=P)
-            finally:
-                th.join()
-        finally:
-            _restore_conf(spark, saved)
-        if "err" in stats_result:
-            raise stats_result["err"]
-    elif do_docs:
-        _write_docstore(spark, source, index_dir, conf, doc_id_base, num_partitions=P)
-    if do_docs:
-        meta["num_partitions"] = P
-        atomic_write_json(meta_p, meta)
-        atomic_write_json(_docs_complete_marker(index_dir), {"build_id": build_id})
-    report.elapsed_s["docs"] = round(time.time() - t0, 3)
-
-    saved_split_conf = _tune_split_conf(spark, os.path.join(index_dir, "docs"))
+    saved_split_conf = _tune_split_conf(spark, source)
     try:
-        docs = spark.read.parquet(os.path.join(index_dir, "docs"))
-
-        # ---- corpus stats + hot-term scan (resume path runs it here) -------
+        # ---- stage: docs write (A2, JVM) -----------------------------------
         t0 = time.time()
-        if do_stats:
-            n, tok, hot = stats_result.get("v") or P_mod.stats_hot_scan(docs, conf)
-            meta.update(
-                {
-                    "n_docs": n,
-                    "avgdl": (tok / n if n else 0.0),
-                    "total_tokens": tok,
-                    "hot_salts": hot,
-                }
-            )
+        if not os.path.exists(_docs_complete_marker(index_dir)):
+            _write_docstore(spark, source, index_dir, conf, doc_id_base, num_partitions=P)
+            meta["num_partitions"] = P
             atomic_write_json(meta_p, meta)
-        hot_salts = {k: int(v) for k, v in meta["hot_salts"].items()}
-        report.n_docs = int(meta["n_docs"])
-        report.avgdl = float(meta["avgdl"])
-        report.total_tokens = int(meta["total_tokens"])
-        report.hot_terms = len(hot_salts)
-        report.elapsed_s["stats_hot_scan"] = round(time.time() - t0, 3)
+            atomic_write_json(_docs_complete_marker(index_dir), {"build_id": build_id})
+        report.elapsed_s["docs"] = round(time.time() - t0, 3)
 
-        # ---- stage: salted shuffle build of compressed postings (A4,A6-A9) ----
+        # ---- one tokenize pass: emit, persisted for stats and encode (A4) --
         t0 = time.time()
-        done = _completed_pids(index_dir)
         pending = sorted(set(range(P)) - done)
         report.partitions_skipped = len(done)
-        if pending:
-            emitted = P_mod.emit_postings(
-                docs, conf, hot_salts, report.n_docs, doc_id_base=doc_id_base
+        # stats and the salt rule are recorded together; a meta from before
+        # the rule was recorded gets both again (no partition is finished)
+        do_stats = "salt_buckets" not in meta
+        emitted = None
+        if pending or do_stats:
+            n_docs = sum(f[2] for f in docs_files(index_dir))
+            docs = spark.read.parquet(os.path.join(index_dir, "docs"))
+            emitted = P_mod.emit_postings(docs, conf, n_docs, doc_id_base).persist(
+                StorageLevel.MEMORY_AND_DISK
             )
-            P_mod.build_posting_partitions(
-                emitted,
-                conf=conf,
-                avgdl=report.avgdl,
-                num_partitions=P,
-                postings_dir=os.path.join(index_dir, "postings"),
-                manifest_dir=os.path.join(index_dir, "manifest"),
-                build_id=build_id,
-                pending=pending if done else None,
-            )
-            # the job succeeded ⇒ partitions with no data are complete-empty
-            still = sorted(set(range(P)) - _completed_pids(index_dir))
-            for pid in still:
-                atomic_write_json(
-                    os.path.join(index_dir, "manifest", f"postings-{pid:05d}.json"),
-                    {"build_id": build_id, "stage": "postings", "pid": pid,
-                     "postings": 0, "terms": 0, "bytes": 0, "elapsed_s": 0.0,
-                     "top_terms": []},
+        try:
+            # ---- corpus stats + hot-term scan (A5, A7) ---------------------
+            if do_stats:
+                tok, hot = P_mod.stats_hot_scan(emitted, conf)
+                meta.update(
+                    {
+                        "n_docs": n_docs,
+                        "avgdl": (tok / n_docs if n_docs else 0.0),
+                        "total_tokens": tok,
+                        "hot_salts": hot,
+                        "salt_buckets": P_mod.salt_buckets(conf, n_docs),
+                    }
                 )
-        report.partitions_built = len(pending)
-        report.elapsed_s["postings"] = round(time.time() - t0, 3)
+                atomic_write_json(meta_p, meta)
+            hot_salts = {k: int(v) for k, v in meta["hot_salts"].items()}
+            report.n_docs = int(meta["n_docs"])
+            report.avgdl = float(meta["avgdl"])
+            report.total_tokens = int(meta["total_tokens"])
+            report.hot_terms = len(hot_salts)
+            report.elapsed_s["stats_hot_scan"] = round(time.time() - t0, 3)
+
+            # ---- stage: salted shuffle build of compressed postings (A6-A9)
+            t0 = time.time()
+            if pending:
+                P_mod.build_posting_partitions(
+                    P_mod.salt_hot_terms(emitted, hot_salts, int(meta["salt_buckets"])),
+                    conf=conf,
+                    avgdl=report.avgdl,
+                    num_partitions=P,
+                    postings_dir=os.path.join(index_dir, "postings"),
+                    manifest_dir=os.path.join(index_dir, "manifest"),
+                    build_id=build_id,
+                    pending=pending if done else None,
+                )
+                # the job succeeded ⇒ partitions with no data are complete-empty
+                still = sorted(set(range(P)) - _completed_pids(index_dir))
+                for pid in still:
+                    atomic_write_json(
+                        os.path.join(index_dir, "manifest", f"postings-{pid:05d}.json"),
+                        {"build_id": build_id, "stage": "postings", "pid": pid,
+                         "postings": 0, "terms": 0, "bytes": 0, "elapsed_s": 0.0,
+                         "top_terms": []},
+                    )
+            report.partitions_built = len(pending)
+            report.elapsed_s["postings"] = round(time.time() - t0, 3)
+        finally:
+            if emitted is not None:
+                emitted.unpersist()
     finally:
         _restore_conf(spark, saved_split_conf)
 
@@ -288,11 +285,12 @@ def build_index(
         if f.startswith("postings-")
     ]
     report.skew = P_mod.skew_report(manifest_rows)
-    meta["status"] = "complete"
-    meta["skew"] = report.skew
-    atomic_write_json(meta_p, meta)
     report.elapsed_s["dictionary"] = round(time.time() - t0, 3)
     report.elapsed_s["total"] = round(time.time() - t_all, 3)
+    meta["status"] = "complete"
+    meta["skew"] = report.skew
+    meta["elapsed_s"] = report.elapsed_s
+    atomic_write_json(meta_p, meta)
     return report
 
 

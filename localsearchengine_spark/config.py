@@ -61,6 +61,13 @@ class BM25Config:
         return BM25Config(**json.loads(s))
 
 
+# Upper bound on BuildConfig.num_salts: the emit packs one row per (term,
+# doc_id bucket) per Arrow batch, with up to num_salts buckets, so a batch
+# splits into up to num_salts rows per term and a larger count would stop
+# the emit from packing.
+MAX_SALTS = 4096
+
+
 @dataclass(frozen=True)
 class BuildConfig:
     """Index-build knobs (SURVEY.md §2 Part A: A6–A12)."""
@@ -68,9 +75,20 @@ class BuildConfig:
     bm25: BM25Config = field(default_factory=BM25Config)
     block_size: int = 128          # postings per compressed block (A8)
     num_partitions: int = 0        # 0 → spark.sql.shuffle.partitions
-    hot_df_threshold: int = 50_000  # df above which a term is salted (A7)
-    num_salts: int = 16            # salt buckets for hot terms (A7)
+    # a term with df above this is salted into S_t = min(ceil(df /
+    # hot_df_threshold), num_salts) doc_id-range rows (A7)
+    hot_df_threshold: int = 50_000
+    # 1..MAX_SALTS; caps S_t and the emit's doc_id bucket count C =
+    # min(num_salts, ceil(N / hot_df_threshold)): a doc's bucket is
+    # (doc_id - base) * C // N, and a hot term's salt is bucket * S_t // C
+    num_salts: int = 16
     store_positions: bool = False  # positional postings (phrase queries)
+
+    def __post_init__(self):
+        if not 1 <= self.num_salts <= MAX_SALTS:
+            raise ValueError(
+                f"num_salts must be in [1, {MAX_SALTS}], got {self.num_salts}"
+            )
 
     def to_json(self) -> str:
         d = asdict(self)

@@ -12,10 +12,12 @@ exactly as the build indexed it; Python's ``str.lower`` (and Spark's
 
 Three forms of the same analyzer:
   * :func:`tokenize_text` — driver-side pure function (query analysis, A13)
-  * :func:`tokenize_pandas` — pd.Series[str] → pd.Series[list[str]] (build, A3)
-  * :func:`term_freq_frame` — batch text → long-form (row, term, tf, dl)
-    pandas frame, the fused posting-emission kernel (A4), so no
+  * :func:`tokenize_pandas` — pd.Series[str] → pd.Series[list[str]]
+  * :func:`term_freq_arrow` — a batch of Arrow text → per-(row, term) tf
+    and dl arrays, the fused posting-emission kernel (A4), so no
     per-(doc,term) shuffle is ever needed for tf.
+:func:`_term_freq_frame_pandas` is the independent findall reference the
+Arrow kernel is tested against (and its fallback for non-class patterns).
 """
 
 from __future__ import annotations
@@ -56,70 +58,25 @@ def separator_pattern(cfg: BM25Config) -> str | None:
     return f"[^{m.group(1)}]+" if m else None
 
 
-_EMPTY_TFF = {
-    "row": pd.array([], dtype=np.int64), "term": pd.array([], dtype=object),
-    "tf": pd.array([], dtype=np.int64), "dl": pd.array([], dtype=np.int64),
-}
-
-
-def term_freq_frame(
-    texts: pd.Series, cfg: BM25Config | None = None, with_positions: bool = False
-) -> pd.DataFrame:
-    """Batch kernel: texts → long-form ``(row, term, tf, dl)``.
-
-    ``row`` is the positional index into ``texts`` (0..len-1); ``dl`` is the
-    token count of that text.  Hot path is pure Arrow C++ (utf8_lower +
-    RE2 split + dictionary-encode) plus a run-aware stable sort for the
-    (row, term) counts — the key stream is already row-ordered, which
-    timsort exploits.  Splitting on the complemented class is equivalent to
-    findall of the class except for empty boundary artifacts, which are
-    dropped explicitly; any non-class token pattern falls back to the
-    pandas findall path (same output, bit-identical).
-    """
-    cfg = cfg or BM25Config()
-    sep = separator_pattern(cfg)
-    if sep is None:
-        return _term_freq_frame_pandas(texts, cfg, with_positions)
-    # thin wrapper over the ONE Arrow hot-path implementation
-    # (term_freq_arrow) — the analyzer is the #1 rank-identity knob, so
-    # there must be exactly one class-pattern tokenize+count kernel; the
-    # independent reference stays _term_freq_frame_pandas (findall path).
-    res = term_freq_arrow(
-        pa.array(texts.reset_index(drop=True), type=pa.string()),
-        cfg,
-        with_positions=with_positions,
-    )
-    if res is None:
-        return pd.DataFrame(_EMPTY_TFF)
-    out = pd.DataFrame(
-        {
-            "row": res["row"],
-            "term": res["term"].to_numpy(zero_copy_only=False).astype(object),
-            "tf": res["tf"],
-            "dl": res["dl"],
-        }
-    )
-    if with_positions:
-        out["pos"] = np.split(res["pos_flat"], res["pos_off"][1:-1])
-    return out
-
-
 def term_freq_arrow(
     texts, cfg: BM25Config | None = None, with_positions: bool = False
 ) -> dict | None:
-    """Arrow-native sibling of :func:`term_freq_frame` for ``mapInArrow``
-    stages: takes a ``pa.Array``/``pa.ChunkedArray`` of text and returns
-    plain arrays — no pandas block consolidation on output and the term
-    column is materialized with a C++ dictionary ``take`` instead of a
-    NumPy object fancy-index.  Returns None for an all-empty batch.
+    """Batch kernel for ``mapInArrow`` stages: a ``pa.Array`` /
+    ``pa.ChunkedArray`` of text → per-(row, term) counts as plain arrays.
+    Returns None for a batch with no tokens.
 
-    Keys: ``row`` (int64 index into the batch), ``term`` (pa.StringArray),
-    ``tf``, ``dl`` (int64), ``codes`` (int64 per-output-row term code),
-    ``uniq`` (object ndarray of the term dictionary — for per-unique-term
-    lookups like hot-salt fan-out), and with positions ``pos_flat`` /
-    ``pos_off`` (int64 values + int32 list offsets, ready for
-    ``pa.ListArray.from_arrays``).  Bit-identical content to
-    :func:`term_freq_frame` (shared tokenize rule; equivalence-tested).
+    Keys: ``row`` (int64 index into the batch), ``codes`` (int64 term code
+    of each output row), ``uniq`` (``pa.StringArray`` term dictionary the
+    codes index), ``tf``, ``dl`` (int64; ``dl`` is the row's token count),
+    and with positions ``pos_flat`` / ``pos_off`` (int64 values + int32
+    list offsets, ready for ``pa.ListArray.from_arrays``).
+
+    Hot path is pure Arrow C++ (utf8_lower + RE2 split + dictionary-encode)
+    plus a run-aware stable sort for the (row, term) counts.  Splitting on
+    the complemented class is equivalent to findall of the class except for
+    empty boundary artifacts, which are dropped explicitly; any non-class
+    token pattern falls back to :func:`_term_freq_frame_pandas` (the same
+    content; equivalence-tested).
     """
     cfg = cfg or BM25Config()
     if isinstance(texts, pa.ChunkedArray):
@@ -132,14 +89,14 @@ def term_freq_arrow(
         pdf = _term_freq_frame_pandas(texts.to_pandas(), cfg, with_positions)
         if not len(pdf):
             return None
+        codes, uniq = pd.factorize(pdf["term"])
         out = {
             "row": pdf["row"].to_numpy(dtype=np.int64),
-            "term": pa.array(pdf["term"], type=pa.string()),
+            "codes": codes.astype(np.int64),
+            "uniq": pa.array(uniq, type=pa.string()),
             "tf": pdf["tf"].to_numpy(dtype=np.int64),
             "dl": pdf["dl"].to_numpy(dtype=np.int64),
         }
-        codes, uniq = pd.factorize(pdf["term"])
-        out["codes"], out["uniq"] = codes.astype(np.int64), np.asarray(uniq, dtype=object)
         if with_positions:
             out["pos_flat"] = np.concatenate(list(pdf["pos"])) if len(pdf) else np.empty(0, np.int64)
             out["pos_off"] = np.concatenate(
@@ -156,16 +113,15 @@ def term_freq_arrow(
         return None
     enc = pc.list_flatten(toks).dictionary_encode()
     codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    uniq = enc.dictionary.to_numpy(zero_copy_only=False).astype(object)
     rows = np.repeat(np.arange(len(arr), dtype=np.int64), lens)
-    empty = np.flatnonzero(uniq == "")
-    if len(empty):
-        sel = codes != empty[0]
+    empty = pc.index(enc.dictionary, "").as_py()
+    if empty >= 0:
+        sel = codes != empty
         rows, codes = rows[sel], codes[sel]
     if len(rows) == 0:
         return None
     dl = np.bincount(rows, minlength=len(arr))
-    V = len(uniq)
+    V = len(enc.dictionary)
     key = rows * V + codes
     order = np.argsort(key, kind="stable")
     sk = key[order]
@@ -179,11 +135,10 @@ def term_freq_arrow(
     out_codes = (u % V).astype(np.int64)
     out = {
         "row": out_row,
-        "term": enc.dictionary.take(pa.array(out_codes)),  # C++ take
+        "codes": out_codes,
+        "uniq": enc.dictionary,
         "tf": tf,
         "dl": dl[out_row],
-        "codes": out_codes,
-        "uniq": uniq,
     }
     if with_positions:
         row_starts = np.cumsum(dl) - dl
@@ -200,7 +155,7 @@ def _term_freq_frame_pandas(
     toks = tokenize_pandas(texts.reset_index(drop=True), cfg)
     lens = toks.str.len().to_numpy(dtype=np.int64)
     if lens.sum() == 0:
-        return pd.DataFrame(_EMPTY_TFF)
+        return pd.DataFrame({"row": [], "term": [], "tf": [], "dl": []})
     flat = np.concatenate([np.asarray(t, dtype=object) for t in toks.to_numpy()])
     rows = np.repeat(np.arange(len(toks), dtype=np.int64), lens)
     counts = (

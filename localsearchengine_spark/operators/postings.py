@@ -6,18 +6,22 @@ posting-list build with salted repartitioning for hot terms", "delta+varint
 block compression of sorted docID postings persisted as ... segments",
 "explicit skew diagnostics and per-partition build metrics".
 
-Dataflow (SURVEY.md §3.1):
+Dataflow (SURVEY.md §3.1) — the corpus is tokenized once per build:
 
-    docs(doc_id, text)
+    docs(doc_id, text)                       N = the docs files' footer rows
       → mapInArrow term_freq_arrow           [Arrow batch, no per-row Python,
         no pandas construction — RecordBatches in and out]
-      → (term, salt, doc_id, tf, dl)         salt: hot terms get doc_id-range
-                                             buckets so sub-postings are
-                                             disjoint + ordered (A7)
+      → (term, bucket, doc_ids, tfs, dls)    packed: one row per (term,
+        bucket) per batch, bucket = (doc_id − base)·C // N with C =
+        min(num_salts, ⌈N / hot_df_threshold⌉); persisted, because every
+        step below reads it
+      → stats_hot_scan: one JVM aggregate    df = Σ size(doc_ids), tokens =
+        Σ tfs; collects the token total and the hot terms (df > threshold)
+      → salt_hot_terms: salt = bucket·S_t // C for a hot term, else 0 (a
+        JVM expression)
       → filter pmod(hash(term,salt),P) ∈ pending   [resume pruning, A11]
       → repartition(P, term, salt) → sortWithinPartitions(term, salt)
-        [packed rows: one per (term,salt,batch) — doc_id order is restored
-        inside the encode task]
+        [doc_id order is restored inside the encode task]
       → mapInArrow: per Arrow batch, find the (term, salt) group bounds,
         one lexsort by (group, doc_id), one encode_blocks call for all the
         batch's groups (codec, A8) — a group that may continue into the
@@ -31,11 +35,16 @@ deterministic function pmod(murmur3(term,salt), P), so a resumed build prunes
 already-completed partitions *before* the exchange with a cheap filter and
 reproduces the identical partition assignment.
 
-Hot-term salting: salt = floor(doc_id * S_t / N) with S_t = ceil(df_t /
-hot_df_threshold) — contiguous doc_id ranges, so the final posting list for a
-term is the concatenation of its salt rows in salt order (no k-way merge
-needed), and per-task group state is bounded by ~hot_df_threshold postings
-(SURVEY.md §7.4-2).
+Hot-term salting (A7): S_t = min(ceil(df_t / hot_df_threshold), num_salts)
+is at most C, so salt = bucket·S_t // C maps the C buckets onto 0…S_t−1 and
+is non-decreasing in doc_id: a hot term's salt rows hold disjoint doc_id
+ranges in salt order and its posting list is the concatenation of its rows
+in salt order (no k-way merge needed); per-task group state is bounded by
+~hot_df_threshold postings (SURVEY.md §7.4-2).
+
+Salts come from fixed doc_id buckets, not from the packed rows: Spark packs
+several docs files into one split, so one Arrow batch can hold doc_ids with
+gaps, and a packed row is not a contiguous doc_id range.
 """
 
 from __future__ import annotations
@@ -51,117 +60,40 @@ from localsearchengine_spark.config import BuildConfig
 from localsearchengine_spark.operators import codec
 from localsearchengine_spark.utils import atomic_write_json
 
-# One emitted row per (term, salt) PER ARROW BATCH, with the batch's
-# postings packed into array columns — the map-side combine that keeps the
-# build's one big shuffle at ~vocab×batches rows instead of one row per
-# posting (30×+ fewer rows, no per-posting UnsafeRow overhead, and the JVM
-# sort runs on the packed rows).  Postings are re-sorted by doc_id inside
-# the encode task, so the final blocks are bit-identical to a per-posting
-# shuffle regardless of batch boundaries or parallelism.
-EMIT_SCHEMA = (
-    "term string, salt int, doc_ids array<long>, tfs array<long>, dls array<long>"
-)
+# One emitted row per (term, doc_id bucket) PER ARROW BATCH, with the
+# batch's postings packed into array columns — the map-side combine that
+# keeps the build's one big shuffle at ~vocab×batches rows instead of one
+# row per posting (30×+ fewer rows, no per-posting UnsafeRow overhead, and
+# the JVM sort runs on the packed rows).  Postings are re-sorted by doc_id
+# inside the encode task, so the final blocks are bit-identical to a
+# per-posting shuffle regardless of batch boundaries or parallelism.
+_POSTINGS = "doc_ids array<long>, tfs array<long>, dls array<long>"
+EMIT_SCHEMA = f"term string, salt int, {_POSTINGS}"
 EMIT_SCHEMA_POS = EMIT_SCHEMA + ", pos array<long>"
-# salts are capped at 4096 buckets (stats_hot_scan), so this packs a
-# (term_code, salt) pair into one sortable int64 group key
-_SALT_CAP = 4096
-
-# empty string can never be a real term (token_pattern requires ≥1 char),
-# so it is a safe in-band carrier for the per-batch corpus-stats partials.
-_STATS_SENTINEL = ""
+_BUCKETED_SCHEMA = f"term string, bucket int, {_POSTINGS}"
 
 
-def stats_hot_scan(docs: DataFrame, conf: BuildConfig) -> tuple[int, int, dict[str, int]]:
-    """A5 + A7 pass 1 + A12, fused: ONE tokenize pass over the corpus.
-
-    Each Arrow batch emits partial aggregates — ``(term, df_part)`` for the
-    batch's distinct (doc, term) pairs plus one sentinel row carrying the
-    batch's ``(n_docs, n_tokens)`` — so the shuffle moves per-batch vocab
-    rows, not exploded postings, and a single small hash-aggregate action
-    yields exact corpus stats AND the exact hot-term document frequencies.
-
-    → (n_docs, total_tokens, {hot_term: n_salt_buckets})
-    """
-    cfg = conf.bm25
-
-    def partials(it):
-        import pyarrow as pa
-
-        from localsearchengine_spark.functions.analyze import term_freq_arrow
-
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            res = term_freq_arrow(batch.column(0), cfg)
-            if res is None:
-                # token-less batch still counts toward N
-                terms, dfp = pa.array([], type=pa.string()), np.empty(0, np.int64)
-                n_tok = 0
-            else:
-                # per-batch df per unique term in one bincount over codes
-                dfp_all = np.bincount(res["codes"], minlength=len(res["uniq"]))
-                nz = np.flatnonzero(dfp_all)
-                terms = pa.array(res["uniq"][nz], type=pa.string())
-                dfp = dfp_all[nz].astype(np.int64)
-                n_tok = int(res["tf"].sum())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.concat_arrays([terms, pa.array([_STATS_SENTINEL], type=pa.string())]),
-                    pa.array(np.concatenate((dfp, [0])), type=pa.int64()),
-                    pa.array(
-                        np.concatenate((np.zeros(len(dfp), np.int64), [batch.num_rows]))
-                    ),
-                    pa.array(np.concatenate((np.zeros(len(dfp), np.int64), [n_tok]))),
-                ],
-                ["term", "df_part", "n_docs", "n_tokens"],
-            )
-
-    emitted = docs.select("text").mapInArrow(
-        partials, schema="term string, df_part long, n_docs long, n_tokens long"
-    )
-    rows = (
-        emitted.groupBy("term")
-        .agg(
-            F.sum("df_part").alias("df"),
-            F.sum("n_docs").alias("nd"),
-            F.sum("n_tokens").alias("tk"),
-        )
-        .filter(
-            (F.col("term") == _STATS_SENTINEL) | (F.col("df") > conf.hot_df_threshold)
-        )
-        .collect()
-    )
-    n_docs, total_tokens, hot = 0, 0, {}
-    for r in rows:
-        if r["term"] == _STATS_SENTINEL:
-            n_docs, total_tokens = int(r["nd"]), int(r["tk"])
-        else:
-            s_t = int(np.ceil(r["df"] / conf.hot_df_threshold))
-            # num_salts caps the per-term fan-out (bounds shuffle group
-            # count; a capped bucket may then exceed hot_df_threshold).
-            # _SALT_CAP is a hard ceiling: the emit stage packs (term,
-            # salt) into code*_SALT_CAP+salt, so a salt ≥ _SALT_CAP would
-            # alias a different term's group
-            cap = min(conf.num_salts, _SALT_CAP) if conf.num_salts > 0 else _SALT_CAP
-            hot[r["term"]] = int(min(s_t, cap))
-    return n_docs, total_tokens, hot
+def salt_buckets(conf: BuildConfig, n_docs: int) -> int:
+    """C, the emit's doc_id bucket count: num_salts, but no more than
+    ⌈N / hot_df_threshold⌉ — no term's S_t can exceed that, and fewer
+    buckets pack a small corpus's batches into fewer rows."""
+    return max(1, min(conf.num_salts, -(-int(n_docs) // conf.hot_df_threshold)))
 
 
 def emit_postings(
-    docs: DataFrame,
-    conf: BuildConfig,
-    hot_salts: dict[str, int],
-    n_total: int,
-    doc_id_base: int = 0,
+    docs: DataFrame, conf: BuildConfig, n_docs: int, doc_id_base: int = 0
 ) -> DataFrame:
     """A4 — fused tokenize + per-turn tf emission (one Arrow pass, no
-    (doc,term) shuffle: tf is computed within the row's own batch)."""
-    cfg = conf.bm25
-    sc = docs.sparkSession.sparkContext
-    hot_bc = sc.broadcast(hot_salts)
-    n_total = int(n_total)
-    base = int(doc_id_base)
+    (doc,term) shuffle: tf is computed within the row's own batch).
 
+    Rows are packed per (term, bucket) of each Arrow batch, with
+    ``bucket = (doc_id − doc_id_base) · C // n_docs`` and C =
+    :func:`salt_buckets`; the columns are ``term, bucket`` and the
+    EMIT_SCHEMA posting arrays."""
+    cfg = conf.bm25
+    C = salt_buckets(conf, n_docs)
+    n = int(n_docs)
+    base = int(doc_id_base)
     with_pos = bool(conf.store_positions)
 
     def emit(it):
@@ -169,7 +101,6 @@ def emit_postings(
 
         from localsearchengine_spark.functions.analyze import term_freq_arrow
 
-        hot = hot_bc.value
         for batch in it:
             if batch.num_rows == 0:
                 continue
@@ -184,46 +115,26 @@ def emit_postings(
                 batch.schema.get_field_index("doc_id")
             ).to_numpy(zero_copy_only=False).astype(np.int64)
             doc_ids = all_ids[res["row"]]
-            n = len(doc_ids)
-            codes = res["codes"]
-            salts = np.zeros(n, dtype=np.int64)
-            if hot:
-                # hot lookup once per UNIQUE term, then a fancy-index —
-                # not a Python call per posting row
-                s_uniq = np.fromiter(
-                    (hot.get(t, 0) for t in res["uniq"]),
-                    dtype=np.int64,
-                    count=len(res["uniq"]),
-                )
-                s_t = s_uniq[codes]
-                m = s_t > 1
-                if m.any():
-                    salts[m] = (doc_ids[m] - base) * s_t[m] // n_total
-                if salts.max(initial=0) >= _SALT_CAP:
-                    raise ValueError(
-                        f"salt bucket ≥ {_SALT_CAP} would alias another "
-                        "term's group key (stats_hot_scan must clamp)"
-                    )
-            # pack the batch per (term, salt): one output row per group,
+            # pack the batch per (term, bucket): one output row per group,
             # postings sorted by doc_id inside each group
-            key = codes * _SALT_CAP + salts
+            key = res["codes"] * C + (doc_ids - base) * C // n
             order = np.lexsort((doc_ids, key))
             ks = key[order]
-            first = np.empty(n, dtype=bool)
+            first = np.empty(len(ks), dtype=bool)
             first[0] = True
             np.not_equal(ks[1:], ks[:-1], out=first[1:])
             gstarts = np.flatnonzero(first)
-            goff = np.append(gstarts, n).astype(np.int32)
-            gcodes = (ks[gstarts] // _SALT_CAP).astype(np.int64)
-            gsalts = (ks[gstarts] % _SALT_CAP).astype(np.int32)
-            dict_arr = pa.array(res["uniq"], type=pa.string())
+            goff = np.append(gstarts, len(ks)).astype(np.int32)
             tf_ord = res["tf"][order]
-            arrays = [dict_arr.take(pa.array(gcodes)), pa.array(gsalts, type=pa.int32())]
+            arrays = [
+                res["uniq"].take(pa.array(ks[gstarts] // C)),
+                pa.array((ks[gstarts] % C).astype(np.int32)),
+            ]
             arrays += [
                 pa.ListArray.from_arrays(pa.array(goff), pa.array(v, type=pa.int64()))
                 for v in (doc_ids[order], tf_ord, res["dl"][order])
             ]
-            names = ["term", "salt", "doc_ids", "tfs", "dls"]
+            names = ["term", "bucket", "doc_ids", "tfs", "dls"]
             if with_pos:
                 flat = codec.reorder_positions(
                     res["pos_flat"], res["pos_off"][:-1].astype(np.int64),
@@ -240,8 +151,48 @@ def emit_postings(
             yield pa.RecordBatch.from_arrays(arrays, names)
 
     return docs.select("doc_id", "text").mapInArrow(
-        emit, schema=EMIT_SCHEMA_POS if with_pos else EMIT_SCHEMA
+        emit,
+        schema=_BUCKETED_SCHEMA + (", pos array<long>" if with_pos else ""),
     )
+
+
+def stats_hot_scan(emitted: DataFrame, conf: BuildConfig) -> tuple[int, dict[str, int]]:
+    """A5 + A7 pass 1 + A12 over :func:`emit_postings`' rows, in the JVM:
+    per term df = Σ size(doc_ids) and tokens = Σ tfs, then one row holding
+    the corpus token total and the hot terms (df > hot_df_threshold).
+
+    → (total_tokens, {hot_term: S_t}), S_t = min(ceil(df / threshold),
+    num_salts)"""
+    per_term = emitted.groupBy("term").agg(
+        F.sum(F.size("doc_ids")).alias("df"),
+        F.sum(F.aggregate("tfs", F.lit(0).cast("long"), lambda acc, x: acc + x)).alias("tk"),
+    )
+    row = per_term.agg(
+        F.sum("tk").alias("tk"),
+        F.collect_list(
+            F.when(F.col("df") > conf.hot_df_threshold, F.struct("term", "df"))
+        ).alias("hot"),
+    ).collect()[0]
+    thr = conf.hot_df_threshold
+    hot = {r["term"]: min(-(-int(r["df"]) // thr), conf.num_salts) for r in row["hot"]}
+    return int(row["tk"] or 0), hot
+
+
+def salt_hot_terms(emitted: DataFrame, hot_salts: dict[str, int], buckets: int) -> DataFrame:
+    """A7 — :func:`emit_postings`' rows → EMIT_SCHEMA rows: a hot term's
+    salt is ``bucket · S_t // buckets`` (``buckets`` = the emit's C), every
+    other term's is 0.  One ``IN`` set per distinct S_t, so the expression
+    stays small however many terms are hot."""
+    by_s: dict[int, list[str]] = {}
+    for term, s_t in hot_salts.items():
+        if s_t > 1:
+            by_s.setdefault(int(s_t), []).append(term)
+    salt = F.lit(0)
+    for s_t, terms in sorted(by_s.items()):
+        salt = F.when(
+            F.col("term").isin(terms), F.expr(f"bucket * {s_t} div {buckets}")
+        ).otherwise(salt)
+    return emitted.withColumn("bucket", salt.cast("int")).withColumnRenamed("bucket", "salt")
 
 
 def build_posting_partitions(

@@ -2,14 +2,34 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from localsearchengine_spark.config import BM25Config
 from localsearchengine_spark.functions.analyze import (
-    term_freq_frame,
+    _term_freq_frame_pandas,
+    term_freq_arrow,
     tokenize_pandas,
     tokenize_text,
 )
+
+
+def _arrow_frame(texts, cfg=None, with_positions=False) -> pd.DataFrame:
+    """term_freq_arrow's output as the reference kernel's long-form
+    (row, term, tf, dl[, pos]) frame."""
+    res = term_freq_arrow(pa.array(texts, type=pa.string()), cfg, with_positions)
+    if res is None:
+        return pd.DataFrame({"row": [], "term": [], "tf": [], "dl": []})
+    out = pd.DataFrame({
+        "row": res["row"],
+        "term": res["uniq"].take(pa.array(res["codes"])).to_pylist(),
+        "tf": res["tf"],
+        "dl": res["dl"],
+    })
+    if with_positions:
+        out["pos"] = np.split(res["pos_flat"], res["pos_off"][1:-1])
+    return out
 
 
 def test_basic():
@@ -32,8 +52,8 @@ def test_pandas_matches_pure():
         assert list(ser.iloc[i]) == tokenize_text(t)
 
 
-def test_term_freq_frame():
-    out = term_freq_frame(pd.Series(["a b a", "", "b b b"]))
+def test_term_freq_arrow_counts():
+    out = _arrow_frame(["a b a", "", "b b b"])
     got = {(int(r.row), r.term): (int(r.tf), int(r.dl)) for r in out.itertuples()}
     assert got == {(0, "a"): (2, 3), (0, "b"): (1, 3), (2, "b"): (3, 3)}
 
@@ -46,14 +66,7 @@ def test_config_pattern():
 def test_arrow_and_pandas_kernels_agree():
     """The Arrow RE2 split path must be row-for-row identical to the findall
     reference on punctuation runs, unicode, empties, and None."""
-    import pandas as pd
-
-    from localsearchengine_spark.config import BM25Config
-    from localsearchengine_spark.functions.analyze import (
-        _term_freq_frame_pandas,
-        doc_lengths,
-        term_freq_frame,
-    )
+    from localsearchengine_spark.functions.analyze import doc_lengths
 
     texts = pd.Series(
         [
@@ -67,13 +80,9 @@ def test_arrow_and_pandas_kernels_agree():
         ]
     )
     cfg = BM25Config()
-    fast = term_freq_frame(texts, cfg).sort_values(["row", "term"]).reset_index(drop=True)
+    fast = _arrow_frame(texts, cfg).sort_values(["row", "term"]).reset_index(drop=True)
     ref = _term_freq_frame_pandas(texts, cfg).sort_values(["row", "term"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(fast[["row", "term", "tf", "dl"]], ref[["row", "term", "tf", "dl"]])
-    import numpy as np
-
-    from localsearchengine_spark.functions.analyze import tokenize_pandas
-
     assert np.array_equal(
         doc_lengths(texts, cfg),
         tokenize_pandas(texts, cfg).str.len().to_numpy(dtype="int64"),
@@ -81,14 +90,11 @@ def test_arrow_and_pandas_kernels_agree():
 
 
 def test_non_class_pattern_falls_back():
-    import pandas as pd
-
-    from localsearchengine_spark.config import BM25Config
-    from localsearchengine_spark.functions.analyze import separator_pattern, term_freq_frame
+    from localsearchengine_spark.functions.analyze import separator_pattern
 
     cfg = BM25Config(token_pattern=r"[a-z]+(?:'[a-z]+)?")
     assert separator_pattern(cfg) is None
-    out = term_freq_frame(pd.Series(["it's a test"]), cfg)
+    out = _arrow_frame(["it's a test"], cfg)
     assert set(out["term"]) == {"it's", "a", "test"}
 
 
@@ -96,14 +102,6 @@ def test_term_freq_arrow_matches_frame():
     """The Arrow-native emit kernel must produce exactly the same
     (row, term, tf, dl[, positions]) content as the pandas reference
     kernel, on both the class-pattern hot path and the findall fallback."""
-    import numpy as np
-    import pyarrow as pa
-
-    from localsearchengine_spark.config import BM25Config
-    from localsearchengine_spark.functions.analyze import (
-        term_freq_arrow,
-        term_freq_frame,
-    )
 
     texts = pd.Series(
         [
@@ -115,29 +113,14 @@ def test_term_freq_arrow_matches_frame():
     )
     for cfg in (BM25Config(), BM25Config(token_pattern=r"[a-z]+\d*")):
         for with_pos in (False, True):
-            exp = term_freq_frame(texts, cfg, with_positions=with_pos)
-            got = term_freq_arrow(pa.array(texts, type=pa.string()), cfg, with_positions=with_pos)
-            if not len(exp):
-                assert got is None
-                continue
-            def canon(rows):
-                return sorted(rows)
-            exp_rows = list(
-                zip(exp["row"].tolist(), exp["term"].tolist(), exp["tf"].tolist(), exp["dl"].tolist())
-            )
-            got_rows = list(
-                zip(got["row"].tolist(), got["term"].to_pylist(), got["tf"].tolist(), got["dl"].tolist())
-            )
-            assert canon(exp_rows) == canon(got_rows), (cfg.token_pattern, with_pos)
-            if with_pos:
-                exp_pos = {
-                    (r, t): list(p)
-                    for r, t, p in zip(exp["row"], exp["term"], exp["pos"])
-                }
-                off, flat = got["pos_off"], got["pos_flat"]
-                got_pos = {
-                    (r, t): flat[off[i]:off[i + 1]].tolist()
-                    for i, (r, t) in enumerate(zip(got["row"].tolist(), got["term"].to_pylist()))
-                }
-                assert exp_pos.keys() == got_pos.keys()
-                assert all(list(exp_pos[k]) == got_pos[k] for k in exp_pos)
+            exp = _term_freq_frame_pandas(texts, cfg, with_positions=with_pos)
+            got = _arrow_frame(texts, cfg, with_positions=with_pos)
+            cols = ["row", "term", "tf", "dl"] + (["pos"] if with_pos else [])
+            def canon(frame):
+                return sorted(
+                    tuple(np.asarray(v).tolist() for v in r)
+                    for r in frame[cols].itertuples(index=False)
+                )
+
+            assert len(exp) > 0
+            assert canon(exp) == canon(got), (cfg.token_pattern, with_pos)

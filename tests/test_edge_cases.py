@@ -144,3 +144,16 @@ def test_compaction_counts_tokens_like_the_build(spark, dotted_i_index, tmp_path
         meta = json.load(f)
     survivors = pd.Series([_DOTTED_I_ROWS[i] for i in (0, 1, 3)])
     assert meta["total_tokens"] == int(doc_lengths(survivors).sum()) == 7
+
+
+@pytest.mark.parametrize("num_salts", [0, -1, 4097])
+def test_num_salts_out_of_range_is_rejected(num_salts):
+    """num_salts caps the emit's doc_id bucket count: it must be in
+    [1, 4096], and a config with any other value cannot be made (nor read
+    back from a meta.json)."""
+    with pytest.raises(ValueError, match="num_salts"):
+        BuildConfig(num_salts=num_salts)
+    text = BuildConfig(num_salts=4096).to_json().replace("4096", str(num_salts))
+    with pytest.raises(ValueError, match="num_salts"):
+        BuildConfig.from_json(text)
+    assert BuildConfig(num_salts=1).num_salts == 1

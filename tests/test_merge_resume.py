@@ -176,6 +176,42 @@ def test_resume_after_partial_failure(spark, transcripts_small, tmp_path, lost):
     assert rep2.partitions_built == 0
 
 
+def test_resume_refuses_to_mix_salt_rules(spark, transcripts_small, tmp_path):
+    """An index whose meta.json predates the recorded salt rule (hot_salts
+    but no salt_buckets) and that has finished postings partitions is not
+    resumed: its pending partitions would be salted by another rule.  With
+    no finished partition, the resume builds them all under today's rule."""
+    import json
+
+    path, _ = transcripts_small
+    clean = str(tmp_path / "clean")
+    build_index(spark, path, clean, CONF)
+    old = str(tmp_path / "old")
+    shutil.copytree(clean, old)
+    meta_p = os.path.join(old, "meta.json")
+    with open(meta_p) as f:
+        meta = json.load(f)
+    del meta["salt_buckets"]
+    with open(meta_p, "w") as f:
+        json.dump(meta, f)
+    os.remove(os.path.join(old, "postings", "part-00001.parquet"))
+    with pytest.raises(RuntimeError, match="delete the index directory and rebuild"):
+        resume(spark, path, old)
+
+    shutil.rmtree(os.path.join(old, "postings"))
+    for name in os.listdir(os.path.join(old, "manifest")):
+        if name.startswith("postings-"):
+            os.remove(os.path.join(old, "manifest", name))
+    rep = resume(spark, path, old)
+    assert rep.partitions_built == CONF.num_partitions
+    with open(meta_p) as f:
+        assert json.load(f)["salt_buckets"] == 7  # ⌈2,000 / 300⌉ < 16 salts
+    queries = golden_queries()[::6]
+    assert _query_all(Index(spark, old), queries) == _query_all(
+        Index(spark, clean), queries
+    )
+
+
 def test_build_determinism_across_parallelism(spark, transcripts_small, tmp_path):
     """SURVEY.md §5 determinism row: different shuffle parallelism ⇒ same
     dictionary and bit-identical query results (the design-carried guarantee

@@ -75,7 +75,7 @@ def test_emit_pipeline_prunes_docs_scan(spark, built_index):
 
     idx_dir, _, _ = built_index
     docs = spark.read.parquet(os.path.join(idx_dir, "docs"))
-    plan = plan_of(emit_postings(docs, BuildConfig(), {}, 1000))
+    plan = plan_of(emit_postings(docs, BuildConfig(), n_docs=1000))
     read_schema = plan.split("ReadSchema")[1].splitlines()[0]
     assert "text" in read_schema and "conv_id" not in read_schema
 

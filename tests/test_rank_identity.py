@@ -95,3 +95,54 @@ def test_salting_engaged(built_index):
     _, report, _ = built_index
     assert report.hot_terms >= 1
     assert report.skew["partitions"] > 0
+
+
+def test_hot_salt_rows_are_ordered_doc_ranges(built_index):
+    """Each hot term is salted into rows 0…S_t−1, and in salt order each
+    row's first doc_id lies above the previous row's last block's
+    max_doc_id: fetch_postings concatenates a term's rows in salt order."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from localsearchengine_spark.operators.codec import decode_block_lists
+
+    idx_dir, report, _ = built_index
+    with open(os.path.join(idx_dir, "meta.json")) as f:
+        meta = json.load(f)
+    hot = meta["hot_salts"]
+    assert len(hot) == report.hot_terms and max(hot.values()) > 1
+    # 2,000 docs over threshold 300: C = ⌈2000 / 300⌉ = 7 buckets, not 16,
+    # and no hot term needs more salts than that
+    assert meta["salt_buckets"] == 7 and max(hot.values()) <= 7
+    tbl = pq.read_table(os.path.join(idx_dir, "postings"))
+    terms, salts = tbl["term"].to_pylist(), tbl["salt"].to_pylist()
+    rows: dict[str, list[int]] = {}
+    for r, t in enumerate(terms):
+        rows.setdefault(t, []).append(r)
+    blocks = tbl["blocks"].combine_chunks()
+    for term, rs in rows.items():
+        rs.sort(key=lambda r: salts[r])
+        assert [salts[r] for r in rs] == list(range(hot.get(term, 1))), term
+        prev_max = -1
+        for r in rs:
+            row_blocks = blocks.slice(r, 1)
+            doc_ids = decode_block_lists(row_blocks)[1]
+            assert doc_ids[0] > prev_max, (term, salts[r])
+            prev_max = row_blocks.flatten().field("max_doc_id")[-1].as_py()
+            assert prev_max == doc_ids[-1]
+
+
+def test_build_persists_stage_walls(built_index):
+    """meta.json records the build's stage walls next to its skew report."""
+    import json
+    import os
+
+    idx_dir, report, _ = built_index
+    with open(os.path.join(idx_dir, "meta.json")) as f:
+        meta = json.load(f)
+    assert set(meta["elapsed_s"]) == {
+        "docs", "stats_hot_scan", "postings", "dictionary", "total"
+    }
+    assert meta["elapsed_s"] == report.elapsed_s and "skew" in meta
