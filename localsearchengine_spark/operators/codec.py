@@ -6,7 +6,9 @@ postings".  This module owns the posting-block format: its one declaration
 carry the blocks), the build's vectorized encode straight into Arrow
 (:func:`encode_blocks`), the Arrow decode of whole ``blocks`` columns for
 the distributed paths (:func:`decode_block_lists`) and the driver-local
-lazy decode (:class:`StreamBlocks`).  All of it is NumPy over whole
+lazy decode (:class:`StreamBlocks`, built here from a term's Arrow block
+rows).  No other module reads a block field or a stream buffer: the query
+side sees decoded NumPy arrays only.  All of it is NumPy over whole
 streams (vectorized LEB128), with no Python per posting or per block.
 
 Block layout (per posting-list block of up to ``block_size`` postings):
@@ -78,8 +80,9 @@ def encode_varints_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     return out[mask].tobytes(), lengths
 
 
-def decode_varints(buf: bytes, count: int) -> np.ndarray:
-    """Vectorized LEB128 decode → uint64 array of ``count`` values."""
+def decode_varints(buf, count: int) -> np.ndarray:
+    """Vectorized LEB128 decode of a bytes-like ``buf`` → uint64 array of
+    ``count`` values."""
     if count == 0:
         return np.empty(0, dtype=np.uint64)
     b = np.frombuffer(buf, dtype=np.uint8)
@@ -230,19 +233,44 @@ def docids_from_deltas(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
 
 
 class StreamBlocks:
-    """Arrow-native posting-list storage: per stream, ONE contiguous byte
-    buffer plus per-block offsets (straight from the parquet BinaryArray
-    layout, one memcpy per salt row).  decode of the whole list is a single
-    LEB128 pass per stream — concatenated varint streams are themselves a
-    valid varint stream — instead of a NumPy call per 128-entry block.
-    """
+    """One posting list's blocks for lazy decode: per-block metadata as
+    NumPy arrays, and per stream ONE contiguous byte buffer plus per-block
+    offsets (:meth:`from_rows`).  Decoding the whole list is a single LEB128
+    pass per stream — concatenated varint streams are themselves a valid
+    varint stream — instead of a NumPy call per 128-entry block."""
 
-    __slots__ = ("counts", "bufs", "offs")
+    __slots__ = ("counts", "max_doc", "bound_tfn", "bufs", "offs")
 
-    def __init__(self, counts: np.ndarray, bufs: dict, offs: dict):
-        self.counts = counts  # int64 per block
-        self.bufs = bufs      # stream name -> bytes (concatenated blocks)
-        self.offs = offs      # stream name -> int64 offsets (len blocks+1)
+    def __init__(self, counts, max_doc, bound_tfn, bufs: dict, offs: dict):
+        self.counts = counts        # int64 postings per block
+        self.max_doc = max_doc      # int64 last doc_id per block
+        self.bound_tfn = bound_tfn  # float64 tf_norm_max per block
+        self.bufs = bufs            # stream name -> uint8 (blocks concatenated)
+        self.offs = offs            # stream name -> int64 offsets (len blocks+1)
+
+    @classmethod
+    def from_rows(cls, la: pa.ListArray, rows=None) -> "StreamBlocks":
+        """Rows ``rows`` (default: all) of a ``list<block>`` array as one
+        list, e.g. a term's rows from a postings scan in salt (= doc_id
+        range) order: blocks are self-contained, so one Arrow ``take``
+        concatenates them, and the streams are views of its buffers."""
+        if rows is not None:
+            la = la.take(pa.array(rows, type=pa.int64()))
+        blocks = la.flatten()
+        bufs, offs = {}, {}
+        for name in ("doc", "tf", "dl", "pos"):
+            ba = blocks.field(f"{name}_bytes")
+            o = binary_offsets(ba)
+            data = ba.buffers()[2]
+            raw = np.empty(0, np.uint8) if data is None else np.frombuffer(data, np.uint8)
+            bufs[name] = raw[o[0]:o[-1]]
+            offs[name] = o - o[0]
+        return cls(
+            blocks.field("n").to_numpy().astype(np.int64),
+            blocks.field("max_doc_id").to_numpy(),
+            blocks.field("tf_norm_max").to_numpy(),
+            bufs, offs,
+        )
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         total = int(self.counts.sum())
@@ -253,22 +281,21 @@ class StreamBlocks:
             decode_varints(self.bufs["dl"], total).astype(np.int64),
         )
 
+    def _stream_block(self, name: str, i: int, count: int) -> np.ndarray:
+        o = self.offs[name]
+        return decode_varints(self.bufs[name][o[i]:o[i + 1]], count)
+
     def decode_block(self, i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         n = int(self.counts[i])
-        out = []
-        for name in ("doc", "tf", "dl"):
-            o = self.offs[name]
-            out.append(decode_varints(self.bufs[name][o[i]:o[i + 1]], n))
-        doc = np.cumsum(out[0].astype(np.int64))
-        return doc, out[1].astype(np.int64), out[2].astype(np.int64)
+        doc, tf, dl = (self._stream_block(name, i, n) for name in ("doc", "tf", "dl"))
+        return np.cumsum(doc.astype(np.int64)), tf.astype(np.int64), dl.astype(np.int64)
 
-
-def decode_block_positions(pos_bytes: bytes, tfs: np.ndarray) -> list[np.ndarray]:
-    """pos_bytes of one block + its per-posting tf array → per-posting
-    ascending position arrays."""
-    total = int(tfs.sum())
-    flat = decode_varints(bytes(pos_bytes), total).astype(np.int64)
-    return np.split(flat, np.cumsum(tfs)[:-1])
+    def decode_positions(self, i: int) -> tuple[np.ndarray, list[np.ndarray]]:
+        """Block ``i``'s doc_ids and each posting's ascending within-doc
+        positions (the list must come from a positional index)."""
+        ids, tfs, _ = self.decode_block(i)
+        flat = self._stream_block("pos", i, int(tfs.sum())).astype(np.int64)
+        return ids, np.split(flat, np.cumsum(tfs)[:-1])
 
 
 def reorder_positions(
@@ -312,33 +339,21 @@ def decode_block_lists(la, with_pos: bool = False):
     """Decode an Arrow ``list<block struct>`` array (one posting list per
     row, e.g. a RecordBatch's ``blocks`` column) straight from its buffers.
 
-    Each varint stream of all rows is ONE contiguous buffer slice decoded in
-    a single LEB128 pass (concatenated varint streams are themselves a valid
-    stream; blocks are self-contained, so :func:`docids_from_deltas`
-    restores absolutes across block boundaries) — no Python object per
+    All rows read as one :class:`StreamBlocks`, so each varint stream is
+    decoded in a single LEB128 pass (:func:`docids_from_deltas` restores
+    absolutes across block and row boundaries) — no Python object per
     block.  Returns ``None`` when the rows hold no blocks, else
     ``(row_off, doc_ids, tfs, dls, pos)``: row i owns postings
     ``row_off[i]:row_off[i+1]`` of the int64 arrays, and ``pos`` (None
     unless ``with_pos``) is the flat position stream in which posting j owns
     ``tfs[j]`` positions."""
     blk_off = la.offsets.to_numpy().astype(np.int64)
-    lo, hi = int(blk_off[0]), int(blk_off[-1])
-    if hi == lo:
+    if blk_off[-1] == blk_off[0]:
         return None
-    flat = la.values
-    counts = flat.field("n").to_numpy().astype(np.int64)[lo:hi]
-    total = int(counts.sum())
-
-    def stream(name: str) -> bytes:
-        ba = flat.field(f"{name}_bytes")
-        boffs = binary_offsets(ba)
-        return bytes(ba.buffers()[2][boffs[lo] : boffs[hi]])
-
-    doc_ids = docids_from_deltas(decode_varints(stream("doc"), total), counts)
-    tfs = decode_varints(stream("tf"), total).astype(np.int64)
-    dls = decode_varints(stream("dl"), total).astype(np.int64)
+    sb = StreamBlocks.from_rows(la)
+    doc_ids, tfs, dls = sb.decode_all()
     pos = None
     if with_pos:
-        pos = decode_varints(stream("pos"), int(tfs.sum())).astype(np.int64)
-    cs = np.concatenate(([0], np.cumsum(counts)))
-    return cs[blk_off - lo], doc_ids, tfs, dls, pos
+        pos = decode_varints(sb.bufs["pos"], int(tfs.sum())).astype(np.int64)
+    cs = np.concatenate(([0], np.cumsum(sb.counts)))
+    return cs[blk_off - blk_off[0]], doc_ids, tfs, dls, pos

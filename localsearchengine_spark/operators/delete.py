@@ -29,6 +29,7 @@ where rewriting the index per delete is absurd):
 from __future__ import annotations
 
 import os
+import time
 import uuid
 
 import numpy as np
@@ -154,7 +155,9 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     indexes compact too: each surviving posting's position run rides
     through the same kernel, so phrase queries keep working afterwards.
     The meta's ``doc_id_high_water`` keeps appends numbering above the
-    deleted ids too, so no deleted doc's id is reused."""
+    deleted ids too, so no deleted doc's id is reused.  Its ``elapsed_s``
+    holds the compaction's own stage walls (stats, docs, postings,
+    dictionary, total), not the source build's."""
     import pyarrow as pa
 
     from localsearchengine_spark.operators import codec
@@ -167,6 +170,8 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     from localsearchengine_spark.operators.search import Index
     from localsearchengine_spark.utils import atomic_write_json, read_json
 
+    t_all = t0 = time.time()
+    elapsed: dict[str, float] = {}
     index = Index(spark, index_dir)
     conf = index.conf
     ts = load_tombstones(index_dir)
@@ -204,7 +209,9 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
         raise ValueError("compaction would delete every document")
     total_tokens_new = int(index.meta["total_tokens"]) - tok_del
     avgdl_new = total_tokens_new / n_new
+    elapsed["stats"] = round(time.time() - t0, 3)
 
+    t0 = time.time()
     os.makedirs(out_dir, exist_ok=True)
     build_id = uuid.uuid4().hex[:12]
     new_docs = docs.join(F.broadcast(ts_df), "doc_id", "left_anti")
@@ -215,7 +222,9 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
         .write.mode("overwrite")
         .parquet(os.path.join(out_dir, "docs"))
     )
+    elapsed["docs"] = round(time.time() - t0, 3)
 
+    t0 = time.time()
     postings = spark.read.schema(codec.postings_spark_schema()).parquet(
         os.path.join(index_dir, "postings")
     )
@@ -231,9 +240,12 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
         manifest_dir=manifest_dir,
         build_id=build_id,
     )
+    elapsed["postings"] = round(time.time() - t0, 3)
+    t0 = time.time()
     write_dictionary(
         spark, os.path.join(out_dir, "postings"), os.path.join(out_dir, "dictionary")
     )
+    elapsed["dictionary"] = round(time.time() - t0, 3)
     atomic_write_json(
         os.path.join(manifest_dir, "docs-complete.json"), {"build_id": build_id}
     )
@@ -254,6 +266,7 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
             "deleted_docs": n_del,
             "doc_id_high_water": next_doc_id(index_dir),
             "status": "complete",
+            "elapsed_s": {**elapsed, "total": round(time.time() - t_all, 3)},
         }
     )
     atomic_write_json(os.path.join(out_dir, "meta.json"), meta)

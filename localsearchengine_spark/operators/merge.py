@@ -71,8 +71,14 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> d
     before ``out_dir`` is created, when two inputs' doc_id ranges overlap.
 
     ``out_dir/docs`` links every input docs file (P more per append);
-    ``delete.compact(spark, out_dir, new_dir)`` rewrites it into P files."""
-    t0 = time.time()
+    ``delete.compact(spark, out_dir, new_dir)`` rewrites it into P files.
+
+    The meta records the merge's own stage walls under ``elapsed_s``
+    (docs, postings, dictionary, total).  It has no ``hot_salts`` /
+    ``salt_buckets``: the inputs' rows keep their own salts, so a merged
+    index follows no single salt rule, and it is never resumed."""
+    t_all = t0 = time.time()
+    elapsed: dict[str, float] = {}
     metas = [read_json(os.path.join(d, "meta.json")) for d in index_dirs]
     for m, d in zip(metas, index_dirs):
         if m.get("status") != "complete":
@@ -115,8 +121,10 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> d
             os.link(f[3], dst)
         except OSError:  # another filesystem, or no hard links
             shutil.copyfile(f[3], dst)
+    elapsed["docs"] = round(time.time() - t0, 3)
 
     # ---- postings -----------------------------------------------------------
+    t0 = time.time()
     posts = None
     for d in index_dirs:
         part = (
@@ -127,11 +135,15 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> d
         posts = part if posts is None else posts.unionByName(part)
     merged = _merge_ordered(posts, cfg.k1, cfg.b, avgdl)
     merged.write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
+    elapsed["postings"] = round(time.time() - t0, 3)
 
     # ---- dictionary (same shape + adaptive path as build.py) ----------------
     from localsearchengine_spark.operators.postings import write_dictionary
 
+    t0 = time.time()
     write_dictionary(spark, os.path.join(out_dir, "postings"), os.path.join(out_dir, "dictionary"))
+    elapsed["dictionary"] = round(time.time() - t0, 3)
+    elapsed["total"] = round(time.time() - t_all, 3)
 
     meta = {
         "build_id": uuid.uuid4().hex[:12],
@@ -145,7 +157,7 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str], out_dir: str) -> d
         "num_partitions": int(metas[0]["num_partitions"]),
         "doc_id_high_water": max(next_doc_id(d) for d in index_dirs),
         "merged_from": len(index_dirs),
-        "merge_elapsed_s": round(time.time() - t0, 3),
+        "elapsed_s": elapsed,
     }
     # A22 interplay: tombstones of the inputs carry into the merged index —
     # merging must never resurrect a deleted doc.  Stats stay the inputs'

@@ -3,10 +3,18 @@ decode, conjunctive intersection, exhaustive BM25 scoring, top-k.
 
 Interactive queries run driver-local over decoded NumPy arrays (SURVEY.md
 §3.2): a top-10 over a handful of terms must not pay Spark job-launch
-latency.  Posting fetch IS a Spark scan with predicate pushdown on ``term``
-(parquet row-group pruning + column pruning), so only the queried terms'
-compressed blocks cross the wire.  The distributed paths live in
-``batch_query.py`` (A20).
+latency.  Posting fetch is a pyarrow scan with predicate pushdown on
+``term``; ``codec.StreamBlocks`` turns a term's block rows into lazily
+decoded arrays, so nothing here reads the block layout.  The distributed
+paths live in ``batch_query.py`` (A20).
+
+Modes: "and" is :func:`_and_topk` (:func:`_intersect`, rarest list first
+with block-skipping probes, which also serves the query language's AND
+and phrases); "wand" is ``wand.wand_topk``; "or" is :func:`_or_topk`,
+exhaustive scoring over fully decoded lists (:func:`_score_at`) that
+shares no lookup code with the others — the reference WAND and AND are
+tested against.  AND, WAND and the query language score with
+``wand._exact_scores``; every path cuts with ``wand._topk``.
 
 Determinism contract (SURVEY.md §2.4): float64 everywhere; per-doc score is
 the sum of term contributions in **sorted term order**; ties broken by
@@ -24,8 +32,15 @@ from localsearchengine_spark.config import BM25Config, BuildConfig
 from localsearchengine_spark.functions.analyze import tokenize_text
 from localsearchengine_spark.functions.bm25 import tf_norm_np
 from localsearchengine_spark.operators import codec
-from localsearchengine_spark.operators.delete import _isin_sorted
-from localsearchengine_spark.operators.wand import wand_topk
+from localsearchengine_spark.operators.delete import _isin_sorted, load_tombstones
+from localsearchengine_spark.operators.wand import (
+    _contrib_at,
+    _exact_scores,
+    _lookup,
+    _topk,
+    wand_topk,
+)
+from localsearchengine_spark.sources import io as lse_io
 
 
 class TermPostings:
@@ -45,15 +60,13 @@ class TermPostings:
 
     def __init__(self, term, idf, df, avgdl, cfg,
                  streams: codec.StreamBlocks,
-                 block_max_doc: np.ndarray,
-                 block_bound_tfn: np.ndarray,
                  tombstones: np.ndarray | None = None):
         self.term = term
         self.idf = float(idf)
         self.df = int(df)
         self._streams = streams
-        self.block_max_doc = block_max_doc
-        self.block_bound_tfn = block_bound_tfn
+        self.block_max_doc = streams.max_doc
+        self.block_bound_tfn = streams.bound_tfn
         self.block_counts = streams.counts
         self._avgdl = float(avgdl)
         self._cfg = cfg
@@ -138,10 +151,7 @@ class TermPostings:
         inside = bi < self.n_blocks
         for b in np.unique(bi[inside]):
             sel_ids = ids[inside & (bi == b)]
-            bids, btfs, _ = self._streams.decode_block(int(b))
-            o = self._streams.offs["pos"]
-            raw = self._streams.bufs["pos"][o[b]:o[b + 1]]
-            plist = codec.decode_block_positions(raw, btfs)
+            bids, plist = self._streams.decode_positions(int(b))
             pos_idx = np.searchsorted(bids, sel_ids)
             for j, did in zip(pos_idx, sel_ids):
                 if j < len(bids) and bids[j] == did:
@@ -153,11 +163,8 @@ class Index:
     """Read-side handle over a built index directory."""
 
     def __init__(self, spark: SparkSession | None, index_dir: str):
-        from localsearchengine_spark.sources import io as lse_io
-
         self.spark = spark
         self.index_dir = index_dir
-        self._io = lse_io
         meta = lse_io.read_json_uri(os.path.join(index_dir, "meta.json"))
         if meta.get("status") != "complete":
             raise RuntimeError(f"index at {index_dir} is not complete")
@@ -172,15 +179,11 @@ class Index:
         # read path; deletes issued against a live handle need
         # reload_tombstones() (the posting cache must drop its masked
         # decodes).  Stats (N/avgdl/idf) stay as-built until compact().
-        from localsearchengine_spark.operators.delete import load_tombstones
-
         self.tombstones: np.ndarray = load_tombstones(index_dir)
 
     def reload_tombstones(self) -> int:
         """Re-read the tombstone set and invalidate cached postings; returns
         the tombstone count now in effect."""
-        from localsearchengine_spark.operators.delete import load_tombstones
-
         self.tombstones = load_tombstones(self.index_dir)
         self._cache.clear()
         return int(len(self.tombstones))
@@ -191,7 +194,7 @@ class Index:
         per fetch."""
         ds_obj = self._datasets.get(sub)
         if ds_obj is None:
-            ds_obj = self._io.open_dataset(os.path.join(self.index_dir, sub))
+            ds_obj = lse_io.open_dataset(os.path.join(self.index_dir, sub))
             self._datasets[sub] = ds_obj
         return ds_obj
 
@@ -305,28 +308,11 @@ class Index:
                 columns=["term", "salt", "df", "blocks"],
                 filter=ds.field("term").isin(need),
             ).combine_chunks()
-            # arrow-native unpack: per-block metadata to numpy, byte streams
-            # kept as contiguous buffers — no Python dict per block
-            term_col = tbl["term"].to_pylist()
+            la = tbl["blocks"].combine_chunks()
             salt_col = tbl["salt"].to_numpy()
             df_col = tbl["df"].to_numpy()
-            la = tbl["blocks"].combine_chunks()
-            row_off = la.offsets.to_numpy()
-            flat = la.values
-            n_all = flat.field("n").to_numpy().astype(np.int64)
-            md_all = flat.field("max_doc_id").to_numpy()
-            tfn_all = flat.field("tf_norm_max").to_numpy()
-            stream_raw = {}
-            names = ("doc", "tf", "dl") + (
-                ("pos",) if self.conf.store_positions else ()
-            )
-            for name in names:
-                ba = flat.field(f"{name}_bytes")
-                boffs = codec.binary_offsets(ba)
-                bdata = ba.buffers()[2]
-                stream_raw[name] = (boffs, bdata)
             rows_by_term: dict[str, list[int]] = {}
-            for r, t in enumerate(term_col):
+            for r, t in enumerate(tbl["term"].to_pylist()):
                 rows_by_term.setdefault(t, []).append(r)
             for t in need:
                 rows = rows_by_term.get(t)
@@ -334,20 +320,6 @@ class Index:
                     self._cache[t] = None
                     continue
                 rows.sort(key=lambda r: int(salt_col[r]))  # salt = doc_id range order
-                blk_idx = np.concatenate(
-                    [np.arange(row_off[r], row_off[r + 1]) for r in rows]
-                )
-                counts = n_all[blk_idx]
-                bufs, offs = {}, {}
-                for name, (boffs, bdata) in stream_raw.items():
-                    segs = [bytes(bdata[boffs[row_off[r]] : boffs[row_off[r + 1]]])
-                            for r in rows]
-                    bufs[name] = b"".join(segs)
-                    lens = boffs[blk_idx + 1] - boffs[blk_idx]
-                    o = np.empty(len(blk_idx) + 1, dtype=np.int64)
-                    o[0] = 0
-                    np.cumsum(lens, out=o[1:])
-                    offs[name] = o
                 df_total = int(df_col[np.asarray(rows)].sum())
                 self._cache[t] = TermPostings(
                     term=t,
@@ -355,9 +327,7 @@ class Index:
                     df=df_total,
                     avgdl=self.avgdl,
                     cfg=self.cfg,
-                    streams=codec.StreamBlocks(counts, bufs, offs),
-                    block_max_doc=md_all[blk_idx],
-                    block_bound_tfn=tfn_all[blk_idx],
+                    streams=codec.StreamBlocks.from_rows(la, rows),
                     tombstones=self.tombstones,
                 )
         return {t: self._cache[t] for t in terms if self._cache.get(t) is not None}
@@ -450,14 +420,9 @@ class Index:
         groups — Lucene's DisjunctionMaxQuery semantics.  Members are
         analyzed with the standard tokenizer; unknown terms contribute
         nothing; groups are summed in argument order."""
-        norm_groups: list[list[str]] = []
-        for g in groups:
-            toks = sorted({t for m in g for t in tokenize_text(m, self.cfg)})
-            if toks:
-                norm_groups.append(toks)
-        all_terms = sorted({t for g in norm_groups for t in g})
-        post = self.fetch_postings(all_terms)
-        plists = [[post[t] for t in g if t in post] for g in norm_groups]
+        norm = [sorted({t for m in g for t in tokenize_text(m, self.cfg)}) for g in groups]
+        post = self.fetch_postings([t for g in norm for t in g])
+        plists = [[post[t] for t in g if t in post] for g in norm]
         return _dismax_topk([g for g in plists if g], k, self.cfg)
 
     # ---- A35: fuzzy search --------------------------------------------------
@@ -475,18 +440,11 @@ class Index:
         never the sum — and the doc score sums the per-query-term groups.
         Unknown / unexpandable terms contribute nothing.  Requires the
         optional ``spellings`` component (build_spell_index)."""
-        groups: list[list[str]] = []
-        for raw in terms:
-            for t in tokenize_text(raw, self.cfg):
-                cands = self.spell_correct(t, k=max_expansions)
-                if cands:
-                    groups.append([c for c, _ in cands])
-        if not groups:
-            return []
-        all_terms = sorted({t for g in groups for t in g})
-        post = self.fetch_postings(all_terms)
-        plists = [[post[t] for t in g if t in post] for g in groups]
-        return _dismax_topk([g for g in plists if g], k, self.cfg)
+        groups = [
+            [c for c, _ in self.spell_correct(t, k=max_expansions)]
+            for raw in terms for t in tokenize_text(raw, self.cfg)
+        ]
+        return self.search_dismax(groups, k)
 
     def search(self, query: str | list[str], k: int = 10, mode: str = "and",
                prefix_limit: int = 16):
@@ -516,11 +474,8 @@ class Index:
             terms = list(query)
         terms = sorted(set(terms))
         post = self.fetch_postings(terms)
-        missing = [t for t in terms if t not in post]
-        if mode == "and" and missing:
-            return []
         plists = [post[t] for t in terms if t in post]
-        if not plists:
+        if not plists or (mode == "and" and len(plists) < len(terms)):
             return []
         if mode == "and":
             return _and_topk(plists, k, self.cfg)
@@ -530,8 +485,7 @@ class Index:
             return wand_topk(plists, k, self.cfg)
         raise ValueError(f"unknown mode: {mode}")
 
-    def _structured_search(self, bare, phrases, excluded, k, mode, groups=(),
-                           boosts=None):
+    def _structured_search(self, bare, phrases, excluded, k, mode, groups, boosts):
         """Query-language semantics per mode, minus exclusions; scored by
         BM25 over the positive terms (sorted term order), ties by doc_id.
 
@@ -553,10 +507,6 @@ class Index:
         multiplies that term's contribution (A29 — boosts weight scores,
         never match semantics).
         """
-        from localsearchengine_spark.operators.wand import _contrib_at
-
-        boosts = boosts or {}
-        phrases = [ph if isinstance(ph, tuple) else (ph, 0) for ph in phrases]
         if phrases and not self.conf.store_positions:
             raise ValueError(
                 "phrase query on an index built without positions "
@@ -573,12 +523,9 @@ class Index:
             gap = slop + 1
             if any(t not in post for t in ph):
                 return np.empty(0, dtype=np.int64)
-            members = sorted((post[t] for t in set(ph)), key=lambda p: p.df)
-            ids = members[0].doc_ids if cand is None else cand
-            for p in members[(0 if cand is not None else 1):]:
-                if len(ids) == 0:
-                    return ids
-                ids = ids[_contrib_at(p, ids) > 0.0]
+            ids, _ = _intersect([post[t] for t in sorted(set(ph))], cand)
+            if len(ids) == 0:
+                return ids
             maps = [post[t].positions_for(ids) for t in ph]
             keep = np.zeros(len(ids), dtype=bool)
             for i, did in enumerate(ids):
@@ -610,20 +557,16 @@ class Index:
                 return np.empty(0, dtype=np.int64)
             return np.unique(np.concatenate(sets))
 
+        hit_ids, contribs = None, {}
         if mode == "and":
             if any(t not in post for t in required):
                 return []  # a required term is absent from the corpus
-            cand = [post[t] for t in required]
-            if not cand and groups:
+            if required:
+                ids, contribs = _intersect([post[t] for t in required])
+                hit_ids = ids
+            else:
                 ids = group_ids(min(groups, key=lambda g: sum(
                     post[t].df for t in g if t in post)))
-            else:
-                order = sorted(cand, key=lambda p: p.df)
-                ids = order[0].doc_ids
-                for p in order[1:]:
-                    if len(ids) == 0:
-                        return []
-                    ids = ids[_contrib_at(p, ids) > 0.0]
             for g in groups:
                 if len(ids) == 0:
                     return []
@@ -648,15 +591,11 @@ class Index:
                 ids = ids[~np.isin(ids, p.doc_ids)]
         if len(ids) == 0:
             return []
-        scores = np.zeros(len(ids), dtype=np.float64)
-        for t in positive:  # sorted term order — fixed summation order
-            if t in post:
-                p = post[t]
-                scores += (
-                    boosts.get(t, 1.0)
-                    * p.idf * (self.cfg.k1 + 1.0) * _contrib_at(p, ids)
-                )
-        return _topk(ids, scores, k)
+        if contribs:  # the filters above kept a subset of the intersection
+            at = np.searchsorted(hit_ids, ids)
+            contribs = {t: c[at] for t, c in contribs.items()}
+        plists = [post[t] for t in positive if t in post]
+        return _topk(ids, _exact_scores(plists, ids, self.cfg, contribs, boosts), k)
 
 
 def parse_query(q: str, cfg: BM25Config):
@@ -724,46 +663,38 @@ def _score_at(plists, ids: np.ndarray, cfg: BM25Config) -> np.ndarray:
     return scores
 
 
-def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
-    """A19 — k best by (score desc, doc_id asc); ids are unique."""
-    if len(ids) == 0:
-        return []
-    order = np.lexsort((ids, -scores))[:k]
-    return [(int(ids[i]), float(scores[i])) for i in order]
+def _intersect(plists, ids: np.ndarray | None = None):
+    """A16 — rarest-first conjunctive intersection with block skipping →
+    ``(ids, contribs)``.
 
-
-def _and_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
-    """A16 — rarest-first intersection with block skipping: only the rarest
-    term's list is fully decoded; every other term is probed through the
-    lazy per-block lookup (wand._contrib_at), so blocks of hot terms that
-    contain no candidate are never varint-decoded.  tf ≥ 1 ⇒ tf_norm > 0,
-    so a zero contribution is exactly "doc absent".  Scores are then
-    accumulated in sorted term order (the determinism contract) from the
-    same lookups, giving float64 results bit-identical to the exhaustive
-    path."""
-    from localsearchengine_spark.operators.wand import _contrib_at
-
+    Without ``ids`` the rarest list is fully decoded and seeds the
+    candidates; with ``ids`` every list filters those candidates.  Each
+    other list is probed through the lazy per-block lookup
+    (wand._contrib_at), so blocks of hot terms that hold no candidate are
+    never varint-decoded.  tf ≥ 1 ⇒ tf_norm > 0, so a zero contribution is
+    exactly "doc absent".  ``contribs`` maps each probed term to its
+    tf_norm at the returned ids, for :func:`wand._exact_scores` to reuse."""
     order = sorted(plists, key=lambda p: p.df)
-    ids = order[0].doc_ids
+    if ids is None:
+        ids, order = order[0].doc_ids, order[1:]
     contribs: dict[str, np.ndarray] = {}
-    for p in order[1:]:
+    for p in order:
         if len(ids) == 0:
-            return []
+            break
         c = _contrib_at(p, ids)
         keep = c > 0.0
         ids = ids[keep]
         contribs = {t: v[keep] for t, v in contribs.items()}
         contribs[p.term] = c[keep]
-    if len(ids) == 0:
-        return []
-    scores = np.zeros(len(ids), dtype=np.float64)
-    for p in plists:  # sorted term order — fixed summation order
-        s = p.idf * (cfg.k1 + 1.0)
-        if p.term in contribs:
-            scores += s * contribs[p.term]
-        else:
-            scores += s * _contrib_at(p, ids)
-    return _topk(ids, scores, k)
+    return ids, contribs
+
+
+def _and_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
+    """A16 — conjunctive top-k: :func:`_intersect`, then the exact sum in
+    sorted term order from the same lookups, giving float64 results
+    bit-identical to the exhaustive path."""
+    ids, contribs = _intersect(plists)
+    return _topk(ids, _exact_scores(plists, ids, cfg, contribs), k)
 
 
 def _or_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
@@ -781,23 +712,16 @@ def _dismax_topk(groups, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
     every other path, the per-group max is exact, and groups are summed in
     caller order (callers pass ≤2 groups or accept summation order as part
     of the query contract)."""
-    all_plists = [p for g in groups for p in g]
-    if not all_plists:
+    if not groups:
         return []
-    ids = np.unique(np.concatenate([p.doc_ids for p in all_plists]))
+    ids = np.unique(np.concatenate([p.doc_ids for g in groups for p in g]))
     scores = np.zeros(len(ids), dtype=np.float64)
     for g in groups:  # fixed group order — determinism contract
         gmax = np.zeros(len(ids), dtype=np.float64)
         for p in sorted(g, key=lambda p: p.term):
             if len(p.doc_ids) == 0:
                 continue
-            pos = np.searchsorted(p.doc_ids, ids)
-            pos_c = np.minimum(pos, len(p.doc_ids) - 1)
-            hit = p.doc_ids[pos_c] == ids
-            np.maximum(
-                gmax,
-                np.where(hit, p.idf * (cfg.k1 + 1.0) * p.tf_norm[pos_c], 0.0),
-                out=gmax,
-            )
+            c = p.idf * (cfg.k1 + 1.0) * _lookup(ids, p.doc_ids, p.tf_norm)
+            np.maximum(gmax, c, out=gmax)
         scores += gmax
     return _topk(ids, scores, k)

@@ -33,6 +33,10 @@ top-k member even under score ties (ties break by doc_id, and only docs
 *strictly below* θ are ever pruned).  ε absorbs float summation-order
 effects in the bound sums.
 
+The exact-scoring primitives every driver-local path shares live here
+too: :func:`_contrib_at`, :func:`_exact_scores` (the one sorted-term-order
+sum) and :func:`_topk` (the one top-k cut).
+
 Negative idf (classic RSJ for df > N/2) is handled exactly: such terms'
 upper bounds clamp to 0 (their contribution can only subtract), the θ
 seed is lowered by the sum of their most-negative contributions, and a
@@ -104,10 +108,36 @@ def _contrib_at(p, ids: np.ndarray) -> np.ndarray:
     return out
 
 
+def _exact_scores(plists, ids: np.ndarray, cfg: BM25Config,
+                  contribs: dict | None = None,
+                  boosts: dict | None = None) -> np.ndarray:
+    """Σ_t boost·idf·(k1+1)·tf_norm at ``ids`` over ``plists`` in their
+    (sorted term) order.  ``contribs``: tf_norm at ``ids`` per term, where
+    the caller has it (the AND intersection); ``boosts``: term weights."""
+    contribs = contribs or {}
+    boosts = boosts or {}
+    scores = np.zeros(len(ids), dtype=np.float64)
+    for p in plists:
+        c = contribs.get(p.term)
+        if c is None:
+            c = _contrib_at(p, ids)
+        scores += boosts.get(p.term, 1.0) * p.idf * (cfg.k1 + 1.0) * c
+    return scores
+
+
+def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
+    """A19 — the k best by (score desc, doc_id asc), ``[]`` for k ≤ 0;
+    ids are unique."""
+    if len(ids) == 0 or k <= 0:
+        return []
+    order = np.lexsort((ids, -scores))[:k]
+    return [(int(ids[i]), float(scores[i])) for i in order]
+
+
 def wand_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
     """plists: list[TermPostings] in sorted term order (search.py)."""
     terms = [p for p in plists if p.n_blocks > 0]
-    if not terms or k <= 0:
+    if not terms or k <= 0:  # the θ seed needs k ≥ 1
         return []
     n = len(terms)
     scale = np.asarray([p.idf * (cfg.k1 + 1.0) for p in terms], dtype=np.float64)
@@ -160,11 +190,5 @@ def wand_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
         return []
     cands = np.unique(np.concatenate(cand_parts))
 
-    # exact scoring, accumulated in sorted term order (determinism contract)
-    scores = np.zeros(len(cands), dtype=np.float64)
-    for i, p in enumerate(terms):  # plists arrive term-sorted
-        s = float(scale[i])
-        scores += s * _contrib_at(p, cands)
-
-    top = np.lexsort((cands, -scores))[:k]
-    return [(int(cands[i]), float(scores[i])) for i in top]
+    # exact scoring in sorted term order (plists arrive term-sorted)
+    return _topk(cands, _exact_scores(terms, cands, cfg), k)

@@ -86,6 +86,34 @@ def test_merge_ordered_fast_path(spark, built_index, transcripts_small, tmp_path
     assert spark.read.parquet(os.path.join(out, "docs")).count() == len(pdf)
 
 
+def test_merge_and_compact_record_their_own_stage_walls(spark, tmp_path):
+    """A merged and a compacted meta each record their own stage walls under
+    ``elapsed_s``, total included, rather than a source build's; the merged
+    meta carries no salt rule (a merged index is never resumed)."""
+    from localsearchengine_spark.operators.delete import compact, delete_docs
+    from localsearchengine_spark.utils import read_json
+
+    pa_, pb_, n_a, _ = _split_and_write(make_transcripts(300), str(tmp_path))
+    ia, ib = str(tmp_path / "ia"), str(tmp_path / "ib")
+    build_index(spark, pa_, ia, CONF)
+    build_index(spark, pb_, ib, CONF, doc_id_base=n_a)
+    merged, compacted = str(tmp_path / "merged"), str(tmp_path / "compacted")
+    merge_indexes(spark, [ia, ib], merged)
+    delete_docs(ia, range(0, n_a, 7))
+    compact(spark, ia, compacted)
+    metas = {d: read_json(os.path.join(d, "meta.json")) for d in (ia, merged, compacted)}
+    stages = {
+        merged: {"docs", "postings", "dictionary", "total"},
+        compacted: {"stats", "docs", "postings", "dictionary", "total"},
+    }
+    for d, keys in stages.items():
+        walls = metas[d]["elapsed_s"]
+        assert set(walls) == keys, d
+        assert max(walls.values()) == walls["total"], d
+    assert "stats_hot_scan" in metas[ia]["elapsed_s"]
+    assert not {"hot_salts", "salt_buckets", "merge_elapsed_s"} & set(metas[merged])
+
+
 def test_merge_rejects_overlapping_ranges(spark, built_index, tmp_path):
     """Inputs whose doc_id ranges overlap are refused up front, before the
     output directory exists (no half-linked docs/ left behind)."""

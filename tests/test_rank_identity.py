@@ -39,6 +39,8 @@ def test_golden_queries_and_path(index_and_docs):
         got = index.search(q["terms"], k=q["k"], mode="and")
         exp = oracle_search(docs, q["terms"], k=q["k"], mode="and")
         _assert_match(got, exp, q["terms"], "and")
+        # the query string takes the same path as the term list
+        assert index.search(" ".join(q["terms"]), k=q["k"], mode="and") == got
         n_nonempty += bool(exp)
     assert n_nonempty >= 30  # the query set actually exercises the index
 
@@ -51,6 +53,24 @@ def test_golden_queries_or_and_wand_paths(index_and_docs):
         got_wand = index.search(q["terms"], k=q["k"], mode="wand")
         _assert_match(got_or, exp, q["terms"], "or")
         _assert_match(got_wand, exp, q["terms"], "wand")
+        text = " ".join(q["terms"])
+        assert index.search(text, k=q["k"], mode="or") == got_or
+        assert index.search(text, k=q["k"], mode="wand") == got_wand
+
+
+@pytest.mark.parametrize("mode,as_text", [
+    ("and", False), ("or", False), ("wand", False), ("and", True),
+])
+@pytest.mark.parametrize("k", [0, -1])
+def test_nonpositive_k_returns_nothing(index_and_docs, mode, as_text, k):
+    """k ≤ 0 asks for no hits, on every path: the top-k cut must not read
+    a negative k as "all but the last |k|"."""
+    index, _ = index_and_docs
+    terms = next(q["terms"] for q in golden_queries()
+                 if len(q["terms"]) > 1 and index.search(q["terms"], k=10, mode="and"))
+    query = f"{terms[0]}^2 " + " ".join(terms[1:]) if as_text else terms
+    assert index.search(query, k=10, mode=mode)
+    assert index.search(query, k=k, mode=mode) == []
 
 
 def test_wand_equals_exhaustive_randomized(index_and_docs):

@@ -24,36 +24,24 @@ def _term(name: str, doc_ids: list[int], rng: np.random.Generator, n_docs: int,
     ids = np.asarray(sorted(set(doc_ids)), dtype=np.int64)
     tfs = rng.integers(1, 6, size=len(ids)).astype(np.int64)
     dls = rng.integers(5, 60, size=len(ids)).astype(np.int64)
-    blocks = codec.encode_blocks(
+    la = codec.encode_blocks(
         ids, tfs, dls, [0, len(ids)], block_size=block_size, k1=cfg.k1, b=cfg.b,
         avgdl=AVGDL,
-    ).values
-    # the engine's storage layout: per stream, the blocks' bytes concatenated
-    # into one buffer plus per-block offsets
-    bufs, offs = {}, {}
-    for stream in ("doc", "tf", "dl"):
-        col = blocks.field(f"{stream}_bytes")
-        offs[stream] = codec.binary_offsets(col)
-        bufs[stream] = col.buffers()[2].to_pybytes()
+    )
     return TermPostings(
         term=name,
         idf=cfg.idf(len(ids), n_docs),
         df=len(ids),
         avgdl=AVGDL,
         cfg=cfg,
-        streams=codec.StreamBlocks(blocks.field("n").to_numpy().astype(np.int64), bufs, offs),
-        block_max_doc=blocks.field("max_doc_id").to_numpy(),
-        block_bound_tfn=blocks.field("tf_norm_max").to_numpy(),
+        streams=codec.StreamBlocks.from_rows(la, [0]),
     )
 
 
 def _fresh(p: TermPostings, cfg: BM25Config) -> TermPostings:
     """A new TermPostings over the same streams — its decode cache is empty,
     so the reference path shares no decoded state with the WAND run."""
-    return TermPostings(
-        p.term, p.idf, p.df, AVGDL, cfg, streams=p._streams,
-        block_max_doc=p.block_max_doc, block_bound_tfn=p.block_bound_tfn,
-    )
+    return TermPostings(p.term, p.idf, p.df, AVGDL, cfg, streams=p._streams)
 
 
 @settings(max_examples=60, deadline=None)
