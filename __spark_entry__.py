@@ -41,13 +41,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    from localsearchengine_spark.plans.relational import SPARK_QUERIES
+    from localsearchengine_spark.plans import registry
 
-    return dict(SPARK_QUERIES)
+    return registry.queries()
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable oracle SQL per queries() key (omitted → rows-only)."""
-    from localsearchengine_spark.plans.relational import ORACLE_SQL
+    from localsearchengine_spark.plans import registry
 
-    return dict(ORACLE_SQL)
+    return registry.oracle_sql()

@@ -90,35 +90,31 @@ class TermPostings:
         """→ (doc_ids, tf_norm) of block ``i`` (cached)."""
         hit = self._block_cache.get(i)
         if hit is None:
-            ids, tfs, dls = self._streams.decode_block(i)
-            ids, tfs, dls = self._mask_deleted(ids, tfs, dls)
+            ids, tfs, dls, _ = self._mask_deleted(*self._streams.decode_block(i))
             hit = (ids, tf_norm_np(tfs, dls, self._avgdl, self._cfg))
             self._block_cache[i] = hit
         return hit
 
     def _mask_deleted(self, ids, tfs, dls):
+        """Drop tombstoned docIDs → (ids, tfs, dls, live); ``live`` is the
+        boolean mask applied, None when no docID was dropped."""
         if self._ts is None:
-            return ids, tfs, dls
+            return ids, tfs, dls, None
         live = ~_isin_sorted(ids, self._ts)
         if live.all():
-            return ids, tfs, dls
-        return ids[live], tfs[live], dls[live]
+            return ids, tfs, dls, None
+        return ids[live], tfs[live], dls[live], live
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
         if self._full is None:
-            ids, tfs, dls = self._streams.decode_all()
-            if self._ts is not None and len(ids):
-                live = ~_isin_sorted(ids, self._ts)
-                # per-block LIVE counts: consumers gathering block membership
-                # out of the full decode (wand's fast path) must align with
-                # the masked array, not the as-built block sizes
+            ids, tfs, dls, live = self._mask_deleted(*self._streams.decode_all())
+            # per-block LIVE counts: consumers gathering block membership
+            # out of the full decode (wand's fast path) must align with
+            # the masked array, not the as-built block sizes
+            self._live_counts = self.block_counts
+            if live is not None:
                 cuts = np.concatenate(([0], np.cumsum(self.block_counts)[:-1]))
-                self._live_counts = np.add.reduceat(
-                    live.astype(np.int64), cuts
-                )
-                ids, tfs, dls = ids[live], tfs[live], dls[live]
-            else:
-                self._live_counts = self.block_counts
+                self._live_counts = np.add.reduceat(live.astype(np.int64), cuts)
             self._full = (ids, tf_norm_np(tfs, dls, self._avgdl, self._cfg))
         return self._full
 

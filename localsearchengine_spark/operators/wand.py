@@ -86,19 +86,24 @@ def _lookup(ids: np.ndarray, bids: np.ndarray, btfn: np.ndarray) -> np.ndarray:
     return np.where(hit, btfn[pos_c], 0.0)
 
 
+def _decode_whole_list(p, n_touched: int) -> bool:
+    """True when a query touches enough of ``p``'s blocks (hot terms, low
+    selectivity) that one full decode plus one vectorized gather beats a
+    Python loop over the touched 128-entry blocks."""
+    return n_touched > max(8, p.n_blocks // 4)
+
+
 def _contrib_at(p, ids: np.ndarray) -> np.ndarray:
     """tf_norm of term ``p`` at each docID in ``ids`` (0.0 when absent),
-    decoding only the blocks the candidates fall into.  When candidates
-    touch most blocks anyway (hot terms, low selectivity) the per-block
-    loop costs more than it saves — decode the whole list once and do a
-    single vectorized lookup instead."""
+    decoding only the blocks the candidates fall into, or the whole list
+    once when they touch most of it."""
     out = np.zeros(len(ids), dtype=np.float64)
     if p.n_blocks == 0 or len(ids) == 0:
         return out
     bi = np.searchsorted(p.block_max_doc, ids, side="left")
     inside = bi < p.n_blocks
     needed = np.unique(bi[inside])
-    if len(needed) > max(8, p.n_blocks // 4):
+    if _decode_whole_list(p, len(needed)):
         bids, btfn = p.decode_all()
         return _lookup(ids, bids, btfn)
     for b in needed:
@@ -177,9 +182,7 @@ def wand_topk(plists, k: int, cfg: BM25Config) -> list[tuple[int, float]]:
         others = total - float(tmax[i])
         keep = np.maximum(scale[i] * p.block_bound_tfn, 0.0) + others > theta - _EPS
         kept = np.flatnonzero(keep)
-        if len(kept) > max(8, p.n_blocks // 4):
-            # low selectivity: one full decode + one boolean gather beats
-            # a Python loop over hundreds of 128-entry blocks
+        if _decode_whole_list(p, len(kept)):
             ids_all, _ = p.decode_all()
             cand_parts.append(ids_all[np.repeat(keep, p.block_counts_live)])
         else:

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from localsearchengine_spark.plans.relational import _t, q
+from localsearchengine_spark.plans.registry import _t, q
 from localsearchengine_spark.plans.splits import SPLIT_BUCKETS, SPLIT_TEST, SPLIT_VAL
 
 _PP_MIN_TOK, _PP_MAX_TOK = 5, 1000

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from localsearchengine_spark.plans.relational import _t, q
+from localsearchengine_spark.plans.registry import _t, q
 
 _SPAN_W = 8  # duplicated-span width (tokens)
 

@@ -1,10 +1,8 @@
 """Deterministic train/val/test split constants, shared by samp03
 (plans/training_data.py) and tr03 (plans/transcripts.py).
 
-Kept in a dependency-free module: the plans modules import each other
-through the relational registration hub, and a worker process that enters
-the package via ``training_data`` would otherwise hit a circular import
-when relational's tail imports ``transcripts`` mid-initialization.
+Kept in a dependency-free module so neither row module has to import
+the other.
 
 Split = md5 bucket of the key in [0, SPLIT_BUCKETS): train [0, SPLIT_VAL),
 val [SPLIT_VAL, SPLIT_TEST), test [SPLIT_TEST, SPLIT_BUCKETS) — a pure

@@ -31,7 +31,7 @@ import time
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from localsearchengine_spark.plans.relational import q
+from localsearchengine_spark.plans.registry import q
 from localsearchengine_spark.streaming.analytics import (
     run_available_now,
     stateful_user_sessions,

@@ -4,7 +4,7 @@ embedding-cosine), similarity search (LSH-bucketed ANN), text analysis
 (language-ID, fingerprinting), and multimodal column plumbing.
 
 Every operator is registered with the same @q decorator as the relational
-surface (plans/relational.py) so the driver checks it against a DuckDB
+surface (plans/registry.py) so the driver checks it against a DuckDB
 oracle.  Portability contract for oracles: the only hash both engines share
 is md5 — 60-bit / 32-bit integer views of it are taken with
 Spark ``conv(substring(md5(x),1,k),16,10)`` ≡ DuckDB
@@ -21,7 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from localsearchengine_spark.plans.relational import SPARK_QUERIES, _t, q
+from localsearchengine_spark.plans.registry import _t, q
 
 # ---------------------------------------------------------------------------
 # shared shingle helpers (word 3-grams over the space-split token stream)

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from localsearchengine_spark.plans.relational import _t, q
+from localsearchengine_spark.plans.registry import _t, q
 
 _TURNS_PER_CONV = 5
 _TS_BASE = "2025-01-01 00:00:00"

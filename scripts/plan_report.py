@@ -72,7 +72,9 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from localsearchengine_spark.plans.relational import SPARK_QUERIES
+    from localsearchengine_spark.plans.registry import queries
+
+    rows = queries()
 
     out = [
         "# PLANS — physical-plan evidence for the headline operators",
@@ -85,7 +87,7 @@ def main() -> None:
         "",
     ]
     for name, prop in CASES:
-        df = SPARK_QUERIES[name](spark, SF_DIR)
+        df = rows[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), "formatted"
         )

@@ -5,8 +5,21 @@ pin it."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
 import __spark_entry__ as E
-from localsearchengine_spark.plans.relational import _DRIVER_CHECK_PRIORITY
+from localsearchengine_spark.plans import registry
+from localsearchengine_spark.plans.registry import _DRIVER_CHECK_PRIORITY
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS = os.path.join(REPO, "localsearchengine_spark", "plans")
 
 
 def test_window_is_exactly_the_priority_list():
@@ -52,3 +65,49 @@ def test_rows_past_the_window_are_replica_covered():
     qs, osql = E.queries(), E.oracle_sql()
     rows_only = {n for n in qs if n not in osql}
     assert rows_only == {"approx01_count_distinct"}
+
+
+def _order_in_fresh_interpreter(first_import: str) -> list[str]:
+    code = (
+        f"import {first_import}\n"
+        "import json, __spark_entry__ as E\n"
+        "print(json.dumps(list(E.queries())))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+@pytest.fixture(scope="module")
+def entry_first_order() -> list[str]:
+    return _order_in_fresh_interpreter("__spark_entry__")
+
+
+@pytest.mark.parametrize("module", registry.ROW_MODULES)
+def test_order_does_not_depend_on_import_order(module, entry_first_order):
+    """Importing any row module before __spark_entry__ leaves the whole
+    queries() order, the driver window included, unchanged."""
+    order = _order_in_fresh_interpreter(f"localsearchengine_spark.plans.{module}")
+    assert order == entry_first_order
+    assert order[:50] == _DRIVER_CHECK_PRIORITY
+
+
+def test_no_import_cycle_through_the_registry():
+    """No plan module imports relational, and registry imports no row
+    module at module level — the two edges the old cycle ran through."""
+    for path in glob.glob(os.path.join(PLANS, "*.py")):
+        src = open(path).read()
+        assert "plans.relational" not in src, path
+        assert "plans import relational" not in src, path
+    tree = ast.parse(open(os.path.join(PLANS, "registry.py")).read())
+    for node in tree.body:
+        if isinstance(node, ast.ImportFrom):
+            names = [node.module or ""] + [a.name for a in node.names]
+        elif isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        else:
+            continue
+        for name in names:
+            assert name.rsplit(".", 1)[-1] not in registry.ROW_MODULES, name

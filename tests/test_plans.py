@@ -14,7 +14,9 @@ import re
 
 from pyspark.sql import functions as F
 
-from localsearchengine_spark.plans.relational import SPARK_QUERIES
+from localsearchengine_spark.plans.registry import queries
+
+SPARK_QUERIES = queries()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 

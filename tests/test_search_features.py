@@ -315,7 +315,7 @@ def test_dismax_overlapping_groups_engine_matches_oracle(spark):
 
     from localsearchengine_spark.operators.search import Index
     from localsearchengine_spark.plans.entry_helpers import ensure_documents_index
-    from localsearchengine_spark.plans.relational import _dismax_sql
+    from localsearchengine_spark.plans.fts import _dismax_sql
 
     sf = "/root/testdata/sf0.001"
     groups = [["join", "merge"], ["merge", "scan"]]  # 'merge' overlaps
